@@ -85,15 +85,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // See Verify.scala: events.ts is parquet TIMESTAMP(NANOS).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b — local iteration on a subset (never
     // set by the driver; its run times the headline set).
     val benched: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =

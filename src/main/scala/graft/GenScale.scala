@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Local scale-rehearsal generator (VERDICT r3 #7): builds an sf1-shaped
@@ -48,15 +48,7 @@ object GenScale {
     val dst = if (args.length > 1) args(1) else "target/testdata/sf1"
     val mult = if (args.length > 2) args(2).toInt else 10
     val skew = args.length > 3 && args(3) == "skew"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("32")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
 

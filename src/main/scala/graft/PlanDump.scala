@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round evidence tool: dump `.explain("formatted")` for named
@@ -23,14 +22,7 @@ object PlanDump {
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
     val names = args.drop(3).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     Files.createDirectories(Paths.get(outDir))
     import org.apache.spark.sql.functions._
     names.foreach { n =>

@@ -31,8 +31,8 @@ object Tables {
     * The driver has shipped this column under two physical encodings:
     *   - parquet TIMESTAMP(NANOS,false) (rounds 1-6): Spark 4 has no ns
     *     timestamp type and refuses the column ([PARQUET_TYPE_ILLEGAL]) unless
-    *     `spark.sql.legacy.parquet.nanosAsLong=true` (set in Verify/Bench/test
-    *     sessions), which reads raw long nanos; `timestamp_micros(ts div 1000)`
+    *     `spark.sql.legacy.parquet.nanosAsLong=true` (set by
+    *     GraftSession.build), which reads raw long nanos; `timestamp_micros(ts div 1000)`
     *     truncates exactly like DuckDB's ns→µs read of the same file (rule D2).
     *   - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) (round-7 regen):
     *     loads as TIMESTAMP_NTZ, which breaks `unix_micros`/TZ-typed ops
@@ -40,7 +40,6 @@ object Tables {
     *     preserves the wall-clock value bit-for-bit and restores the exact
     *     column type (and oracle hashes) of the nanos era. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     import org.apache.spark.sql.functions._
     raw.schema("ts").dataType match {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,7 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS), which Spark 4 refuses to read
-      // as a timestamp ([PARQUET_TYPE_ILLEGAL]); read it as long nanos and
-      // convert to µs in Tables.events (matches DuckDB's ns→µs truncation).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Write timestamps as INT64 micros (not INT96) so the driver-side
-      // DuckDB/pyarrow compare sees the same type it computes.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // graft-native functions (FloatDot) via the public extension point
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.isEmpty || only(name))

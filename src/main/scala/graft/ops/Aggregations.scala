@@ -655,19 +655,13 @@ object Aggregations extends OpModule {
     // DistinctToBitmapSpec asserts the bitmap shape is actually in the
     // optimized plan and pins default-off / mixed-aggregate no-ops.
     "q_agg_distinct_auto" -> ((s, d) => {
-      val flag = "spark.graft.rewrite.distinctBitmap"
-      val prev = s.conf.getOption(flag)
-      s.conf.set(flag, "true")
-      try {
+      graft.GraftSession.withConf(s)("spark.graft.rewrite.distinctBitmap" -> "true") {
         val res = Tables.events(s, d)
           .groupBy(col("event_type"))
           .agg(countDistinct(col("user_id")).as("n_users"))
           .orderBy(col("event_type"))
         s.createDataFrame(
           java.util.Arrays.asList(res.collect(): _*), res.schema)
-      } finally prev match {
-        case Some(v) => s.conf.set(flag, v)
-        case None => s.conf.unset(flag)
       }
     }),
   )

@@ -664,29 +664,27 @@ object IndexOps extends OpModule {
       fsys.delete(new org.apache.hadoop.fs.Path(idx), true)
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val maxId = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-      val (nDocs, nShards) = graft.sources.Sources.withGraftCatalog(s) {
-        graft.sources.Sources.withStorePath(s, corpus) {
-          s.sql("ALTER TABLE graft.store ADD COLUMN text STRING")
-          docs.select(col("doc_id").as("k"), lit("d").as("grp"),
-              lit(0L).as("amt_cents"), col("text"))
-            .repartitionByRange(4, col("k"))
-            .write.format("graft.sources.StoreSink").mode("append")
-            .option("path", corpus).save()
-          // 64-shard build (round-12 verdict #2): the shard count is a
-          // build property now — refresh bytes track the delta's touched
-          // shards out of 64, not a whole-store rewrite; results are
-          // shard-count-invariant, so the oracle is unchanged
-          s.sql(s"CALL graft.text_index_build('$corpus', '$idx', 64)").collect()
-          // CDC: a doc-id range retires; fresh docs (known text) append
-          s.sql("DELETE FROM graft.store WHERE k BETWEEN 10 AND 99")
-          docs.where(col("doc_id").between(1, 50))
-            .select((col("doc_id") + maxId).as("k"), lit("d").as("grp"),
-              lit(0L).as("amt_cents"), col("text"))
-            .write.format("graft.sources.StoreSink").mode("append")
-            .option("path", corpus).save()
-          val r = s.sql(s"CALL graft.text_index_refresh('$idx')").collect()(0)
-          (r.getLong(0), r.getLong(1))
-        }
+      val (nDocs, nShards) = graft.sources.Sources.withStorePath(s, corpus) {
+        s.sql("ALTER TABLE graft.store ADD COLUMN text STRING")
+        docs.select(col("doc_id").as("k"), lit("d").as("grp"),
+            lit(0L).as("amt_cents"), col("text"))
+          .repartitionByRange(4, col("k"))
+          .write.format("graft.sources.StoreSink").mode("append")
+          .option("path", corpus).save()
+        // 64-shard build (round-12 verdict #2): the shard count is a
+        // build property now — refresh bytes track the delta's touched
+        // shards out of 64, not a whole-store rewrite; results are
+        // shard-count-invariant, so the oracle is unchanged
+        s.sql(s"CALL graft.text_index_build('$corpus', '$idx', 64)").collect()
+        // CDC: a doc-id range retires; fresh docs (known text) append
+        s.sql("DELETE FROM graft.store WHERE k BETWEEN 10 AND 99")
+        docs.where(col("doc_id").between(1, 50))
+          .select((col("doc_id") + maxId).as("k"), lit("d").as("grp"),
+            lit(0L).as("amt_cents"), col("text"))
+          .write.format("graft.sources.StoreSink").mode("append")
+          .option("path", corpus).save()
+        val r = s.sql(s"CALL graft.text_index_refresh('$idx')").collect()(0)
+        (r.getLong(0), r.getLong(1))
       }
       val top = ti.probeTop(s, idx, topk = 10)
         .select(col("doc_id"), col("n_terms"), col("bm25_e4"))
@@ -716,7 +714,7 @@ object IndexOps extends OpModule {
     // again (z_pruned). A second call folds nothing and KEEPS. The
     // oracle replays the head-corpus top-k closed form (the mega-doc
     // reproduced via TRIM(REPEAT(...))) plus the three decision flags.
-    "q_text_index_policy" -> ((s, d) => graft.sources.Sources.withGraftCatalog(s) {
+    "q_text_index_policy" -> ((s, d) => {
       val ti = graft.sources.TextIndex
       val corpus = tmpIdx(d, "tipcorpus")
       val idx = tmpIdx(d, "tipidx")
@@ -773,7 +771,7 @@ object IndexOps extends OpModule {
     // pin that the serving path survived the whole lifecycle. At 100 TB
     // this is the fleet scheduler's entire contract: paths in, healthy
     // tables AND indexes out, zero per-artifact arguments.
-    "q_store_maintain_index" -> ((s, d) => graft.sources.Sources.withGraftCatalog(s) {
+    "q_store_maintain_index" -> ((s, d) => {
       val annCorpus = tmpIdx(d, "mntacorpus")
       val aidx = tmpIdx(d, "mntaidx")
       val txtCorpus = tmpIdx(d, "mnttcorpus")
@@ -847,7 +845,7 @@ object IndexOps extends OpModule {
     // rewritten in both token tables), second tick is a no-op, and the
     // post-maintenance PLAID probe still serves. The fleet-scheduler
     // contract extended to the multi-vector artifact.
-    "q_store_maintain_maxsim" -> ((s, d) => graft.sources.Sources.withGraftCatalog(s) {
+    "q_store_maintain_maxsim" -> ((s, d) => {
       val corpus = tmpIdx(d, "mntmscorpus")
       val idx = tmpIdx(d, "mntmsidx")
       val fsys = org.apache.hadoop.fs.FileSystem.get(
@@ -900,7 +898,7 @@ object IndexOps extends OpModule {
     // corpus), trips the 1.5× threshold, and RE-SEEDS atomically via
     // the generation pointer. A second tick at a huge threshold KEEPS,
     // and the post-policy probe still serves.
-    "q_maxsim_policy" -> ((s, d) => graft.sources.Sources.withGraftCatalog(s) {
+    "q_maxsim_policy" -> ((s, d) => {
       val corpus = tmpIdx(d, "mspolcorpus")
       val idx = tmpIdx(d, "mspolidx")
       val fsys = org.apache.hadoop.fs.FileSystem.get(
@@ -953,7 +951,7 @@ object IndexOps extends OpModule {
     // ages past the margin does it collect (dropped_aged = 1) — while
     // the live generation keeps serving (probe_rows is the corpus-
     // derived 5 × |queries|).
-    "q_index_expire" -> ((s, d) => graft.sources.Sources.withGraftCatalog(s) {
+    "q_index_expire" -> ((s, d) => {
       val idx = tmpIdx(d, "expire")
       val fsys = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
@@ -1025,7 +1023,7 @@ object IndexOps extends OpModule {
     // oracle replays (train on base, assign/encode head). Without the
     // fold this probe would silently ADC-rank dead vectors; with a
     // version mismatch probePq now refuses instead (spec-pinned).
-    "q_sim_ivfpq_refresh" -> ((s, d) => graft.sources.Sources.withGraftCatalog(s) {
+    "q_sim_ivfpq_refresh" -> ((s, d) => {
       val corpus = tmpIdx(d, "pqrefcorpus")
       val idx = tmpIdx(d, "pqrefidx")
       val fsys = org.apache.hadoop.fs.FileSystem.get(
@@ -1156,7 +1154,7 @@ object IndexOps extends OpModule {
     // what the oracle replays (seeds from the indexed base, assignment
     // + kernel over the head). Without the fold the probe would rank
     // dead tokens and miss the new docs.
-    "q_sim_maxsim_refresh" -> ((s, d) => graft.sources.Sources.withGraftCatalog(s) {
+    "q_sim_maxsim_refresh" -> ((s, d) => {
       val corpus = tmpIdx(d, "msrefcorpus")
       val idx = tmpIdx(d, "msrefidx")
       val fsys = org.apache.hadoop.fs.FileSystem.get(
@@ -1211,7 +1209,7 @@ object IndexOps extends OpModule {
     // INPUT (skew under the frozen codebook), the ACTION, and the
     // post-decision occupancy (retrained cells + their skew, back near
     // uniform) — all from one DuckDB replay of both assignment passes.
-    "q_index_policy" -> ((s, d) => graft.sources.Sources.withGraftCatalog(s) {
+    "q_index_policy" -> ((s, d) => {
       val corpus = tmpIdx(d, "polcorpus")
       val idx = tmpIdx(d, "polidx")
       val fsys = org.apache.hadoop.fs.FileSystem.get(

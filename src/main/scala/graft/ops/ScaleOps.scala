@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.GraftSession.withConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,10 +26,10 @@ object ScaleOps extends OpModule {
 
   private val SALT = 8
 
-  /** Runtime-filter confs + the prior values to restore. The 10 GB
+  /** Runtime-filter confs, scoped with `withConf`. The 10 GB
     * application-side threshold exists to keep the bloom build from taxing
     * small joins; at harness scale it must be lowered or nothing injects. */
-  private val rfConfs = Map(
+  private[graft] val rfConfs = Seq(
     "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
     // injection only fires for PROBABLE SHUFFLE joins: at 100 TB the
@@ -52,15 +53,6 @@ object ScaleOps extends OpModule {
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"), Det.moneySum(col("l_extendedprice")).as("cents"))
       .orderBy(col("l_returnflag"))
-  }
-
-  private[graft] def withRuntimeFilterConfs[T](s: SparkSession)(body: => T): T = {
-    val prev = rfConfs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    rfConfs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
   }
 
   /** sfDirs whose bucketed store tables were already written by THIS JVM.
@@ -204,7 +196,7 @@ object ScaleOps extends OpModule {
     // frame so the conf scope can't leak into other queries' plans;
     // PlanAuditSpec asserts the bloom actually lands in the plan.
     "q_runtime_filter" -> ((s, d) =>
-      withRuntimeFilterConfs(s) {
+      withConf(s)(rfConfs: _*) {
         val res = runtimeFilterJoin(s, d)
         s.createDataFrame(
           java.util.Arrays.asList(res.collect(): _*), res.schema)

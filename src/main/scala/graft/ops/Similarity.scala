@@ -26,8 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity extends OpModule {
 
-  /** (vec_id, side, sub): the two 32-dim halves of every vector — the PQ
-    * sub-space split shared by q_sim_pq and q_sim_ivfpq. */
   /** Split each vector into its two PQ subspaces (one row per side).
     * `carry` names extra `df` columns (functionally dependent on vec_id —
     * e.g. an index build's filter attribute) to ride through the explode,

@@ -185,10 +185,7 @@ object Subqueries extends OpModule {
     // the SAME fixed point relationally (DuckDB has no scripting). The
     // scripting conf is scoped and restored (the conf-scoped-query rule).
     "q_sql_script" -> ((s, d) => {
-      val key = "spark.sql.scripting.enabled"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      try {
+      graft.GraftSession.withConf(s)("spark.sql.scripting.enabled" -> "true") {
         Tables.orders(s, d).createOrReplaceTempView("ord_script_v")
         val res = s.sql("""
           |BEGIN
@@ -220,9 +217,6 @@ object Subqueries extends OpModule {
           |  END IF;
           |END""".stripMargin)
         s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
-      } finally prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
       }
     }),
   )

@@ -267,16 +267,10 @@ object TimeSeries extends OpModule {
     // a correctness bug; PlanAuditSpec asserts the rewrite actually fired
     // (Generate/explode in the optimized plan, (key, bucket) equi join).
     "q_join_range_auto" -> ((s, d) => {
-      val flag = "spark.graft.rewrite.intervalJoin"
-      val prev = s.conf.getOption(flag)
-      s.conf.set(flag, "true")
-      try {
+      graft.GraftSession.withConf(s)("spark.graft.rewrite.intervalJoin" -> "true") {
         val res = queries("q_join_range")(s, d)
         s.createDataFrame(
           java.util.Arrays.asList(res.collect(): _*), res.schema)
-      } finally prev match {
-        case Some(v) => s.conf.set(flag, v)
-        case None => s.conf.unset(flag)
       }
     }),
 

@@ -517,36 +517,35 @@ object TrainingOps extends OpModule {
     // 100 TB the vocabulary is KB-sized metadata while retraining is a
     // corpus scan. Shares q_bpe_apply's oracle verbatim: the round-trip
     // through disk must lose nothing.
-    "q_bpe_apply_indexed" -> ((s, d) =>
-      graft.sources.Sources.withGraftCatalog(s) {
-        val art = s"target/tmp/idx_bpevocab_${java.lang.Integer.toHexString(d.hashCode)}"
-        val fsys = org.apache.hadoop.fs.FileSystem.get(
-          s.sparkContext.hadoopConfiguration)
-        fsys.delete(new org.apache.hadoop.fs.Path(art), true)
-        val (words, _) = bpeTrain(s, d)
-        graft.sources.Sources.withStorePath(s, art) {
-          s.sql("ALTER TABLE graft.store ADD COLUMN w STRING")
-          words.select(
-              row_number().over(Window.orderBy(col("w"))).cast("long").as("k"),
-              lit("v").as("grp"),
-              size(split(col("s"), " ")).cast("long").as("amt_cents"),
-              col("w"))
-            .write.format("graft.sources.StoreSink").mode("append")
-            .option("path", art).save()
-        }
-        val vocab = s.read.format("graft.sources.StoreSink")
-          .option("path", art).load()
-          .select(col("w"), col("amt_cents").as("n_sym"))
-        Tables.documents(s, d)
-          .select(col("doc_id"),
-                  explode(split(trim(lower(col("text"))), " ")).as("w"))
-          .where(col("w") =!= "")
-          .join(broadcast(vocab), "w")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_words"), sum(col("n_sym")).as("n_tokens"))
-          .withColumn("tpw_e4", expr("n_tokens * 10000L div n_words"))
-          .orderBy(col("doc_id"))
-      }),
+    "q_bpe_apply_indexed" -> ((s, d) => {
+      val art = s"target/tmp/idx_bpevocab_${java.lang.Integer.toHexString(d.hashCode)}"
+      val fsys = org.apache.hadoop.fs.FileSystem.get(
+        s.sparkContext.hadoopConfiguration)
+      fsys.delete(new org.apache.hadoop.fs.Path(art), true)
+      val (words, _) = bpeTrain(s, d)
+      graft.sources.Sources.withStorePath(s, art) {
+        s.sql("ALTER TABLE graft.store ADD COLUMN w STRING")
+        words.select(
+            row_number().over(Window.orderBy(col("w"))).cast("long").as("k"),
+            lit("v").as("grp"),
+            size(split(col("s"), " ")).cast("long").as("amt_cents"),
+            col("w"))
+          .write.format("graft.sources.StoreSink").mode("append")
+          .option("path", art).save()
+      }
+      val vocab = s.read.format("graft.sources.StoreSink")
+        .option("path", art).load()
+        .select(col("w"), col("amt_cents").as("n_sym"))
+      Tables.documents(s, d)
+        .select(col("doc_id"),
+                explode(split(trim(lower(col("text"))), " ")).as("w"))
+        .where(col("w") =!= "")
+        .join(broadcast(vocab), "w")
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_words"), sum(col("n_sym")).as("n_tokens"))
+        .withColumn("tpw_e4", expr("n_tokens * 10000L div n_words"))
+        .orderBy(col("doc_id"))
+    }),
 
     // TOKEN-BUDGET APPORTIONMENT (largest-remainder / Hamilton method):
     // split a 1e6-token training budget across languages proportionally

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Tables
+import graft.GraftSession.withConf
 import graft.ops.OpModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,31 +30,9 @@ object Sources extends OpModule {
   private[graft] def tmp(d: String, name: String) =
     s"target/tmp/src_${name}_${java.lang.Integer.toHexString(d.hashCode)}"
 
-  /** Register the graft catalog for `body`, restoring the conf after (the
-    * conf-scoped-query rule). Safe to restore eagerly: CatalogManager caches
-    * the plugin instance under its name at first resolution, so the already-
-    * analyzed plan (and any later `graft.*` query) keeps resolving while the
-    * session conf stays clean for sibling queries. */
-  private[graft] def withGraftCatalog[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.catalog.graft"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "graft.sources.GraftCatalog")
-    try body finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None    => s.conf.unset(key)
-    }
-  }
-
   /** Point `graft.store` at `path` for `body`, restoring after. */
-  private[graft] def withStorePath[T](s: SparkSession, path: String)(body: => T): T = {
-    val key = GraftCatalog.StorePathKey
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, path)
-    try body finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None    => s.conf.unset(key)
-    }
-  }
+  private[graft] def withStorePath[T](s: SparkSession, path: String)(body: => T): T =
+    withConf(s)(GraftCatalog.StorePathKey -> path)(body)
 
   /** Seed a fresh graft-store at `path` from orders; returns (base frame,
     * max key) — shared by the q_store_* row-level family. */
@@ -296,19 +275,16 @@ object Sources extends OpModule {
       val path = tmp(d, "dynpart")
       val base = Tables.orders(s, d).withColumn("yr", year(col("o_orderdate")))
       base.write.mode("overwrite").partitionBy("yr").parquet(path)
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.get(key)
-      s.conf.set(key, "dynamic")
-      try
-        // halve in INTEGER cents (cents div 2, exact), then rebase to the
-        // double column: o_totalprice / 2 directly would land odd cents on
-        // exact .5 boundaries, betting the gate on two engines' double
-        // tie-rounding agreeing (the D1 float rule this repo bans)
-        base.where(col("yr") === 1997)
-          .withColumn("o_totalprice",
-            expr("cast(round(o_totalprice * 100) as bigint) div 2") / 100.0)
-          .write.mode("overwrite").partitionBy("yr").parquet(path)
-      finally s.conf.set(key, prev)
+      // halve in INTEGER cents (cents div 2, exact), then rebase to the
+      // double column: o_totalprice / 2 directly would land odd cents on
+      // exact .5 boundaries, betting the gate on two engines' double
+      // tie-rounding agreeing (the D1 float rule this repo bans). The
+      // writer option takes precedence over the session conf.
+      base.where(col("yr") === 1997)
+        .withColumn("o_totalprice",
+          expr("cast(round(o_totalprice * 100) as bigint) div 2") / 100.0)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("yr").parquet(path)
       s.read.parquet(path)
         .groupBy(col("yr"))
         .agg(count(lit(1)).as("n"),
@@ -548,7 +524,7 @@ object Sources extends OpModule {
     // along: GraftCatalogSpec asserts the filter still narrows the scan
     // bounds and the storage-partitioned join still plans exchange-free
     // THROUGH the SQL/catalog path. Oracle re-derives from the closed forms.
-    "src_catalog" -> ((s, d) => withGraftCatalog(s) {
+    "src_catalog" -> ((s, d) => {
       s.sql("""SELECT tag, COUNT(*) AS n,
               |  CAST(SUM(CAST(ROUND(val * 100) AS BIGINT)) AS BIGINT) AS val_cents
               |FROM graft.range_200k
@@ -562,7 +538,7 @@ object Sources extends OpModule {
     // session UDF registration. The ScalarFunction's static magic method
     // rides whole-stage codegen (GraftCatalogSpec pins resolution, arity
     // rejection, and equality with the closed form).
-    "q_catalog_fn" -> ((s, d) => withGraftCatalog(s) {
+    "q_catalog_fn" -> ((s, d) => {
       s.sql("""SELECT tag, COUNT(*) AS n,
               |  CAST(SUM(graft.amt(id)) AS BIGINT) AS amt_sum
               |FROM graft.range_200k
@@ -578,7 +554,7 @@ object Sources extends OpModule {
     // the bucket domain plans ZERO partitions. Flags pin all three; the
     // partitioning report shrinks with the plan (KeyGroupedPartitioning
     // must match planned partitions exactly).
-    "src_dsv2_v2filter" -> ((s, d) => withGraftCatalog(s) {
+    "src_dsv2_v2filter" -> ((s, d) => {
       graft.sources.BucketSource.lastBucketPlan = None
       val df = s.sql("""SELECT grp, COUNT(*) AS n, CAST(SUM(amt) AS BIGINT) AS amt_sum
                        |FROM graft.bucket_fact WHERE grp IN ('g2', 'g5')
@@ -615,7 +591,7 @@ object Sources extends OpModule {
     // the checksum is INVARIANT under store compaction (a content-
     // preserving rewrite validated in one aggregate pass — how a
     // production migration checks a rewrite without a row diff).
-    "q_catalog_agg_fn" -> ((s, d) => withGraftCatalog(s) {
+    "q_catalog_agg_fn" -> ((s, d) => {
       val path = tmp(d, "catagg")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -656,14 +632,11 @@ object Sources extends OpModule {
     // resolution. Flags pin: listing sees exactly the created namespace,
     // its table listing, property round-trip through ALTER NAMESPACE,
     // RESTRICT refusing to drop a non-empty namespace, and the final drop.
-    "q_catalog_ns" -> ((s, d) => withGraftCatalog(s) {
+    "q_catalog_ns" -> ((s, d) => {
       val dir = tmp(d, "catns")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-      val key = GraftCatalog.CtasDirKey
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, dir)
-      try {
+      withConf(s)(GraftCatalog.CtasDirKey -> dir) {
         s.sql("CREATE NAMESPACE graft.raw")
         s.sql("ALTER NAMESPACE graft.raw SET DBPROPERTIES ('team'='etl')")
         Tables.orders(s, d).createOrReplaceTempView("ord_ns_v")
@@ -700,9 +673,6 @@ object Sources extends OpModule {
           StructField("sum_cents", LongType)))
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
-      } finally prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
       }
     }),
 
@@ -717,17 +687,11 @@ object Sources extends OpModule {
     // q_join_bucketed: at 100 TB this deletes both full-table shuffles from
     // every join that shares the store's partitioning.
     "q_join_spj" -> ((s, d) => {
-      val confs = Map(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      withConf(s)(
+          "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val res = spjJoin(s)
         s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
       }
     }),
 
@@ -867,10 +831,7 @@ object Sources extends OpModule {
     // decline into ordinary Spark joins (spec-pinned). The conf is scoped
     // and the result materializes inside it (the conf-scoped-query rule).
     "q_join_pushdown" -> ((s, d) => {
-      val key = "spark.sql.optimizer.datasourceV2JoinPushdown"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      try {
+      withConf(s)("spark.sql.optimizer.datasourceV2JoinPushdown" -> "true") {
         val a = s.read.format("graft.sources.RangeSource")
           .option("start", "0").option("end", "60000").load()
         val b = s.read.format("graft.sources.RangeSource")
@@ -891,8 +852,6 @@ object Sources extends OpModule {
           plan.contains("pushedJoin=id-intersect")
         val out = res.withColumn("z_fused", lit(if (fused) 1L else 0L))
         s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
-      } finally prev match {
-        case Some(p) => s.conf.set(key, p); case None => s.conf.unset(key)
       }
     }),
 
@@ -904,7 +863,7 @@ object Sources extends OpModule {
     // the deleted predicate — the GDPR/retention delete every keyed store
     // needs. StoreSinkSpec pins abort-atomicity and the untouched-file
     // carry-over the happy path can't show.
-    "q_store_delete" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_delete" -> ((s, d) => {
       val path = tmp(d, "storedel")
       seedStore(s, d, path)
       withStorePath(s, path) {
@@ -923,7 +882,7 @@ object Sources extends OpModule {
     // states and both strategy flags share one oracle. At 100 TB this is
     // Iceberg/Delta's position-delete path: deleting one row of a
     // petabyte table writes kilobytes.
-    "q_store_delete_mor" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_delete_mor" -> ((s, d) => {
       val path = tmp(d, "storemor")
       val (base, _) = seedStore(s, d, path)
       val root = new org.apache.hadoop.fs.Path(path)
@@ -963,7 +922,7 @@ object Sources extends OpModule {
 
     // EQUALITY DELETES — the second merge-on-read shape (Iceberg v2's
     // equality-delete files beside q_store_delete_mor's position
-    // vectors): a keyed DELETE in `equality` mode attaches zone-matched
+    // vectors): a keyed StoreSink.equalityDelete attaches zone-matched
     // KEY sidecars in one manifest swap and never opens a data file —
     // zero data reads, zero data writes (z_eq_nodata pins all three:
     // ≥1 eq sidecar, no ordinal vector, data file set unchanged). The
@@ -974,7 +933,7 @@ object Sources extends OpModule {
     // must agree bit-for-bit. This is the delete shape for writers that
     // cannot afford the read — streaming retractions, GDPR-by-key
     // against cold data.
-    "q_store_delete_eq" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_delete_eq" -> ((s, d) => {
       val path = tmp(d, "storeeq")
       val (base, _) = seedStore(s, d, path)
       val root = new org.apache.hadoop.fs.Path(path)
@@ -992,10 +951,8 @@ object Sources extends OpModule {
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
           .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
           .collect()
-        val modeKey = "spark.graft.store.delete.mode"
-        s.conf.set(modeKey, "equality")
-        try s.sql(s"DELETE FROM graft.store WHERE k IN (${keys.mkString(",")})")
-        finally s.conf.unset(modeKey)
+        graft.sources.StoreSink.equalityDelete(path,
+          Array(org.apache.spark.sql.sources.In("k", keys.map(k => k: Any))))
         val noDataIo = dataFiles() == filesBefore
         val entries = graft.sources.StoreSink.readEntries(root, fsys)
         val nEq = entries.count(_.eq.isDefined)
@@ -1031,7 +988,7 @@ object Sources extends OpModule {
     // touched-key list is the CDC batch (bounded, ~2% of keys) —
     // collecting it is the driver-side scalar-election pattern, never
     // data-sized.
-    "q_store_merge" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_merge" -> ((s, d) => {
       val path = tmp(d, "storemerge")
       val (base, maxK) = seedStore(s, d, path)
       val (dels, upds, ins) = storeCdc(base, maxK)
@@ -1057,7 +1014,7 @@ object Sources extends OpModule {
     // (primitive composition vs native MERGE) must agree bit for bit.
     // NB the ReplaceData write rows carry a leading __row_operation column
     // the LogicalWriteInfo schema does not mention (StoreSink.encode).
-    "q_store_merge_sql" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_merge_sql" -> ((s, d) => {
       val path = tmp(d, "storemergesql")
       val (base, maxK) = seedStore(s, d, path)
       val (dels, upds, ins) = storeCdc(base, maxK)
@@ -1092,7 +1049,7 @@ object Sources extends OpModule {
     // z_incremental row pins ≥ 2 separate MERGE commits (never one
     // rescan). The batch session is the stream's CLONE: catalog + store
     // path confs are set before start() so the clone inherits both.
-    "s_store_upsert" -> ((s, d) => withGraftCatalog(s) {
+    "s_store_upsert" -> ((s, d) => {
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val path = tmp(d, "storeupsert")
@@ -1149,7 +1106,7 @@ object Sources extends OpModule {
     // At 100 TB this is the shape that makes streaming CDC into a big
     // table affordable — per-batch cost is changed ROWS, not changed
     // files; compaction absorbs the masks on its own schedule.
-    "s_store_upsert_delta" -> ((s, d) => withGraftCatalog(s) {
+    "s_store_upsert_delta" -> ((s, d) => {
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val path = tmp(d, "storeupsertd")
@@ -1170,10 +1127,8 @@ object Sources extends OpModule {
         .select(col("k"), lit("W2").as("grp"),
                 (col("k") * 5 + 2).as("amt_cents"))
         .as[(Long, String, Long)].collect().toSeq
-      val key = "spark.graft.store.rowlevel.mode"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "delta")
-      try withStorePath(s, path) {
+      withConf(s)("spark.graft.store.rowlevel.mode" -> "delta",
+                  GraftCatalog.StorePathKey -> path) {
         val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Long)]
         val q = mem.toDS().toDF("k", "grp", "amt_cents").writeStream
           .foreachBatch { (b: DataFrame, _: Long) =>
@@ -1199,8 +1154,6 @@ object Sources extends OpModule {
         val rows = agg.collect().toSeq :+ org.apache.spark.sql.Row(
           "z_no_rewrite", if (noRewrite) 1L else 0L, 0L)
         s.createDataFrame(rows.asJava, agg.schema).orderBy(col("grp"))
-      } finally prev match {
-        case Some(p) => s.conf.set(key, p); case None => s.conf.unset(key)
       }
     }),
 
@@ -1216,7 +1169,7 @@ object Sources extends OpModule {
     // COW MERGE, and the delta MERGE must agree bit for bit. NB the delta
     // conf also declares k NOT NULL (Spark refuses nullable row ids —
     // identifier-field semantics).
-    "q_store_merge_delta" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_merge_delta" -> ((s, d) => {
       val path = tmp(d, "storemergedelta")
       val (base, maxK) = seedStore(s, d, path)
       val (dels, upds, ins) = storeCdc(base, maxK)
@@ -1226,19 +1179,14 @@ object Sources extends OpModule {
           lit(null).cast("string").as("grp"), lit(0L).as("amt_cents")))
         .unionByName(ins.select(lit("I").as("op"), col("k"), col("grp"), col("amt_cents")))
         .createOrReplaceTempView(v)
-      val key = "spark.graft.store.rowlevel.mode"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "delta")
-      try withStorePath(s, path) {
+      try withConf(s)("spark.graft.store.rowlevel.mode" -> "delta",
+                      GraftCatalog.StorePathKey -> path) {
         s.sql(s"""MERGE INTO graft.store t USING $v s ON t.k = s.k
                  |WHEN MATCHED AND s.op = 'D' THEN DELETE
                  |WHEN MATCHED AND s.op = 'U' THEN UPDATE SET grp = s.grp, amt_cents = s.amt_cents
                  |WHEN NOT MATCHED AND s.op = 'I' THEN INSERT (k, grp, amt_cents) VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
         storeSummary(s, path)
-      } finally {
-        prev match { case Some(p) => s.conf.set(key, p); case None => s.conf.unset(key) }
-        s.catalog.dropTempView(v)
-      }
+      } finally s.catalog.dropTempView(v)
     }),
 
     // DELETE through the delta protocol: a predicate SupportsDelete cannot
@@ -1249,16 +1197,14 @@ object Sources extends OpModule {
     // ONCE and rewrites nothing (the flag pins every seed file surviving
     // by name). Group COW would rewrite every file holding an odd amount,
     // i.e. all of them.
-    "q_store_delete_delta" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_delete_delta" -> ((s, d) => {
       val path = tmp(d, "storedeldelta")
       seedStore(s, d, path)
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       val root = new org.apache.hadoop.fs.Path(path)
       val seedNames = graft.sources.StoreSink.readEntries(root, fsys).map(_.name)
-      val key = "spark.graft.store.rowlevel.mode"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "delta")
-      try withStorePath(s, path) {
+      withConf(s)("spark.graft.store.rowlevel.mode" -> "delta",
+                  GraftCatalog.StorePathKey -> path) {
         s.sql("DELETE FROM graft.store WHERE amt_cents % 2 = 1")
         val entries = graft.sources.StoreSink.readEntries(root, fsys)
         val noRewrite = seedNames.forall(entries.map(_.name).contains) &&
@@ -1268,8 +1214,6 @@ object Sources extends OpModule {
         val rows = agg.collect().toSeq :+ org.apache.spark.sql.Row(
           "z_no_rewrite", if (noRewrite) 1L else 0L, 0L)
         s.createDataFrame(rows.asJava, agg.schema).orderBy(col("grp"))
-      } finally prev match {
-        case Some(p) => s.conf.set(key, p); case None => s.conf.unset(key)
       }
     }),
 
@@ -1282,7 +1226,7 @@ object Sources extends OpModule {
     // every target group (absence is a whole-table property — no runtime
     // group filter can narrow it), which is exactly what the oracle's
     // relational formulation states.
-    "q_store_merge_sync" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_merge_sync" -> ((s, d) => {
       val path = tmp(d, "storemergesync")
       val (base, maxK) = seedStore(s, d, path)
       val v = s"store_sync_${java.lang.Integer.toHexString(d.hashCode)}"
@@ -1306,7 +1250,7 @@ object Sources extends OpModule {
     // range-clustered store — the parquet row-group-skipping shape on a
     // metadata layer we own (StoreSinkSpec pins the planned-file narrowing
     // and the DPP variant; this query pins the semantics at data scale).
-    "q_store_zone_read" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_zone_read" -> ((s, d) => {
       val path = tmp(d, "storezone")
       seedStore(s, d, path)
       val res = s.read.format("graft.sources.StoreSink").option("path", path).load()
@@ -1330,7 +1274,7 @@ object Sources extends OpModule {
     // prunability. At 100 TB this is the periodic maintenance job that
     // keeps zone maps useful after many unclustered CDC appends; it
     // rewrites live bytes once and never blocks readers.
-    "q_store_compact" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_compact" -> ((s, d) => {
       val path = tmp(d, "storecompact")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -1388,7 +1332,7 @@ object Sources extends OpModule {
     // arithmetic the oracle replays from the orders table's own key
     // bounds. At 100 TB this turns "when do we compact?" from a human
     // judgement into one manifest read on a schedule.
-    "q_store_compact_policy" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_compact_policy" -> ((s, d) => {
       val path = tmp(d, "storecompactif")
       val fsys = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
@@ -1428,7 +1372,7 @@ object Sources extends OpModule {
     // must reproduce each snapshot's content exactly, and the audit rows
     // pin row counts + effective version numbers. At 100 TB an export is
     // a full copy by design — the point is leaving the format.
-    "q_store_export" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_export" -> ((s, d) => {
       val path = tmp(d, "storeexport")
       seedStore(s, d, path) // version 1
       withStorePath(s, path) {
@@ -1466,7 +1410,7 @@ object Sources extends OpModule {
     // inversions in the k-sorted files (z_inversions), the 8-file
     // layout, and the surviving row count. At 100 TB _file/_pos are what
     // audits and positional-delete tooling join on.
-    "q_store_meta_cols" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_meta_cols" -> ((s, d) => {
       val path = tmp(d, "storemetacols")
       val fsys = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
@@ -1516,7 +1460,7 @@ object Sources extends OpModule {
     // then deletes a data file OUT FROM UNDER the manifest and fsck
     // reports exactly one missing file. At 100 TB this is the nightly
     // integrity tick: one manifest read + one stat per file.
-    "q_store_fsck" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_fsck" -> ((s, d) => {
       val path = tmp(d, "storefsck")
       val (_, maxK) = seedStore(s, d, path) // v1: 8 range-clustered files
       withStorePath(s, path) {
@@ -1551,7 +1495,7 @@ object Sources extends OpModule {
     // only the delete; audit rows pin exact exported counts + the
     // resolved head version. At 100 TB the file diff bounds the scan to
     // files the window actually changed.
-    "q_store_export_delta" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_export_delta" -> ((s, d) => {
       val path = tmp(d, "storeexpdelta")
       seedStore(s, d, path) // v1: 8 range-clustered files
       withStorePath(s, path) {
@@ -1595,7 +1539,7 @@ object Sources extends OpModule {
     // is the difference between "a human decides when to compact" and a
     // cron loop: every decision here is manifest-only until a trigger
     // actually fires.
-    "q_store_maintain" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_maintain" -> ((s, d) => {
       val path = tmp(d, "storemaintain")
       val fsys = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
@@ -1645,7 +1589,7 @@ object Sources extends OpModule {
     // second tick is a no-op; surviving content is pinned by the
     // post-maintenance aggregate. At 100 TB this is GDPR/retention as a
     // property instead of a human-run DELETE.
-    "q_store_maintain_ttl" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_maintain_ttl" -> ((s, d) => {
       val path = tmp(d, "storemttl")
       seedStore(s, d, path)
       withStorePath(s, path) {
@@ -1685,7 +1629,7 @@ object Sources extends OpModule {
     // post-compact agg and the VERSION AS OF pre-compact agg share one
     // oracle block); at 100 TB this is the layout job that serves TWO
     // dominant predicate dimensions from one table without a second copy.
-    "q_store_zorder" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_zorder" -> ((s, d) => {
       val path = tmp(d, "storezorder")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -1744,7 +1688,7 @@ object Sources extends OpModule {
     // files). Two windows prove version arithmetic: 1..current sees
     // update + delete, 2..3 sees only the delete. The oracle applies both
     // statements relationally and diffs the snapshots. */
-    "q_store_cdf" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_cdf" -> ((s, d) => {
       val path = tmp(d, "storecdf")
       seedStore(s, d, path) // v1: 8 range-clustered files
       withStorePath(s, path) {
@@ -1783,7 +1727,7 @@ object Sources extends OpModule {
     // the restored data. Metadata-only (content-addressed segments are
     // reused byte-for-byte); at 100 TB "undo the bad load" costs one
     // manifest swap, not a restore job.
-    "q_store_rollback" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_rollback" -> ((s, d) => {
       val path = tmp(d, "storerb")
       seedStore(s, d, path) // v1
       withStorePath(s, path) {
@@ -1818,7 +1762,7 @@ object Sources extends OpModule {
     // and re-picking the same commit conflicts loudly because its files
     // already sit at head. The oracle pins the final content = base + the
     // good load, bit for bit.
-    "q_store_cherry" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_cherry" -> ((s, d) => {
       val path = tmp(d, "storecherry")
       val (_, maxK) = seedStore(s, d, path) // v1
       withStorePath(s, path) {
@@ -1865,7 +1809,7 @@ object Sources extends OpModule {
     // pipelines gate data quality: the audit runs against real committed
     // bytes, publish costs one manifest write, and rollback is "don't
     // publish".
-    "q_store_wap" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_wap" -> ((s, d) => {
       val path = tmp(d, "storewap")
       val (base, maxK) = seedStore(s, d, path)
       withStorePath(s, path) {
@@ -1924,7 +1868,7 @@ object Sources extends OpModule {
     // stays untouched, vacuum treats the live branch as a reference root
     // (staged files survive), and after publish the name no longer
     // resolves (loud — refs never silently fall through to stale data).
-    "q_store_wap_read" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_wap_read" -> ((s, d) => {
       val path = tmp(d, "storewapread")
       val (base, maxK) = seedStore(s, d, path) // v1
       withStorePath(s, path) {
@@ -1974,7 +1918,7 @@ object Sources extends OpModule {
     // CHANGED-files read + a delta-sized aggregate — at 100 TB the MV
     // refresh never rescans the table, which is the entire economics of
     // maintaining downstream marts off a CDC-ing store.
-    "q_store_ivm" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_ivm" -> ((s, d) => {
       val path = tmp(d, "storeivm")
       val (_, maxK) = seedStore(s, d, path) // v1
       withStorePath(s, path) {
@@ -2022,13 +1966,11 @@ object Sources extends OpModule {
     // this is the difference between an MV refresh surviving a quarterly
     // re-materialization and every downstream mart rebuilding from
     // scratch.
-    "q_store_ivm_replace" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_ivm_replace" -> ((s, d) => {
       val ctasDir = tmp(d, "storeivmr")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(ctasDir), true)
-      val prev = s.conf.getOption(GraftCatalog.CtasDirKey)
-      s.conf.set(GraftCatalog.CtasDirKey, ctasDir)
-      try {
+      withConf(s)(GraftCatalog.CtasDirKey -> ctasDir) {
         Tables.orders(s, d)
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("grp"),
                   graft.ops.Det.cents(col("o_totalprice")).as("amt_cents"))
@@ -2069,9 +2011,6 @@ object Sources extends OpModule {
           StructField("sum_cents", LongType)))
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
-      } finally prev match {
-        case Some(p) => s.conf.set(GraftCatalog.CtasDirKey, p)
-        case None    => s.conf.unset(GraftCatalog.CtasDirKey)
       }
     }),
 
@@ -2213,7 +2152,7 @@ object Sources extends OpModule {
         .orderBy(col("grp"))
     }),
 
-    "q_store_evolve" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_evolve" -> ((s, d) => {
       val path = tmp(d, "storeevolve")
       val (base, maxK) = seedStore(s, d, path) // v1: 3-column generation
       withStorePath(s, path) {
@@ -2246,7 +2185,7 @@ object Sources extends OpModule {
     // metadata answer, (c) exact content under both. At 100 TB declared
     // stats are what make a third, fourth, nth predicate column skippable
     // — without them every query on a non-zone column reads the table.
-    "q_store_zone_multi" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_zone_multi" -> ((s, d) => {
       val path = tmp(d, "storezonemulti")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -2297,7 +2236,7 @@ object Sources extends OpModule {
     // written. At 100 TB this is the Iceberg/Delta ANALYZE/compute-stats
     // job: declaring a new skipping column on a petabyte table must not
     // mean rewriting it.
-    "q_store_analyze" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_analyze" -> ((s, d) => {
       val path = tmp(d, "storeanalyze")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -2370,7 +2309,7 @@ object Sources extends OpModule {
     // schema-per-snapshot contract). At 100 TB: a rename that rewrote
     // files — or misread them by current-schema ordinal — would be a
     // full-table operation; by-id resolution makes it free.
-    "q_store_evolve_rename" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_evolve_rename" -> ((s, d) => {
       val path = tmp(d, "storerename")
       val (base, maxK) = seedStore(s, d, path) // v1: 3-wide files
       withStorePath(s, path) {
@@ -2426,7 +2365,7 @@ object Sources extends OpModule {
     // version resolves the archived schema and shows the column. The
     // post-drop UPDATE pins the row-level rewrite under a tombstoned
     // layout. No file is rewritten by the DDL itself.
-    "q_store_evolve_drop" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_evolve_drop" -> ((s, d) => {
       val path = tmp(d, "storedropcol")
       val (base, maxK) = seedStore(s, d, path) // v1: 3-wide files
       withStorePath(s, path) {
@@ -2487,7 +2426,7 @@ object Sources extends OpModule {
     // invariance under the whole maintenance cycle in one oracle. At
     // 100 TB this is the operator interface: maintenance is a scheduled
     // SQL statement with an auditable result, not a side-effecting script.
-    "q_store_call" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_call" -> ((s, d) => {
       val path = tmp(d, "storecall")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -2615,7 +2554,7 @@ object Sources extends OpModule {
     // tag audit row, the baseline read-back after two mutations AND a
     // vacuum, the untagged v2's loud expiry, and the current state — one
     // oracle block covers all four.
-    "q_store_tag" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_tag" -> ((s, d) => {
       val path = tmp(d, "storetag")
       seedStore(s, d, path) // v1
       withStorePath(s, path) {
@@ -2668,18 +2607,15 @@ object Sources extends OpModule {
     // exist — while partition pruning bounds point lookups by bucket, not
     // table. Flags pin the plan shape; the data agrees with the relational
     // oracle exactly.
-    "q_store_part" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_part" -> ((s, d) => {
       val dir = tmp(d, "storepart")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-      val confs = Seq(
-        GraftCatalog.CtasDirKey -> dir,
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      withConf(s)(
+          GraftCatalog.CtasDirKey -> dir,
+          "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         Tables.orders(s, d).createOrReplaceTempView("ord_part_v")
         s.sql("""CREATE TABLE graft.part_fact PARTITIONED BY (bucket(8, k)) AS
                 |SELECT o_orderkey AS k, o_orderstatus AS grp,
@@ -2723,9 +2659,6 @@ object Sources extends OpModule {
           StructField("sum_cents", LongType)))
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
-      } finally prev.foreach {
-        case (k, Some(p)) => s.conf.set(k, p)
-        case (k, None)    => s.conf.unset(k)
       }
     }),
 
@@ -2738,14 +2671,11 @@ object Sources extends OpModule {
     // TRUNCATE PARTITION is the same metadata op because partitions are
     // value-derived. Flags pin the metadata-only contract; the surviving
     // data agrees with the relational oracle.
-    "q_store_partmgmt" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_partmgmt" -> ((s, d) => {
       val dir = tmp(d, "storepm")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-      val key = GraftCatalog.CtasDirKey
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, dir)
-      try {
+      withConf(s)(GraftCatalog.CtasDirKey -> dir) {
         Tables.orders(s, d).createOrReplaceTempView("ord_pm_v")
         s.sql("""CREATE TABLE graft.pmq PARTITIONED BY (grp) AS
                 |SELECT o_orderkey AS k, o_orderstatus AS grp,
@@ -2775,9 +2705,6 @@ object Sources extends OpModule {
           StructField("sum_cents", LongType)))
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
-      } finally prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
       }
     }),
 
@@ -2789,15 +2716,11 @@ object Sources extends OpModule {
     // that date's bytes + one manifest swap, never a table rewrite. The
     // replaced partition's old entries leave the manifest (their files
     // stay archived for time travel until vacuum).
-    "q_store_dyn_overwrite" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_dyn_overwrite" -> ((s, d) => {
       val dir = tmp(d, "storedyn")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-      val ctasKey = GraftCatalog.CtasDirKey
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = Seq(ctasKey, modeKey).map(k => k -> s.conf.getOption(k)).toMap
-      s.conf.set(ctasKey, dir)
-      try {
+      withConf(s)(GraftCatalog.CtasDirKey -> dir) {
         Tables.orders(s, d).createOrReplaceTempView("ord_dyn_v")
         s.sql("""CREATE TABLE graft.pdyn PARTITIONED BY (grp) AS
                 |SELECT o_orderkey AS k, o_orderstatus AS grp,
@@ -2807,12 +2730,13 @@ object Sources extends OpModule {
         val before = graft.sources.StoreSink.readEntries(root, fsys)
         val keepNames = before.filterNot(_.part.contains("F")).map(_.name).toSet
         val oldF = before.filter(_.part.contains("F")).map(_.name).toSet
-        s.conf.set(modeKey, "dynamic")
         // the reload: partition F re-derived with a corrected amount
-        s.sql("""INSERT OVERWRITE graft.pdyn
-                |SELECT o_orderkey AS k, o_orderstatus AS grp,
-                |       CAST(ROUND(o_totalprice * 100) AS BIGINT) + 11 AS amt_cents
-                |FROM ord_dyn_v WHERE o_orderstatus = 'F'""".stripMargin)
+        withConf(s)("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+          s.sql("""INSERT OVERWRITE graft.pdyn
+                  |SELECT o_orderkey AS k, o_orderstatus AS grp,
+                  |       CAST(ROUND(o_totalprice * 100) AS BIGINT) + 11 AS amt_cents
+                  |FROM ord_dyn_v WHERE o_orderstatus = 'F'""".stripMargin)
+        }
         val after = graft.sources.StoreSink.readEntries(root, fsys)
         val untouched = after.filterNot(_.part.contains("F")).map(_.name).toSet == keepNames
         val replaced = after.filter(_.part.contains("F")).map(_.name).toSet
@@ -2831,20 +2755,14 @@ object Sources extends OpModule {
           StructField("sum_cents", LongType)))
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
-      } finally prev.foreach {
-        case (k, Some(p)) => s.conf.set(k, p)
-        case (k, None)    => s.conf.unset(k)
       }
     }),
 
-    "q_store_ctas" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_ctas" -> ((s, d) => {
       val dir = tmp(d, "storectas")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-      val key = GraftCatalog.CtasDirKey
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, dir)
-      try {
+      withConf(s)(GraftCatalog.CtasDirKey -> dir) {
         Tables.orders(s, d).createOrReplaceTempView("ord_ctas_v")
         s.sql("""CREATE TABLE graft.big_orders AS
                 |SELECT o_orderkey AS k, o_orderstatus AS grp,
@@ -2881,9 +2799,6 @@ object Sources extends OpModule {
           StructField("sum_cents", LongType), StructField("n_pri", LongType)))
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
-      } finally prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
       }
     }),
 
@@ -2895,7 +2810,7 @@ object Sources extends OpModule {
     // entry's live count is not exact (legacy lines, equality masks) or a
     // runtime filter narrowed the scan. Flags pin the prefix cut, the
     // exact counts, and the covers-everything case.
-    "q_store_limit_push" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_limit_push" -> ((s, d) => {
       val path = tmp(d, "storelim")
       seedStore(s, d, path) // 8 range-clustered files
       withStorePath(s, path) {
@@ -2934,14 +2849,11 @@ object Sources extends OpModule {
     // content. The schema may change shape across the replace (here the
     // trailing column set changes) — REPLACE resets the trailing schema,
     // exactly what ADD COLUMN alone cannot express.
-    "q_store_rtas" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_rtas" -> ((s, d) => {
       val dir = tmp(d, "storertas")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(dir), true)
-      val key = GraftCatalog.CtasDirKey
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, dir)
-      try {
+      withConf(s)(GraftCatalog.CtasDirKey -> dir) {
         Tables.orders(s, d).createOrReplaceTempView("ord_rtas_v")
         s.sql("""CREATE TABLE graft.rt AS
                 |SELECT o_orderkey AS k, o_orderstatus AS grp,
@@ -2994,9 +2906,6 @@ object Sources extends OpModule {
           StructField("sum_cents", LongType), StructField("sum_b7", LongType)))
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
-      } finally prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
       }
     }),
 
@@ -3009,7 +2918,7 @@ object Sources extends OpModule {
     // carry over UNREAD and BY NAME (flag-pinned — the reload of one key
     // range costs that range's bytes, not the table); the commit is
     // version +1 exactly (flag-pinned atomicity).
-    "q_store_replace_where" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_replace_where" -> ((s, d) => {
       val path = tmp(d, "storerw")
       val (_, maxK) = seedStore(s, d, path)
       val cut = maxK / 2
@@ -3055,7 +2964,7 @@ object Sources extends OpModule {
     // Flags pin: a conservative cutoff keeps young orphans, the real
     // sweep removes exactly the planted leftovers, committed data
     // untouched.
-    "q_store_orphans" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_orphans" -> ((s, d) => {
       val path = tmp(d, "storeorph")
       seedStore(s, d, path)
       withStorePath(s, path) {
@@ -3102,7 +3011,7 @@ object Sources extends OpModule {
     // operators actually write ("drop history older than 7 days"), and it
     // reads the same monotone `#ts=` ledger TIMESTAMP AS OF resolves —
     // one metadata sweep, never a data rewrite.
-    "q_store_expire" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_expire" -> ((s, d) => {
       val path = tmp(d, "storeexp")
       seedStore(s, d, path) // v1
       withStorePath(s, path) {
@@ -3146,7 +3055,7 @@ object Sources extends OpModule {
     // vacuums with the policy unresolved at the call site, and pins that
     // exactly one archived version survived (v1 loudly expired, current
     // content untouched); UNSET removes only the named key.
-    "q_store_props" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_props" -> ((s, d) => {
       val path = tmp(d, "storeprops")
       seedStore(s, d, path) // v1
       withStorePath(s, path) {
@@ -3197,7 +3106,7 @@ object Sources extends OpModule {
     // pinned snapshot are refused (StoreSinkSpec). At 100 TB: a version is
     // one manifest file, vacuum is O(manifests) + unreferenced deletes —
     // never a data rewrite (the sink_retention posture, now transactional).
-    "q_store_time_travel" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_time_travel" -> ((s, d) => {
       val path = tmp(d, "storett")
       seedStore(s, d, path) // version 1
       withStorePath(s, path) {
@@ -3237,7 +3146,7 @@ object Sources extends OpModule {
     // pins that an instant predating the table fails loudly, and that
     // after a vacuum an expired generation's instant also fails loudly
     // instead of silently resolving to a later state.
-    "q_store_travel_ts" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_travel_ts" -> ((s, d) => {
       val path = tmp(d, "storetravelts")
       seedStore(s, d, path) // v1
       withStorePath(s, path) {
@@ -3293,7 +3202,7 @@ object Sources extends OpModule {
     // SUPPORT_COLUMN_DEFAULT_VALUE capability). At 100 TB this is what
     // makes adding a populated-looking column to a petabyte table a
     // metadata operation.
-    "q_store_evolve_default" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_evolve_default" -> ((s, d) => {
       val path = tmp(d, "storedflt")
       val (_, maxK) = seedStore(s, d, path)
       withStorePath(s, path) {
@@ -3329,7 +3238,7 @@ object Sources extends OpModule {
     // file counts, version history) without any bespoke tooling. Flags
     // pin cross-table consistency: files, partitions, and the table
     // itself must agree on row totals.
-    "q_store_inspect" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_inspect" -> ((s, d) => {
       val path = tmp(d, "storeinspect")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -3372,7 +3281,7 @@ object Sources extends OpModule {
     // boundary instead of hoped-for in every producer job — at 100 TB
     // with dozens of writers, the table is the only choke point they all
     // share.
-    "q_store_constraint" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_constraint" -> ((s, d) => {
       val path = tmp(d, "storecons")
       val (_, maxK) = seedStore(s, d, path)
       withStorePath(s, path) {
@@ -3404,7 +3313,7 @@ object Sources extends OpModule {
     // Row-level UPDATE through the same protocol: one SQL statement, the
     // connector rewrites the affected generation copy-on-write. The oracle
     // applies the SET arithmetic relationally.
-    "q_store_update" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_update" -> ((s, d) => {
       val path = tmp(d, "storeupd")
       seedStore(s, d, path)
       withStorePath(s, path) {
@@ -3446,7 +3355,7 @@ object Sources extends OpModule {
     // At 100 TB: "latest 100 by key" on a clustered table opens a couple
     // of files, not a million — and the null arithmetic is what keeps the
     // prefix SOUND instead of merely usually-right.
-    "q_store_topn" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_topn" -> ((s, d) => {
       val path = tmp(d, "storetopn")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -3507,7 +3416,7 @@ object Sources extends OpModule {
     // gone, all survivors distinct (COUNT(DISTINCT k) proves no row was
     // dropped twice or duplicated), and LIMIT composition (Spark pushes
     // limit = offset + limit, then the offset).
-    "q_store_offset" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_offset" -> ((s, d) => {
       val path = tmp(d, "storeoffset")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -3559,7 +3468,7 @@ object Sources extends OpModule {
     // in one atomic write (fin_* rows). At 100 TB this is the catalog
     // commit every lakehouse ends at: version data immutably, publish by
     // swapping one pointer.
-    "q_store_txn_read" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_txn_read" -> ((s, d) => {
       val pa = tmp(d, "txnr_a"); val pb = tmp(d, "txnr_b")
       val cat = tmp(d, "txnr_cat")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
@@ -3627,7 +3536,7 @@ object Sources extends OpModule {
     // read in the same window observes the tear (z_torn_sql) — exactly
     // the gap the conf closes. At 100 TB this is snapshot isolation for
     // every BI tool that only speaks SQL.
-    "q_store_txn_read_sql" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_txn_read_sql" -> ((s, d) => {
       val pa = tmp(d, "txnrsql_a"); val pb = tmp(d, "txnrsql_b")
       val cat = tmp(d, "txnrsql_cat")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
@@ -3648,17 +3557,16 @@ object Sources extends OpModule {
       seed(pa, even = true); seed(pb, even = false)
       graft.sources.StoreSink.catalogSync(cat, Seq(pa, pb)) // pin v1+v1
       // SQL reads through graft.store; `pin` scopes the catalog conf —
-      // materialized inside the scope, restored in finally (the
-      // conf-scoped-query discipline)
+      // materialized inside the scope
       def sqlRead(pin: Boolean): Seq[(String, Long, Long)] = {
-        if (pin) s.conf.set(GraftCatalog.CatalogPinKey, cat)
-        try Seq(("a", pa), ("b", pb)).map { case (t, p) =>
+        def reads = Seq(("a", pa), ("b", pb)).map { case (t, p) =>
           withStorePath(s, p) {
             val r = s.table("graft.store")
               .agg(count(lit(1)), sum(col("amt_cents"))).collect()(0)
             (t, r.getLong(0), r.getLong(1))
           }
-        } finally if (pin) s.conf.unset(GraftCatalog.CatalogPinKey)
+        }
+        if (pin) withConf(s)(GraftCatalog.CatalogPinKey -> cat)(reads) else reads
       }
       val headBefore = sqlRead(pin = false)
       var mid: Seq[(String, Long, Long)] = Nil
@@ -3694,7 +3602,7 @@ object Sources extends OpModule {
     // transaction FORWARD: the final state is byte-identical to a clean
     // publish, which is the whole contract — a multi-table pipeline's
     // fact+dim go live together or not at all, even across a dead driver.
-    "q_store_txn" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_txn" -> ((s, d) => {
       val pa = tmp(d, "txn_a"); val pb = tmp(d, "txn_b")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(pa), true)
@@ -3754,7 +3662,7 @@ object Sources extends OpModule {
     // file never prune). At 100 TB this is what cuts `WHERE url LIKE
     // 'https://a...'`-class scans over real corpora from the whole table to
     // a few files.
-    "q_store_zone_str" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_zone_str" -> ((s, d) => {
       val path = tmp(d, "storezonestr")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -3810,7 +3718,7 @@ object Sources extends OpModule {
     // petabyte table from bucket(4) to identity partitioning must not mean
     // rewriting it — new data lands right, old data is planned right, and
     // compaction converges the layout over time.
-    "q_store_part_evolve" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_part_evolve" -> ((s, d) => {
       val path = tmp(d, "storepartevo")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -3862,7 +3770,7 @@ object Sources extends OpModule {
     // and narrowing back is refused — the lossy direction never exists. At
     // 100 TB this is the second-most-common ALTER in practice: an id column
     // outgrowing int must not mean rewriting a petabyte.
-    "q_store_evolve_widen" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_evolve_widen" -> ((s, d) => {
       val path = tmp(d, "storewiden")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -3922,7 +3830,7 @@ object Sources extends OpModule {
     // replays training on the INITIAL corpus and assignment over the FINAL
     // one — exactly what build-then-refresh must equal — so the hash gate
     // pins the whole maintenance fold, not just row counts.
-    "q_store_index_refresh" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_index_refresh" -> ((s, d) => {
       val corpus = tmp(d, "idxcorpus")
       val idx = tmp(d, "idxmaint")
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)

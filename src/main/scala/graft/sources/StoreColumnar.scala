@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
   */
 object StoreColumnar extends OpModule {
 
-  import Sources.{tmp, withGraftCatalog, withStorePath, seedStore, storeCdc,
+  import Sources.{tmp, withStorePath, seedStore, storeCdc,
     storeSummary}
 
   private val fmt = "graft.sources.StoreSink"
@@ -76,7 +76,7 @@ object StoreColumnar extends OpModule {
     // Baseline: a columnar-born table round-trips the standard content,
     // and every committed file actually carries the #GC1 magic (z flag —
     // without it this would silently test the text path).
-    "q_store_col" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col" -> ((s, d) => {
       val path = tmp(d, "storecol")
       seedColumnar(s, d, path)
       withStorePath(s, path) {
@@ -96,7 +96,7 @@ object StoreColumnar extends OpModule {
     // zero-column existence scan touches 0 of 5. The text encoding would
     // split all five fields of every row either way; this is the
     // within-file scan cost the format exists to shed.
-    "q_store_col_proj" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_proj" -> ((s, d) => {
       val path = tmp(d, "storecolproj")
       fsOf(s).delete(new org.apache.hadoop.fs.Path(path), true)
       StoreSink.setProp(path, StoreSink.EncodingProp, "columnar")
@@ -137,7 +137,7 @@ object StoreColumnar extends OpModule {
     // equality delete masks through the KEY BLOCK alone, and the bulk
     // delete rewrites copy-on-write ABSORBING both masks — with the
     // replacement files still columnar (z_columnar).
-    "q_store_col_delete" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_delete" -> ((s, d) => {
       val path = tmp(d, "storecoldel")
       val (base, _) = seedColumnar(s, d, path)
       val root = new org.apache.hadoop.fs.Path(path)
@@ -160,10 +160,8 @@ object StoreColumnar extends OpModule {
         s.sql(s"DELETE FROM graft.store WHERE k IN (${dvKeys.mkString(",")})")
         val hasDv = StoreSink.readEntries(root, fsys).exists(_.dv.isDefined)
         val noRewrite = dataFiles() == filesBefore
-        val modeKey = "spark.graft.store.delete.mode"
-        s.conf.set(modeKey, "equality")
-        try s.sql(s"DELETE FROM graft.store WHERE k IN (${eqKeys.mkString(",")})")
-        finally s.conf.unset(modeKey)
+        StoreSink.equalityDelete(path,
+          Array(org.apache.spark.sql.sources.In("k", eqKeys.map(k => k: Any))))
         val hasEq = StoreSink.readEntries(root, fsys).exists(_.eq.isDefined)
         val morRows = aggOf("mor")
         s.sql("DELETE FROM graft.store WHERE grp = 'F'") // bulk: COW
@@ -185,7 +183,7 @@ object StoreColumnar extends OpModule {
     // Native MERGE INTO over a columnar table — SHARES q_store_merge's
     // oracle verbatim: third execution surface (primitives, native MERGE
     // on text, native MERGE on columnar), one truth.
-    "q_store_col_merge" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_merge" -> ((s, d) => {
       val path = tmp(d, "storecolmerge")
       val (base, maxK) = seedColumnar(s, d, path)
       val (dels, upds, ins) = storeCdc(base, maxK)
@@ -210,7 +208,7 @@ object StoreColumnar extends OpModule {
     // carry by name through the rewrite) — q_store_evolve's scenario and
     // oracle verbatim; a short columnar file pads missing BLOCKS exactly
     // as a short text row pads missing fields.
-    "q_store_col_evolve" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_evolve" -> ((s, d) => {
       val path = tmp(d, "storecolevolve")
       val (base, maxK) = seedColumnar(s, d, path)
       withStorePath(s, path) {
@@ -237,7 +235,7 @@ object StoreColumnar extends OpModule {
     // resolves the pre-flip generation as pure text. No rewrite anywhere:
     // at 100 TB flipping a petabyte table's encoding costs one property
     // write, and migration happens lazily through COW/compaction.
-    "q_store_col_travel" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_travel" -> ((s, d) => {
       val path = tmp(d, "storecoltravel")
       val (base, maxK) = seedStore(s, d, path) // v1: text files
       StoreSink.setProp(path, StoreSink.EncodingProp, "columnar")
@@ -275,7 +273,7 @@ object StoreColumnar extends OpModule {
     // and oracle verbatim: the feed diffs manifest file tokens and reads
     // changed files through the encoding-agnostic row view, so the
     // at-rest format never leaks into CDC semantics.
-    "q_store_col_cdf" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_cdf" -> ((s, d) => {
       val path = tmp(d, "storecolcdf")
       seedColumnar(s, d, path) // v1: 8 range-clustered columnar files
       withStorePath(s, path) {
@@ -312,7 +310,7 @@ object StoreColumnar extends OpModule {
     // columnar, one compact() — content identical before/after (and the
     // pre-compact mixed generation still one VERSION AS OF away), all
     // post-compact files columnar, zones still disjoint enough to prune.
-    "q_store_col_compact" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_compact" -> ((s, d) => {
       val path = tmp(d, "storecolcompact")
       val (base, maxK) = seedStore(s, d, path) // v1: text
       StoreSink.setProp(path, StoreSink.EncodingProp, "columnar")
@@ -345,7 +343,7 @@ object StoreColumnar extends OpModule {
     // Zone + bloom pruning over columnar files: pruning decisions come
     // from the MANIFEST (encoding-blind), and the planned files then
     // read only the projected blocks — the two pruning layers compose.
-    "q_store_col_zone" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_zone" -> ((s, d) => {
       val path = tmp(d, "storecolzone")
       seedColumnar(s, d, path)
       withStorePath(s, path) {
@@ -371,7 +369,7 @@ object StoreColumnar extends OpModule {
     // fighting it. Content must be bit-identical to the uncompressed twin
     // (one oracle); z flags pin that every file carries the GC2 magic and
     // that the table's at-rest bytes genuinely shrank.
-    "q_store_col_zip" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_zip" -> ((s, d) => {
       val path = tmp(d, "storecolzip")
       val twin = tmp(d, "storecolziptwin")
       val fsys = fsOf(s)
@@ -420,7 +418,7 @@ object StoreColumnar extends OpModule {
     // amt-predicate read decodes THROUGH the runs. The parquet RLE page
     // shape; at 100 TB the at-rest win lands exactly on the columns
     // clustering already made runny.
-    "q_store_col_rle" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_rle" -> ((s, d) => {
       val path = tmp(d, "storecolrle")
       val twin = tmp(d, "storecolrletwin")
       val fsys = fsOf(s)
@@ -477,7 +475,7 @@ object StoreColumnar extends OpModule {
     // the whole group after reading ONE block (z_dict_skip — the parquet
     // dictionary-page filter shape). Content is bit-identical to the
     // plain columnar twin: one oracle.
-    "q_store_col_dict" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_dict" -> ((s, d) => {
       val path = tmp(d, "storecoldict")
       val twin = tmp(d, "storecoldicttwin")
       val fsys = fsOf(s)
@@ -540,7 +538,7 @@ object StoreColumnar extends OpModule {
     // status×digit suffix so one prefix matches TEN dictionary values —
     // a real prefix scan, not an equality in disguise — while grp-sorted
     // groups of the other statuses skip (z_dict_like_skip).
-    "q_store_col_dict_like" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_dict_like" -> ((s, d) => {
       val path = tmp(d, "storecoldictlike")
       val fsys = fsOf(s)
       fsys.delete(new org.apache.hadoop.fs.Path(path), true)
@@ -586,7 +584,7 @@ object StoreColumnar extends OpModule {
     // LAYOUT-BLIND: the rare-status probe still skips groups from the
     // `e` block's dictionary alone (z_dict_skip). Content is
     // bit-identical to q_store_col_dict — shared closed form.
-    "q_store_col_dict_rle" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_dict_rle" -> ((s, d) => {
       val path = tmp(d, "storecoldictrle")
       val twin = tmp(d, "storecoldictrletwin")
       val fsys = fsOf(s)
@@ -647,7 +645,7 @@ object StoreColumnar extends OpModule {
     // beforehand pins that ordinals stay file-wide across skipped groups
     // (a reader that forgot to advance `ord` past a skipped group would
     // mask the wrong rows and fail the oracle).
-    "q_store_col_group_zone" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_group_zone" -> ((s, d) => {
       val path = tmp(d, "storecolgz")
       fsOf(s).delete(new org.apache.hadoop.fs.Path(path), true)
       StoreSink.setProp(path, StoreSink.EncodingProp, "columnar")
@@ -685,7 +683,7 @@ object StoreColumnar extends OpModule {
     // one column-buffer set per partition value it sees, partition
     // pruning still precedes zone pruning, and every partition-pure file
     // is columnar.
-    "q_store_col_part" -> ((s, d) => withGraftCatalog(s) {
+    "q_store_col_part" -> ((s, d) => {
       val path = tmp(d, "storecolpart")
       val root = new org.apache.hadoop.fs.Path(path)
       fsOf(s).delete(root, true)

@@ -974,9 +974,11 @@ object StoreSink {
     * thread — SparkContext keeps job group/description in an
     * InheritableThreadLocal, so the child thread's jobs stay in the
     * caller's group — while `b` runs on the calling thread. Both always
-    * run to completion before return; the first failure rethrows. */
+    * run to completion before return; the first failure rethrows, carrying
+    * the second (if any) as a suppressed exception. */
   private[graft] def inParallel[A, B](a: => A)(b: => B): (A, B) = {
-    @volatile var ra: Either[Throwable, A] = null
+    @volatile var ra: Either[Throwable, A] =
+      Left(new IllegalStateException("parallel branch did not complete"))
     val th = new Thread(() => {
       ra = try Right(a) catch { case e: Throwable => Left(e) }
     }, "graft-parallel-commit")
@@ -986,6 +988,7 @@ object StoreSink {
     th.join()
     (ra, rb) match {
       case (Right(x), Right(y)) => (x, y)
+      case (Left(e), Left(e2))  => e.addSuppressed(e2); throw e
       case (Left(e), _)         => throw e
       case (_, Left(e))         => throw e
     }
@@ -1733,7 +1736,7 @@ object StoreSink {
       case Array(EqualTo("k", v: java.lang.Long))    => Array(v.longValue)
       case Array(EqualTo("k", v: java.lang.Integer)) => Array(v.longValue)
       case _ => throw new IllegalArgumentException(
-        "equality delete mode requires a single IN/= predicate on k, got: " +
+        "equality delete requires a single IN/= predicate on k, got: " +
           filters.mkString(", "))
     }
     val sorted = keys.distinct.sorted
@@ -2480,25 +2483,8 @@ object StoreSink {
       def live() = readEntries(root, fs(root))
         .map(e => math.max(e.rows, 0L)).sum
       val before = live()
-      // the policy delete pins its OWN mode: under an ambient
-      // equality-delete scope the manifest row counts become upper
-      // bounds and the (dropped, kept) audit would silently lie — a
-      // maintenance tick must not change meaning with session conf
-      val sc = org.apache.spark.sql.internal.SQLConf.get
-      val modeKey = "spark.graft.store.delete.mode"
-      // remember whether the key was SET: restoring a previously-unset
-      // key as an explicit 'auto' is harmless semantically but observable
-      // session-conf pollution (advice catch) — unset it back instead
-      val prev = if (sc.contains(modeKey)) Some(sc.getConfString(modeKey))
-                 else None
-      sc.setConfString(modeKey, "auto")
-      try
-        new StoreTable(pathStr).deleteWhere(Array[org.apache.spark.sql.sources.Filter](
-          org.apache.spark.sql.sources.LessThan(p(0), p(1).toLong)))
-      finally prev match {
-        case Some(old) => sc.setConfString(modeKey, old)
-        case None => sc.unsetConf(modeKey)
-      }
+      new StoreTable(pathStr).deleteWhere(Array[org.apache.spark.sql.sources.Filter](
+        org.apache.spark.sql.sources.LessThan(p(0), p(1).toLong)))
       val after = live()
       out += (("ttl", "ok", before - after, after, 0L))
     }
@@ -4292,7 +4278,7 @@ private class StoreTable(pathStr: String, version: Option[Int] = None,
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder = {
     requireCurrent("row-level operation")
-    // MERGE-ON-READ twin (scoped conf, mirrors the delete-mode knob): the
+    // MERGE-ON-READ twin (scoped conf `rowlevel.mode=delta`): the
     // SupportsDelta protocol executes the same statements as per-row
     // deltas — deleted/updated row ids become equality-delete sidecars,
     // inserts append — so a MERGE rewrites ZERO data files
@@ -4383,15 +4369,6 @@ private class StoreTable(pathStr: String, version: Option[Int] = None,
     requireCurrent("delete")
     require(filters.forall(StoreSink.canEvaluate),
       s"untranslatable delete predicate: ${filters.mkString(", ")}")
-    // EQUALITY-delete mode (scoped conf): metadata-only keyed delete —
-    // zone-matched files get a key sidecar, zero data files read or
-    // written (the streaming-retraction / cold-table GDPR shape)
-    val mode = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.store.delete.mode", "auto")
-    if (mode == "equality") {
-      StoreSink.equalityDelete(pathStr, filters)
-      return
-    }
     // OPTIMISTIC RETRY (the Iceberg commit model): the data rewrite runs
     // OUTSIDE the lock, so a concurrent rewrite of one of our input files
     // surfaces at publish as a conflict. Instead of failing the statement,

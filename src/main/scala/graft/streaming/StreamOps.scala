@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.UUID
 
 import graft.Tables
+import graft.GraftSession.withConf
 import graft.ops.OpModule
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -50,7 +51,8 @@ object StreamOps extends OpModule {
         .as[Ev].collect().toSeq
     })
 
-  /** Stateful streaming parallelism: the number of state-store instances per
+  /** Stateful streaming parallelism, scoped around each stream run: the
+    * number of state-store instances per
     * stateful operator is frozen to `spark.sql.shuffle.partitions` at query
     * START (it is baked into the checkpoint), so it must be sized to the
     * stream's key cardinality and per-batch volume — NOT inherited from the
@@ -60,30 +62,17 @@ object StreamOps extends OpModule {
     * transforms picks this per-query number the same way (keys × state row
     * size / target store size), just with a larger answer.
     *
-    * Default is 4 (was 8): a stream-stream join commits 4 state stores per
+    * 4 (was 8): a stream-stream join commits 4 state stores per
     * partition per micro-batch, so the flush-batch fixed cost scales with
     * partitions — measured on s_join_outer at sf0.1: 8 parts 3.4 s, 4 parts
-    * 2.5 s, 2 parts 2.5 s (s_tumble_wm 1.8 → 1.4 s). RocksDB
-    * (SPARK_GRAFT_STREAM_ROCKSDB=1) was measured SLOWER here (3.6 s): its
-    * native-store fixed cost only pays off when state outgrows the heap —
-    * that is the production knob at real volume, not at harness scale. */
-  private def withStreamParallelism[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    // getOption on a registered SQL conf always yields its default, so a
-    // plain get + set round-trip is the whole restore story
-    val prev = s.conf.get(key)
-    val prevProv = s.conf.get(provKey)
-    s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-    if (sys.env.get("SPARK_GRAFT_STREAM_ROCKSDB").contains("1"))
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally {
-      s.conf.set(key, prev)
-      // restore, don't leak: sibling queries must keep the session default
-      s.conf.set(provKey, prevProv)
-    }
-  }
+    * 2.5 s, 2 parts 2.5 s (s_tumble_wm 1.8 → 1.4 s). The RocksDB state
+    * store was measured SLOWER here (3.6 s): its native-store fixed cost
+    * only pays off when state outgrows the heap. */
+  private val StreamParts = "spark.sql.shuffle.partitions" -> "4"
+
+  /** transformWithState needs the multi-column-family (RocksDB) provider. */
+  private val RocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Stream the events parquet through `transform` via the FILE source —
     * the production-shaped feed for single-batch ops: executors read the
@@ -104,7 +93,7 @@ object StreamOps extends OpModule {
       .option("pathGlobFilter", glob)
       .parquet(dir)
     val name = "s_" + UUID.randomUUID.toString.replace("-", "")
-    withStreamParallelism(s) {
+    withConf(s)(StreamParts) {
       val q = transform(raw)
         .writeStream
         .format("memory")
@@ -159,7 +148,7 @@ object StreamOps extends OpModule {
       normTs(s.readStream.schema(schema).option("pathGlobFilter", glob)
         .parquet(dir)).as[Ev]
     val name = "s_" + UUID.randomUUID.toString.replace("-", "")
-    withStreamParallelism(s) {
+    withConf(s)(StreamParts) {
       val q = transform(feed(), feed())
         .writeStream
         .format("memory")
@@ -183,7 +172,7 @@ object StreamOps extends OpModule {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val mem = MemoryStream[Ev]
     val name = "s_" + UUID.randomUUID.toString.replace("-", "")
-    withStreamParallelism(s) {
+    withConf(s)(StreamParts) {
       val q = transform(mem.toDS())
         .writeStream
         .format("memory")
@@ -208,7 +197,7 @@ object StreamOps extends OpModule {
     val mem = MemoryStream[Ev]
     mem.addData(rows)
     val name = "s_" + UUID.randomUUID.toString.replace("-", "")
-    withStreamParallelism(s) {
+    withConf(s)(StreamParts) {
       val q = transform(mem.toDS())
         .writeStream
         .format("memory")
@@ -511,15 +500,8 @@ object StreamOps extends OpModule {
     * StreamOpsSpec pins the exact timer-vs-watermark boundary semantics the
     * s_tws_timers oracle encodes. */
   private[graft] def probeChunks(s: SparkSession, chunks: Seq[Seq[Ev]]): DataFrame = {
-    // transformWithState needs the multi-column-family (RocksDB) provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runStreamChunks(s, chunks, OutputMode.Append())(sessionTimerTransform)
-    finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None    => s.conf.unset(key)
+    withConf(s)(RocksDbState) {
+      runStreamChunks(s, chunks, OutputMode.Append())(sessionTimerTransform)
     }
   }
 
@@ -560,7 +542,7 @@ object StreamOps extends OpModule {
     @volatile var stateVersion = -1L
     def statePath(v: Long) = s"$base/state_$v"
     val mem = MemoryStream[Ev]
-    withStreamParallelism(s) {
+    withConf(s)(StreamParts) {
       val q = mem.toDS().writeStream
         .foreachBatch { (batch: Dataset[Ev], batchId: Long) =>
           val bs = lastPerUser(batch.select(col("user_id"), col("ts"), col("event_id"), col("value")))
@@ -616,16 +598,9 @@ object StreamOps extends OpModule {
     // transformWithState requires the RocksDB state store provider; scope
     // the conf so sibling streaming queries keep the session default.
     "s_tws_running" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try
+      withConf(s)(RocksDbState) {
         runStreamFile(s, d, OutputMode.Append())(purchasesSinceErrorTransform)
           .orderBy(col("user_id"), col("event_id"))
-      finally prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
       }
     }),
 
@@ -638,16 +613,9 @@ object StreamOps extends OpModule {
     // min past each chunk's max ts, so no feed row is ever late (the
     // late-DROP path is s_late_drop's).
     "s_tws_timers" -> ((s, d) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withConf(s)(RocksDbState) {
         runStreamChunks(s, chunkEvents(s, d), OutputMode.Append())(sessionTimerTransform)
           .orderBy(col("user_id"), col("sess_start"))
-      } finally prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
       }
     }),
 
@@ -693,7 +661,7 @@ object StreamOps extends OpModule {
         minDayMs(loadEvents(s, d)) + 15L * 86400000L + 1800000L)
       def land(cond: org.apache.spark.sql.Column): Unit =
         ev.where(cond).write.mode("append").parquet(feed)
-      def runOnce(): Unit = withStreamParallelism(s) {
+      def runOnce(): Unit = withConf(s)(StreamParts) {
         val schema = s.read.parquet(feed).schema
         val src = s.readStream.schema(schema).parquet(feed)
         val q = tumbleTransform(normTs(src).as[Ev])
@@ -718,7 +686,7 @@ object StreamOps extends OpModule {
       val raw = s.readStream.schema(schema).option("pathGlobFilter", glob)
         .parquet(dir)
       val name = "s_" + UUID.randomUUID.toString.replace("-", "")
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val q = tumbleTransform(normTs(raw).as[Ev])
           .writeStream
           .format("memory")
@@ -929,7 +897,7 @@ object StreamOps extends OpModule {
       val novelPerBatch = scala.collection.mutable.ArrayBuffer[Long]()
       val idxPath = new org.apache.hadoop.fs.Path(idx)
       val schema = s.read.parquet(feed).schema
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(feed)
           .writeStream
@@ -993,7 +961,7 @@ object StreamOps extends OpModule {
           .write.format("graft.sources.StoreSink").mode("append")
           .option("path", src).save()
       land(pmod(col("k"), lit(2)) === 0)
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val q = s.readStream.format("graft.sources.StoreSink")
           .option("path", src).load()
           // stateless curation: drop one segment, derive a fee column
@@ -1047,10 +1015,8 @@ object StreamOps extends OpModule {
       val feed = s"$base/feed"; val src = s"$base/src"
       val idx = s"$base/idx"; val chk = s"$base/chk"
       fsys.delete(new org.apache.hadoop.fs.Path(base), true)
-      graft.sources.Sources.withGraftCatalog(s) {
-        graft.sources.Sources.withStorePath(s, src) {
-          s.sql("ALTER TABLE graft.store ADD COLUMN emb STRING")
-        }
+      graft.sources.Sources.withStorePath(s, src) {
+        s.sql("ALTER TABLE graft.store ADD COLUMN emb STRING")
       }
       val vecs = Tables.embeddings(s, d).select(col("vec_id").as("k"),
           lit("e").as("grp"), lit(0L).as("amt_cents"),
@@ -1058,7 +1024,7 @@ object StreamOps extends OpModule {
       def land(cond: org.apache.spark.sql.Column): Unit =
         vecs.where(cond).coalesce(1).write.mode("append").parquet(feed)
       land(pmod(col("k"), lit(3)) =!= 0) // epoch 1: the initial corpus
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val schema = s.read.parquet(feed).schema
         val q = s.readStream.schema(schema).parquet(feed)
           .writeStream.format("graft.sources.StoreSink")
@@ -1138,7 +1104,7 @@ object StreamOps extends OpModule {
       land(0)
       val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
       @volatile var stateless = false
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val schema = s.read.parquet(feed).schema
         val q = s.readStream.schema(schema).parquet(feed)
           .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1222,7 +1188,7 @@ object StreamOps extends OpModule {
       land(0)
       val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
       @volatile var stateless = false
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val schema = s.read.parquet(feed).schema
         val q = s.readStream.schema(schema).parquet(feed)
           .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1305,7 +1271,7 @@ object StreamOps extends OpModule {
       land(0)
       val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
       @volatile var stateless = false
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val schema = s.read.parquet(feed).schema
         val q = s.readStream.schema(schema).parquet(feed)
           .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1384,7 +1350,7 @@ object StreamOps extends OpModule {
       land(0)
       val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
       @volatile var stateless = false
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val schema = s.read.parquet(feed).schema
         val q = s.readStream.schema(schema).parquet(feed)
           .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1513,7 +1479,7 @@ object StreamOps extends OpModule {
       val median = ev.agg(expr("percentile(event_id, 0.5D)")).collect()(0).getDouble(0)
       def land(cond: org.apache.spark.sql.Column): Unit =
         ev.where(cond).write.mode("append").parquet(feed)
-      def runOnce(): Unit = withStreamParallelism(s) {
+      def runOnce(): Unit = withConf(s)(StreamParts) {
         val schema = s.read.parquet(feed).schema
         val q = s.readStream.schema(schema).parquet(feed)
           .dropDuplicates("event_id")
@@ -1655,7 +1621,7 @@ object StreamOps extends OpModule {
       val feedId = s"s_src_dsv2_${java.lang.Integer.toHexString(d.hashCode)}"
       graft.sources.RangeSource.resetFeed(feedId) // deterministic arrival replay
       val name = "s_" + UUID.randomUUID.toString.replace("-", "")
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val q = s.readStream.format("graft.sources.RangeSource")
           .option("start", "0").option("end", "200000")
           .option("feedId", feedId).option("chunkRows", "50000")
@@ -1685,7 +1651,7 @@ object StreamOps extends OpModule {
       val feedId = s"s_src_dsv2_avail_${java.lang.Integer.toHexString(d.hashCode)}"
       graft.sources.RangeSource.resetFeed(feedId)
       val name = "s_" + UUID.randomUUID.toString.replace("-", "")
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val q = s.readStream.format("graft.sources.RangeSource")
           .option("start", "0").option("end", "200000")
           .option("feedId", feedId)
@@ -1725,7 +1691,7 @@ object StreamOps extends OpModule {
         .repartition(3)
         .write.mode("overwrite").parquet(feed)
       val schema = s.read.parquet(feed).schema
-      def runOnce(): Unit = withStreamParallelism(s) {
+      def runOnce(): Unit = withConf(s)(StreamParts) {
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(feed)
           .writeStream.format("graft.sources.StoreSink")
@@ -1768,7 +1734,7 @@ object StreamOps extends OpModule {
           .mode(mode).option("path", path).save()
       land(col("k") % 2 === 0, "overwrite")
       val name = "s_" + UUID.randomUUID.toString.replace("-", "")
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val q = s.readStream.format("graft.sources.StoreSink")
           .option("path", path).load()
           .groupBy(col("grp"))
@@ -1810,42 +1776,38 @@ object StreamOps extends OpModule {
         .option("path", path).save() // v1
       val maxK = base.agg(max(col("k"))).collect()(0).getLong(0)
       val name = "s_" + UUID.randomUUID.toString.replace("-", "")
-      graft.sources.Sources.withGraftCatalog(s) {
-        graft.sources.Sources.withStorePath(s, path) {
-          withStreamParallelism(s) {
-            val q = s.readStream.format("graft.sources.StoreSink")
-              .option("path", path).option("changeFeed", "true")
-              .option("startingVersion", "1").load()
-              .groupBy(col("op"), col("cv"), col("grp"))
-              .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-              .writeStream.format("memory").queryName(name)
-              .outputMode(OutputMode.Complete())
-              .option("checkpointLocation", s"target/tmp/chk_$name")
-              .start()
-            try {
-              q.processAllAvailable() // head = v1: nothing to emit yet
-              // v2: keyed retraction through the DELTA protocol — equality
-              // sidecars on existing entries, zero rewrites
-              base.where(pmod(col("k"), lit(89)) === 0).select(col("k"))
-                .createOrReplaceTempView(s"cdf_dels_$name")
-              s.conf.set("spark.graft.store.rowlevel.mode", "delta")
-              try s.sql(s"MERGE INTO graft.store t USING cdf_dels_$name s " +
-                        "ON t.k = s.k WHEN MATCHED THEN DELETE")
-              finally s.conf.unset("spark.graft.store.rowlevel.mode")
-              q.processAllAvailable() // eq-delta deletes only
-              base.where(pmod(col("k"), lit(101)) === 0)
-                .select((col("k") + maxK + 1).as("k"), lit("NEW").as("grp"),
-                        (col("k") * 10 + 5000000).as("amt_cents"))
-                .write.format("graft.sources.StoreSink").mode("append")
-                .option("path", path).save() // v3
-              q.processAllAvailable() // inserts
-              // v4: a ~4%-selective TRANSLATABLE range delete → deletion
-              // vectors (merge-on-read), zero rewrites
-              s.sql("DELETE FROM graft.store WHERE amt_cents < 2000000") // v4
-              q.processAllAvailable() // dv-delta deletes only
-            } finally q.stop()
+      withConf(s)(graft.sources.GraftCatalog.StorePathKey -> path, StreamParts) {
+        val q = s.readStream.format("graft.sources.StoreSink")
+          .option("path", path).option("changeFeed", "true")
+          .option("startingVersion", "1").load()
+          .groupBy(col("op"), col("cv"), col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
+          .writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Complete())
+          .option("checkpointLocation", s"target/tmp/chk_$name")
+          .start()
+        try {
+          q.processAllAvailable() // head = v1: nothing to emit yet
+          // v2: keyed retraction through the DELTA protocol — equality
+          // sidecars on existing entries, zero rewrites
+          base.where(pmod(col("k"), lit(89)) === 0).select(col("k"))
+            .createOrReplaceTempView(s"cdf_dels_$name")
+          withConf(s)("spark.graft.store.rowlevel.mode" -> "delta") {
+            s.sql(s"MERGE INTO graft.store t USING cdf_dels_$name s " +
+                  "ON t.k = s.k WHEN MATCHED THEN DELETE")
           }
-        }
+          q.processAllAvailable() // eq-delta deletes only
+          base.where(pmod(col("k"), lit(101)) === 0)
+            .select((col("k") + maxK + 1).as("k"), lit("NEW").as("grp"),
+                    (col("k") * 10 + 5000000).as("amt_cents"))
+            .write.format("graft.sources.StoreSink").mode("append")
+            .option("path", path).save() // v3
+          q.processAllAvailable() // inserts
+          // v4: a ~4%-selective TRANSLATABLE range delete → deletion
+          // vectors (merge-on-read), zero rewrites
+          s.sql("DELETE FROM graft.store WHERE amt_cents < 2000000") // v4
+          q.processAllAvailable() // dv-delta deletes only
+        } finally q.stop()
       }
       s.table(name).orderBy(col("cv"), col("op"), col("grp"))
     }),
@@ -1875,7 +1837,7 @@ object StreamOps extends OpModule {
       val chk = s"target/tmp/chk_avail_$tag"
       // store→store relay (the memory sink cannot resume a checkpoint;
       // the graft sink's epoch ledger can — exactly the production shape)
-      def drain(): Unit = withStreamParallelism(s) {
+      def drain(): Unit = withConf(s)(StreamParts) {
         val q = s.readStream.format("graft.sources.StoreSink")
           .option("path", path).load()
           .writeStream.format("graft.sources.StoreSink")
@@ -1935,7 +1897,7 @@ object StreamOps extends OpModule {
         .option("path", path).save()
       val mark = graft.sources.StoreSink.tailPlans.size()
       val tag = UUID.randomUUID.toString.replace("-", "")
-      withStreamParallelism(s) {
+      withConf(s)(StreamParts) {
         val q = s.readStream.format("graft.sources.StoreSink")
           .option("path", path).option("maxFilesPerTrigger", "3").load()
           .writeStream.format("graft.sources.StoreSink")

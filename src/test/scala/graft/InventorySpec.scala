@@ -47,4 +47,25 @@ class InventorySpec extends AnyFunSuite {
       s"shadowed Map keys (definitions beyond query+oracle): " +
         offenders.sorted.mkString("; "))
   }
+
+  test("session conf is set and sessions are built only in GraftSession") {
+    // a query that flips a session switch changes every job that runs on
+    // the session meanwhile; the one scoped helper and the one builder
+    // live in GraftSession.scala, and nothing else may do either
+    val banned = Seq("conf.set(", "conf.unset(", "setConfString", "unsetConf",
+      "SparkSession.builder")
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      for {
+        p <- walk.iterator().asScala.toSeq
+        if p.toString.endsWith(".scala") && p.getFileName.toString != "GraftSession.scala"
+        (line, i) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+        b <- banned
+        if line.contains(b)
+      } yield s"$p:${i + 1}: $b"
+    } finally walk.close()
+    assert(offenders.isEmpty,
+      s"session conf mutation outside GraftSession: ${offenders.mkString("; ")}")
+  }
 }

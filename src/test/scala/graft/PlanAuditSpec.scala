@@ -244,7 +244,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_runtime_filter: Catalyst injects a bloom might_contain on the fact side") {
-    graft.ops.ScaleOps.withRuntimeFilterConfs(spark) {
+    GraftSession.withConf(spark)(graft.ops.ScaleOps.rfConfs: _*) {
       val p = graft.ops.ScaleOps.runtimeFilterJoin(spark, sf)
         .queryExecution.optimizedPlan.toString
       assert(p.contains("might_contain") && p.contains("bloom_filter_agg"),

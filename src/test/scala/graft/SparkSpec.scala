@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session fixture mirroring Verify.scala's session exactly (same
-  * shuffle partitions / timezone / nanos conf) so tests see what the driver's
-  * correctness gate sees. One session per forked test JVM. */
+/** Shared session fixture: the same [[GraftSession.build]] session Verify
+  * runs on, so tests see what the DuckDB correctness gate sees. One
+  * session per forked test JVM. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   /** Unit tests run at the smallest SF; the driver gate runs sf0.01. */
@@ -13,17 +13,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.build("4")
 }

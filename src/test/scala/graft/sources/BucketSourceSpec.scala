@@ -19,17 +19,10 @@ class BucketSourceSpec extends SparkSpec {
     a.join(b, "grp") // no agg/sort on top: the join subplan is the subject
   }
 
-  private def withConfs[T](on: Boolean)(body: => T): T = {
-    val confs = Map(
+  private def withConfs[T](on: Boolean)(body: => T): T =
+    graft.GraftSession.withConf(spark)(
       "spark.sql.sources.v2.bucketing.enabled" -> on.toString,
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   test("reported KeyGroupedPartitioning plans the join with ZERO exchanges") {
     withConfs(on = true) {

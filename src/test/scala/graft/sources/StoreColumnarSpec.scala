@@ -40,13 +40,11 @@ class StoreColumnarSpec extends SparkSpec {
     spark.read.format(fmt).option("path", dir).load()
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
 
-  /** Run `body` with graft.store bound to `dir` (catalog + path confs). */
+  /** Run `body` with graft.store bound to `dir`. */
   private def withStore[T](dir: String)(body: => T): T = {
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try body
-    finally { spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey) }
+    finally spark.conf.unset(GraftCatalog.StorePathKey)
   }
 
   private def isColumnar(dir: String, name: String): Boolean = {
@@ -114,10 +112,8 @@ class StoreColumnarSpec extends SparkSpec {
       assert(entries1.exists(_.dv.isDefined), "expected a dv sidecar")
       assert(readBack(dir).map(_._1) == ((1L to 500L).toSet -- Set(3L, 7L)))
       // equality delete (metadata-only) masks by key through the key block
-      val modeKey = "spark.graft.store.delete.mode"
-      spark.conf.set(modeKey, "equality")
-      try spark.sql("DELETE FROM graft.store WHERE k in (10, 11)")
-      finally spark.conf.unset(modeKey)
+      StoreSink.equalityDelete(dir, Array[org.apache.spark.sql.sources.Filter](
+        org.apache.spark.sql.sources.In("k", Array[Any](10L, 11L))))
       assert(StoreSink.readEntries(new Path(dir), fs).exists(_.eq.isDefined))
       // a projection NOT containing k still applies the key mask (the key
       // block joins the read set)
@@ -195,15 +191,11 @@ class StoreColumnarSpec extends SparkSpec {
        "store with MIXED text+columnar bucket files") {
     val ctas = s"target/tmp/storecol_spec_spj"
     fs.delete(new Path(ctas), true)
-    val confs = Seq(
-      "spark.sql.catalog.graft" -> "graft.sources.GraftCatalog",
-      GraftCatalog.CtasDirKey -> ctas,
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.GraftSession.withConf(spark)(
+        GraftCatalog.CtasDirKey -> ctas,
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       spark.sql("DROP TABLE IF EXISTS graft.colspj_a")
       spark.sql("DROP TABLE IF EXISTS graft.colspj_b")
       import spark.implicits._
@@ -235,9 +227,6 @@ class StoreColumnarSpec extends SparkSpec {
       assert(rows.map(r => r.getLong(1) * 2 == r.getLong(2)).forall(identity))
       spark.sql("DROP TABLE graft.colspj_a")
       spark.sql("DROP TABLE graft.colspj_b")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.GraftSession.withConf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -26,15 +27,6 @@ class StorePartSpec extends SparkSpec {
     val dir = s"target/tmp/storepart_spec_$name"
     fs.delete(new Path(dir), true)
     dir
-  }
-
-  private def withConfs[T](pairs: (String, String)*)(body: => T): T = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
   }
 
   test("identity partitioning: dirs, manifest values, exact pruning, sticky spec") {
@@ -76,8 +68,7 @@ class StorePartSpec extends SparkSpec {
 
   test("bucket partitioning: SPJ joins two stores on k with zero exchanges") {
     val ctas = freshDir("ctas")
-    withConfs(
-      "spark.sql.catalog.graft" -> classOf[GraftCatalog].getName,
+    withConf(spark)(
       GraftCatalog.CtasDirKey -> ctas,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -120,9 +111,7 @@ class StorePartSpec extends SparkSpec {
 
   test("partition DDL: SHOW PARTITIONS lists manifest values; DROP/TRUNCATE are metadata ops") {
     val ctas = freshDir("pmddl")
-    withConfs(
-      "spark.sql.catalog.graft" -> classOf[GraftCatalog].getName,
-      GraftCatalog.CtasDirKey -> ctas) {
+    withConf(spark)(GraftCatalog.CtasDirKey -> ctas) {
       spark.sql("DROP TABLE IF EXISTS graft.pm")
       df(1 to 90, k => "g" + (k % 3)).createOrReplaceTempView("pm_src")
       spark.sql("CREATE TABLE graft.pm PARTITIONED BY (grp) AS SELECT * FROM pm_src")
@@ -224,7 +213,7 @@ class StorePartSpec extends SparkSpec {
     assert(e1.getMessage.contains("retired partition spec"))
     // SPJ: the mixed table withdraws its partitioning report — a co-
     // bucketed join re-plans WITH exchanges instead of mis-grouping
-    withConfs(
+    withConf(spark)(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
@@ -293,21 +282,19 @@ class StorePartSpec extends SparkSpec {
       s"k IN (bucket-2 keys) should plan only bucket 2's files, planned ($cand, $kept)")
     // bulk COW delete keeps the rewritten file in its partition dir
     spark.conf.set(GraftCatalog.StorePathKey, dir)
-    withConfs("spark.sql.catalog.graft" -> classOf[GraftCatalog].getName) {
-      spark.sql("DELETE FROM graft.store WHERE k <= 40")
-      val after = StoreSink.readEntries(root, fs)
-      assert(after.forall(e => e.part.isDefined &&
-        e.name.startsWith(s"k_bucket=${e.part.get}/")), after.toString)
-      assert(spark.table("graft.store").count() == 40)
-      // vacuum GCs the replaced generation INSIDE partition dirs
-      StoreSink.vacuum(dir, 1)
-      val live = StoreSink.listDataFiles(root, fs).toSet
-      val referenced = StoreSink.readEntries(root, fs)
-        .flatMap(e => e.name +: e.dv.toSeq).toSet
-      assert(live == referenced,
-        s"vacuum missed partition-dir files: live=$live referenced=$referenced")
-      assert(spark.table("graft.store").count() == 40)
-    }
+    spark.sql("DELETE FROM graft.store WHERE k <= 40")
+    val after = StoreSink.readEntries(root, fs)
+    assert(after.forall(e => e.part.isDefined &&
+      e.name.startsWith(s"k_bucket=${e.part.get}/")), after.toString)
+    assert(spark.table("graft.store").count() == 40)
+    // vacuum GCs the replaced generation INSIDE partition dirs
+    StoreSink.vacuum(dir, 1)
+    val live = StoreSink.listDataFiles(root, fs).toSet
+    val referenced = StoreSink.readEntries(root, fs)
+      .flatMap(e => e.name +: e.dv.toSeq).toSet
+    assert(live == referenced,
+      s"vacuum missed partition-dir files: live=$live referenced=$referenced")
+    assert(spark.table("graft.store").count() == 40)
   }
 
   test("dynamic partition overwrite: touched partitions swap, others survive by name") {
@@ -319,9 +306,8 @@ class StorePartSpec extends SparkSpec {
     val root = new Path(dir)
     val before = StoreSink.readEntries(root, fs)
     val keepNames = before.filterNot(_.part.contains("g1")).map(_.name).toSet
-    withConfs("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+    withConf(spark)("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       spark.conf.set(GraftCatalog.StorePathKey, dir)
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       try {
         // reload only g1 with doubled amounts
         df(1 to 90, k => "g" + (k % 3)).where(col("grp") === "g1")
@@ -347,7 +333,6 @@ class StorePartSpec extends SparkSpec {
         assert(t.count() == 90)
       } finally {
         spark.conf.unset(GraftCatalog.StorePathKey)
-        spark.conf.unset("spark.sql.catalog.graft")
       }
     }
     // STATIC contrast: a plain overwrite replaces everything
@@ -364,7 +349,6 @@ class StorePartSpec extends SparkSpec {
       .option("path", dir).option("partitionedBy", "identity:grp").save()
     val root = new Path(dir)
     spark.conf.set(GraftCatalog.StorePathKey, dir)
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     try {
       val versionsBefore = StoreSink.listVersions(root, fs).size
       // a drop list naming a MISSING partition drops nothing
@@ -382,15 +366,13 @@ class StorePartSpec extends SparkSpec {
       assert(left.select("grp").distinct().collect().map(_.getString(0)).toSeq == Seq("g1"))
     } finally {
       spark.conf.unset(GraftCatalog.StorePathKey)
-      spark.conf.unset("spark.sql.catalog.graft")
     }
   }
 
   test("delta MERGE on a bucketed store: masks + routed appends keep the " +
        "storage-partitioned join exchange-free") {
     val ctas = freshDir("ctasdelta")
-    withConfs(
-      "spark.sql.catalog.graft" -> classOf[GraftCatalog].getName,
+    withConf(spark)(
       GraftCatalog.CtasDirKey -> ctas,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",

@@ -186,8 +186,6 @@ class StoreSinkSpec extends SparkSpec {
     val dir = freshDir("rowlevel")
     df(1 to 30, "a").write.format(fmt).mode("overwrite").option("path", dir).save()
     val genOne = StoreSink.readManifest(new Path(dir), fs)
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
       spark.sql("UPDATE graft.store SET amt_cents = amt_cents + 1 WHERE k <= 10")
@@ -212,7 +210,6 @@ class StoreSinkSpec extends SparkSpec {
       assert(got.size == 30)
     } finally {
       spark.catalog.dropTempView("spec_cdc")
-      spark.conf.unset(ckey)
       spark.conf.unset(GraftCatalog.StorePathKey)
     }
   }
@@ -290,8 +287,6 @@ class StoreSinkSpec extends SparkSpec {
     df(1 to 40, "a").repartition(1).write.format(fmt).mode("overwrite").option("path", dir).save()
     df(1000 to 1040, "b").repartition(1).write.format(fmt).mode("append").option("path", dir).save()
     val before = StoreSink.readManifest(new Path(dir), fs)
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
       // CDC touches only the low-range file's zone
@@ -308,7 +303,6 @@ class StoreSinkSpec extends SparkSpec {
       assert(got.count(_._2 == "b") == 41, "untouched zone mutated")
     } finally {
       spark.catalog.dropTempView("spec_zone_cdc")
-      spark.conf.unset(ckey)
       spark.conf.unset(GraftCatalog.StorePathKey)
     }
   }
@@ -363,11 +357,9 @@ class StoreSinkSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 20)
     // rewrite a consumed file in place: SupportsDelete's COW swaps the
     // matching file for its filtered sibling — same entry count
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, store)
     try spark.sql("DELETE FROM graft.store WHERE k = 1")
-    finally { spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey) }
+    finally spark.conf.unset(GraftCatalog.StorePathKey)
     // new arrivals give the resumed tail a window to plan — it must refuse
     df(21 to 25, "b").write.format(fmt).mode("append").option("path", store).save()
     val ex = intercept[Exception] { run() }
@@ -385,8 +377,6 @@ class StoreSinkSpec extends SparkSpec {
     val root = new Path(dir)
     assert(StoreSink.listVersions(root, fs) == Seq(1, 2, 3))
 
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
       assert(spark.sql("SELECT COUNT(*) FROM graft.store VERSION AS OF 1")
@@ -411,7 +401,6 @@ class StoreSinkSpec extends SparkSpec {
       assert(onDisk == live, s"vacuum left unreferenced files: ${onDisk.diff(live)}")
       assert(spark.sql("SELECT COUNT(*) FROM graft.store").collect()(0).getLong(0) == 5)
     } finally {
-      spark.conf.unset(ckey)
       spark.conf.unset(GraftCatalog.StorePathKey)
     }
   }
@@ -451,11 +440,9 @@ class StoreSinkSpec extends SparkSpec {
 
     // COW delete of one key invalidates exactly its containing segment:
     // the other 3 original pointers survive verbatim
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try spark.sql("DELETE FROM graft.store WHERE k = 5000")
-    finally { spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey) }
+    finally spark.conf.unset(GraftCatalog.StorePathKey)
     val segs3 = segsOf(listLines())
     assert(segs1.intersect(segs3).size == 3,
       s"a one-file COW must reseal exactly one segment: before=$segs1 after=$segs3")
@@ -493,15 +480,13 @@ class StoreSinkSpec extends SparkSpec {
       "executed plan must carry the metadata agg scan — no file partitions")
 
     // a pinned snapshot answers from ITS version's metadata
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
       StoreSink.lastAggPush = None
       assert(spark.sql("SELECT COUNT(*) FROM graft.store VERSION AS OF 1")
         .collect()(0).getLong(0) == 40)
       assert(StoreSink.lastAggPush.contains(Seq("count")))
-    } finally { spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey) }
+    } finally spark.conf.unset(GraftCatalog.StorePathKey)
 
     // residual filters make metadata unsafe: decline, fall back, agree
     StoreSink.lastAggPush = None
@@ -548,11 +533,9 @@ class StoreSinkSpec extends SparkSpec {
         s"columnar=$columnar: _pos must be the physical ordinal")
       // MoR delete: survivors keep their PHYSICAL positions (holes, not
       // renumbering — the ordinal space dv masks address)
-      val ckey = "spark.sql.catalog.graft"
-      spark.conf.set(ckey, "graft.sources.GraftCatalog")
       spark.conf.set(GraftCatalog.StorePathKey, dir)
       try spark.sql("DELETE FROM graft.store WHERE k = 7")
-      finally { spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey) }
+      finally spark.conf.unset(GraftCatalog.StorePathKey)
       val after = t().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(!after.exists(_._1 == 7L) && after.forall(p => p._1 == p._2),
         s"columnar=$columnar: _pos must not renumber under a dv delete")
@@ -718,10 +701,8 @@ class StoreSinkSpec extends SparkSpec {
   }
 
   private def eqDel(dir: String, ks: Seq[Long]): Unit = {
-    spark.conf.set("spark.graft.store.delete.mode", "equality")
-    try new StoreTable(dir).deleteWhere(Array[org.apache.spark.sql.sources.Filter](
+    StoreSink.equalityDelete(dir, Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("k", ks.map(k => k: java.lang.Long).toArray)))
-    finally spark.conf.unset("spark.graft.store.delete.mode")
   }
 
   test("equality delete: keyed retraction touches zero data files, reads none") {
@@ -1116,8 +1097,6 @@ class StoreSinkSpec extends SparkSpec {
     df(1 to 50, "a").repartition(1)
       .write.format(fmt).mode("overwrite").option("path", dir).save()
     val oldFile = StoreSink.readManifest(new Path(dir), fs).head
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
       spark.sql("ALTER TABLE graft.store ADD COLUMN note STRING")
@@ -1148,7 +1127,7 @@ class StoreSinkSpec extends SparkSpec {
         spark.sql("ALTER TABLE graft.store ADD COLUMN early STRING FIRST")
       }
     } finally {
-      spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey)
+      spark.conf.unset(GraftCatalog.StorePathKey)
     }
   }
 
@@ -1157,8 +1136,6 @@ class StoreSinkSpec extends SparkSpec {
     import spark.implicits._
     val dir = freshDir("zonemulti")
     val root = new Path(dir)
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
       spark.sql("ALTER TABLE graft.store ADD COLUMN fee BIGINT")
@@ -1216,7 +1193,7 @@ class StoreSinkSpec extends SparkSpec {
       assert(statsCol.nonEmpty && statsCol.forall(_.startsWith("fee:")),
         s"store\\$$files must surface declared stats: ${statsCol.toSeq}")
     } finally {
-      spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey)
+      spark.conf.unset(GraftCatalog.StorePathKey)
     }
   }
 
@@ -1224,8 +1201,6 @@ class StoreSinkSpec extends SparkSpec {
        "three columns prune planning") {
     import spark.implicits._
     val dir = freshDir("zorderby")
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
       spark.sql("ALTER TABLE graft.store ADD COLUMN fee BIGINT")
@@ -1271,7 +1246,7 @@ class StoreSinkSpec extends SparkSpec {
         spark.sql(s"CALL graft.zorder_by('$dir', 512, 'k')").collect()
       }
     } finally {
-      spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey)
+      spark.conf.unset(GraftCatalog.StorePathKey)
     }
   }
 
@@ -1282,8 +1257,6 @@ class StoreSinkSpec extends SparkSpec {
     val root = new Path(dir)
     df(1 to 40, "a").repartition(1)
       .write.format(fmt).mode("overwrite").option("path", dir).save() // v1
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
       spark.sql("ALTER TABLE graft.store ADD COLUMN note STRING")
@@ -1349,7 +1322,7 @@ class StoreSinkSpec extends SparkSpec {
       assert(StoreSink.tableSchema(dir).fieldNames.toSeq ==
         Seq("k", "grp", "amt_cents", "memo"))
     } finally {
-      spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey)
+      spark.conf.unset(GraftCatalog.StorePathKey)
     }
   }
 
@@ -1448,8 +1421,6 @@ class StoreSinkSpec extends SparkSpec {
     import spark.implicits._
     val dir = freshDir("strzone")
     val root = new Path(dir)
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
       spark.sql("ALTER TABLE graft.store ADD COLUMN tag STRING")
@@ -1509,7 +1480,7 @@ class StoreSinkSpec extends SparkSpec {
       assert(store.where(col("tag") === "").count() == 1)
       assert(store.count() == 401)
     } finally {
-      spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey)
+      spark.conf.unset(GraftCatalog.StorePathKey)
     }
   }
 
@@ -1628,8 +1599,6 @@ class StoreSinkSpec extends SparkSpec {
     import spark.implicits._
     val dir = freshDir("widen")
     val root = new Path(dir)
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
       spark.sql("ALTER TABLE graft.store ADD COLUMN fee INT")
@@ -1673,7 +1642,7 @@ class StoreSinkSpec extends SparkSpec {
         spark.sql("ALTER TABLE graft.store ALTER COLUMN amt_cents TYPE INT")
       }
     } finally {
-      spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey)
+      spark.conf.unset(GraftCatalog.StorePathKey)
     }
   }
 
@@ -1682,8 +1651,6 @@ class StoreSinkSpec extends SparkSpec {
     import spark.implicits._
     val dir = freshDir("statsevolve")
     val root = new Path(dir)
-    val ckey = "spark.sql.catalog.graft"
-    spark.conf.set(ckey, "graft.sources.GraftCatalog")
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
       spark.sql("ALTER TABLE graft.store ADD COLUMN fee BIGINT")
@@ -1752,7 +1719,7 @@ class StoreSinkSpec extends SparkSpec {
       // prefix bound prunes files that hold matching rows
       assert(store.where(col("tag") === "n00442").count() == 1)
     } finally {
-      spark.conf.unset(ckey); spark.conf.unset(GraftCatalog.StorePathKey)
+      spark.conf.unset(GraftCatalog.StorePathKey)
     }
   }
 
@@ -1765,28 +1732,26 @@ class StoreSinkSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    graft.sources.Sources.withGraftCatalog(spark) {
-      graft.sources.Sources.withStorePath(spark, dir) {
-        spark.conf.set("spark.graft.store.rowlevel.mode", "delta")
-        try {
-          val jobs = (1 to 8).map { i =>
-            Future {
-              import spark.implicits._
-              val v = s"delta_race_$i"
-              (((i - 1) * 10 + 1) to (i * 10))
-                .map(k => (k.toLong, s"u$i", i * 1000L))
-                .:+((1000L + i, s"n$i", i * 7L))
-                .toDF("k", "grp", "amt_cents").createOrReplaceTempView(v)
-              spark.sql(
-                s"""MERGE INTO graft.store t USING $v s ON t.k = s.k
-                   |WHEN MATCHED THEN UPDATE SET grp = s.grp, amt_cents = s.amt_cents
-                   |WHEN NOT MATCHED THEN INSERT (k, grp, amt_cents)
-                   |  VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
-            }
+    graft.sources.Sources.withStorePath(spark, dir) {
+      spark.conf.set("spark.graft.store.rowlevel.mode", "delta")
+      try {
+        val jobs = (1 to 8).map { i =>
+          Future {
+            import spark.implicits._
+            val v = s"delta_race_$i"
+            (((i - 1) * 10 + 1) to (i * 10))
+              .map(k => (k.toLong, s"u$i", i * 1000L))
+              .:+((1000L + i, s"n$i", i * 7L))
+              .toDF("k", "grp", "amt_cents").createOrReplaceTempView(v)
+            spark.sql(
+              s"""MERGE INTO graft.store t USING $v s ON t.k = s.k
+                 |WHEN MATCHED THEN UPDATE SET grp = s.grp, amt_cents = s.amt_cents
+                 |WHEN NOT MATCHED THEN INSERT (k, grp, amt_cents)
+                 |  VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
           }
-          Await.result(Future.sequence(jobs), 180.seconds)
-        } finally spark.conf.unset("spark.graft.store.rowlevel.mode")
-      }
+        }
+        Await.result(Future.sequence(jobs), 180.seconds)
+      } finally spark.conf.unset("spark.graft.store.rowlevel.mode")
     }
     val got = readBack(dir)
     val want = (1 to 80).map { k =>
@@ -1955,15 +1920,13 @@ class StoreSinkSpec extends SparkSpec {
     assert(r.getLong(0) == 0L && r.getLong(1) == 99L * 7L)
     // a deletion vector turns zones conservative: MIN/MAX must decline
     StoreSink.lastAggPush = None
-    graft.sources.Sources.withGraftCatalog(spark) {
-      graft.sources.Sources.withStorePath(spark, dir) {
-        spark.sql("DELETE FROM graft.store WHERE k = 7")
-        val r2 = spark.table("graft.store")
-          .agg(min(col("amt_cents")), max(col("amt_cents"))).collect()(0)
-        assert(StoreSink.lastAggPush.isEmpty,
-          "MIN/MAX pushdown must decline on a vectored entry")
-        assert(r2.getLong(0) == 0L && r2.getLong(1) == 99L * 7L)
-      }
+    graft.sources.Sources.withStorePath(spark, dir) {
+      spark.sql("DELETE FROM graft.store WHERE k = 7")
+      val r2 = spark.table("graft.store")
+        .agg(min(col("amt_cents")), max(col("amt_cents"))).collect()(0)
+      assert(StoreSink.lastAggPush.isEmpty,
+        "MIN/MAX pushdown must decline on a vectored entry")
+      assert(r2.getLong(0) == 0L && r2.getLong(1) == 99L * 7L)
     }
   }
 
@@ -1971,31 +1934,29 @@ class StoreSinkSpec extends SparkSpec {
     val dir = freshDir("limitpush")
     df(1 to 40, "a").repartitionByRange(4, col("k"))
       .write.format(fmt).mode("overwrite").option("path", dir).save()
-    graft.sources.Sources.withGraftCatalog(spark) {
-      graft.sources.Sources.withStorePath(spark, dir) {
-        // 4 files x 10 rows; LIMIT 15 needs exactly the first 2 files
-        StoreSink.lastLimitPlan = None
-        val n = spark.sql(
-          "SELECT COUNT(*) FROM (SELECT * FROM graft.store LIMIT 15)")
-          .collect()(0).getLong(0)
-        assert(n == 15)
-        assert(StoreSink.lastLimitPlan.contains((4, 2)),
-          s"expected a 2-file prefix plan, got ${StoreSink.lastLimitPlan}")
-        // an equality-masked store has upper-bound counts only: the cut
-        // must decline (full plan) and the limited count stays exact
-        spark.conf.set("spark.graft.store.rowlevel.mode", "delta")
-        try spark.sql("DELETE FROM graft.store WHERE k % 2 = 1")
-        finally spark.conf.unset("spark.graft.store.rowlevel.mode")
-        assert(StoreSink.readEntries(new Path(dir), fs).exists(_.eq.isDefined),
-          "precondition: the delete should have left equality masks")
-        StoreSink.lastLimitPlan = None
-        val n2 = spark.sql(
-          "SELECT COUNT(*) FROM (SELECT * FROM graft.store LIMIT 15)")
-          .collect()(0).getLong(0)
-        assert(n2 == 15)
-        assert(StoreSink.lastLimitPlan.isEmpty,
-          s"masked entries must decline the prefix cut: ${StoreSink.lastLimitPlan}")
-      }
+    graft.sources.Sources.withStorePath(spark, dir) {
+      // 4 files x 10 rows; LIMIT 15 needs exactly the first 2 files
+      StoreSink.lastLimitPlan = None
+      val n = spark.sql(
+        "SELECT COUNT(*) FROM (SELECT * FROM graft.store LIMIT 15)")
+        .collect()(0).getLong(0)
+      assert(n == 15)
+      assert(StoreSink.lastLimitPlan.contains((4, 2)),
+        s"expected a 2-file prefix plan, got ${StoreSink.lastLimitPlan}")
+      // an equality-masked store has upper-bound counts only: the cut
+      // must decline (full plan) and the limited count stays exact
+      spark.conf.set("spark.graft.store.rowlevel.mode", "delta")
+      try spark.sql("DELETE FROM graft.store WHERE k % 2 = 1")
+      finally spark.conf.unset("spark.graft.store.rowlevel.mode")
+      assert(StoreSink.readEntries(new Path(dir), fs).exists(_.eq.isDefined),
+        "precondition: the delete should have left equality masks")
+      StoreSink.lastLimitPlan = None
+      val n2 = spark.sql(
+        "SELECT COUNT(*) FROM (SELECT * FROM graft.store LIMIT 15)")
+        .collect()(0).getLong(0)
+      assert(n2 == 15)
+      assert(StoreSink.lastLimitPlan.isEmpty,
+        s"masked entries must decline the prefix cut: ${StoreSink.lastLimitPlan}")
     }
   }
 
@@ -2005,17 +1966,15 @@ class StoreSinkSpec extends SparkSpec {
       df(1 to 300, "a").repartitionByRange(4, col("k"))
         .write.format(fmt).mode("overwrite").option("path", dir).save()
     def merge(dir: String): Unit =
-      graft.sources.Sources.withGraftCatalog(spark) {
-        graft.sources.Sources.withStorePath(spark, dir) {
-          import spark.implicits._
-          Seq(("D", 7L, null.asInstanceOf[String], 0L), ("U", 100L, "u", 42L),
-              ("I", 999L, "i", 11L)).toDF("op", "k", "grp", "amt_cents")
-            .createOrReplaceTempView("delta_spec_cdc")
-          spark.sql("""MERGE INTO graft.store t USING delta_spec_cdc s ON t.k = s.k
-                      |WHEN MATCHED AND s.op = 'D' THEN DELETE
-                      |WHEN MATCHED AND s.op = 'U' THEN UPDATE SET grp = s.grp, amt_cents = s.amt_cents
-                      |WHEN NOT MATCHED AND s.op = 'I' THEN INSERT (k, grp, amt_cents) VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
-        }
+      graft.sources.Sources.withStorePath(spark, dir) {
+        import spark.implicits._
+        Seq(("D", 7L, null.asInstanceOf[String], 0L), ("U", 100L, "u", 42L),
+            ("I", 999L, "i", 11L)).toDF("op", "k", "grp", "amt_cents")
+          .createOrReplaceTempView("delta_spec_cdc")
+        spark.sql("""MERGE INTO graft.store t USING delta_spec_cdc s ON t.k = s.k
+                    |WHEN MATCHED AND s.op = 'D' THEN DELETE
+                    |WHEN MATCHED AND s.op = 'U' THEN UPDATE SET grp = s.grp, amt_cents = s.amt_cents
+                    |WHEN NOT MATCHED AND s.op = 'I' THEN INSERT (k, grp, amt_cents) VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
       }
     val dirG = freshDir("deltamerge_g")
     seed(dirG); merge(dirG) // group-based COW (default mode)
@@ -2045,17 +2004,15 @@ class StoreSinkSpec extends SparkSpec {
       .toDF("k", "grp", "amt_cents")
       .write.format(fmt).mode("overwrite")
       .option("path", dir).option("partitionedBy", "identity:grp").save()
-    graft.sources.Sources.withGraftCatalog(spark) {
-      graft.sources.Sources.withStorePath(spark, dir) {
-        Seq((4L, "E", 999L), (501L, "N", 1L)).toDF("k", "grp", "amt_cents")
-          .createOrReplaceTempView("delta_part_cdc")
-        spark.conf.set("spark.graft.store.rowlevel.mode", "delta")
-        try spark.sql(
-          """MERGE INTO graft.store t USING delta_part_cdc s ON t.k = s.k
-            |WHEN MATCHED THEN UPDATE SET amt_cents = s.amt_cents
-            |WHEN NOT MATCHED THEN INSERT (k, grp, amt_cents) VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
-        finally spark.conf.unset("spark.graft.store.rowlevel.mode")
-      }
+    graft.sources.Sources.withStorePath(spark, dir) {
+      Seq((4L, "E", 999L), (501L, "N", 1L)).toDF("k", "grp", "amt_cents")
+        .createOrReplaceTempView("delta_part_cdc")
+      spark.conf.set("spark.graft.store.rowlevel.mode", "delta")
+      try spark.sql(
+        """MERGE INTO graft.store t USING delta_part_cdc s ON t.k = s.k
+          |WHEN MATCHED THEN UPDATE SET amt_cents = s.amt_cents
+          |WHEN NOT MATCHED THEN INSERT (k, grp, amt_cents) VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
+      finally spark.conf.unset("spark.graft.store.rowlevel.mode")
     }
     val after = StoreSink.readEntries(new Path(dir), fs)
     // every entry still carries its partition value (masked ones included),
@@ -2080,24 +2037,22 @@ class StoreSinkSpec extends SparkSpec {
     val dir = freshDir("cherry")
     df(1 to 40, "base").write.format(fmt).mode("overwrite").option("path", dir).save() // v1
     df(41 to 60, "a").write.format(fmt).mode("append").option("path", dir).save()     // v2
-    graft.sources.Sources.withGraftCatalog(spark) {
-      graft.sources.Sources.withStorePath(spark, dir) {
-        spark.sql("DELETE FROM graft.store WHERE k <= 10") // v3: rewrites lines
-        StoreSink.rollback(dir, 1)                         // v4 = v1
-        // a commit that removed/rewrote lines must refuse (replaying it
-        // against a diverged head would double-delete)
-        val e1 = intercept[Exception] { StoreSink.cherryPick(dir, 3) }
-        assert(e1.getMessage.contains("not append-only"), e1.getMessage)
-        // the clean append re-applies: content = v1 + the 'a' batch
-        val (applied, newV) = StoreSink.cherryPick(dir, 2)
-        assert(applied >= 1L && newV == 5L, s"($applied, $newV)")
-        assert(readBack(dir) ==
-          ((1 to 40).map(k => (k.toLong, "base", k * 100L)) ++
-           (41 to 60).map(k => (k.toLong, "a", k * 100L))).toSet)
-        // picking it again conflicts loudly — its files already sit at head
-        val e2 = intercept[Exception] { StoreSink.cherryPick(dir, 2) }
-        assert(e2.getMessage.contains("cherry-pick conflict"), e2.getMessage)
-      }
+    graft.sources.Sources.withStorePath(spark, dir) {
+      spark.sql("DELETE FROM graft.store WHERE k <= 10") // v3: rewrites lines
+      StoreSink.rollback(dir, 1)                         // v4 = v1
+      // a commit that removed/rewrote lines must refuse (replaying it
+      // against a diverged head would double-delete)
+      val e1 = intercept[Exception] { StoreSink.cherryPick(dir, 3) }
+      assert(e1.getMessage.contains("not append-only"), e1.getMessage)
+      // the clean append re-applies: content = v1 + the 'a' batch
+      val (applied, newV) = StoreSink.cherryPick(dir, 2)
+      assert(applied >= 1L && newV == 5L, s"($applied, $newV)")
+      assert(readBack(dir) ==
+        ((1 to 40).map(k => (k.toLong, "base", k * 100L)) ++
+         (41 to 60).map(k => (k.toLong, "a", k * 100L))).toSet)
+      // picking it again conflicts loudly — its files already sit at head
+      val e2 = intercept[Exception] { StoreSink.cherryPick(dir, 2) }
+      assert(e2.getMessage.contains("cherry-pick conflict"), e2.getMessage)
     }
   }
 
@@ -2133,18 +2088,16 @@ class StoreSinkSpec extends SparkSpec {
     val dir = freshDir("deltacdf")
     df(1 to 100, "s").repartitionByRange(2, col("k"))
       .write.format(fmt).mode("overwrite").option("path", dir).save() // v1
-    graft.sources.Sources.withGraftCatalog(spark) {
-      graft.sources.Sources.withStorePath(spark, dir) {
-        import spark.implicits._
-        Seq((7L, "u", 777L), (500L, "n", 5L)).toDF("k", "grp", "amt_cents")
-          .createOrReplaceTempView("delta_cdf_src")
-        spark.conf.set("spark.graft.store.rowlevel.mode", "delta")
-        try spark.sql(
-          """MERGE INTO graft.store t USING delta_cdf_src s ON t.k = s.k
-            |WHEN MATCHED THEN UPDATE SET grp = s.grp, amt_cents = s.amt_cents
-            |WHEN NOT MATCHED THEN INSERT (k, grp, amt_cents) VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
-        finally spark.conf.unset("spark.graft.store.rowlevel.mode")
-      }
+    graft.sources.Sources.withStorePath(spark, dir) {
+      import spark.implicits._
+      Seq((7L, "u", 777L), (500L, "n", 5L)).toDF("k", "grp", "amt_cents")
+        .createOrReplaceTempView("delta_cdf_src")
+      spark.conf.set("spark.graft.store.rowlevel.mode", "delta")
+      try spark.sql(
+        """MERGE INTO graft.store t USING delta_cdf_src s ON t.k = s.k
+          |WHEN MATCHED THEN UPDATE SET grp = s.grp, amt_cents = s.amt_cents
+          |WHEN NOT MATCHED THEN INSERT (k, grp, amt_cents) VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
+      finally spark.conf.unset("spark.graft.store.rowlevel.mode")
     }
     val feed = StoreSink.changes(spark, dir, 1)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3))).toSet
@@ -2161,13 +2114,11 @@ class StoreSinkSpec extends SparkSpec {
     df(1 to 100, "s").repartitionByRange(2, col("k"))
       .write.format(fmt).mode("overwrite").option("path", dir).save()
     val seedNames = StoreSink.readEntries(new Path(dir), fs).map(_.name)
-    graft.sources.Sources.withGraftCatalog(spark) {
-      graft.sources.Sources.withStorePath(spark, dir) {
-        spark.conf.set("spark.graft.store.rowlevel.mode", "delta")
-        try spark.sql(
-          "UPDATE graft.store SET amt_cents = amt_cents + 5 WHERE k % 10 = 0")
-        finally spark.conf.unset("spark.graft.store.rowlevel.mode")
-      }
+    graft.sources.Sources.withStorePath(spark, dir) {
+      spark.conf.set("spark.graft.store.rowlevel.mode", "delta")
+      try spark.sql(
+        "UPDATE graft.store SET amt_cents = amt_cents + 5 WHERE k % 10 = 0")
+      finally spark.conf.unset("spark.graft.store.rowlevel.mode")
     }
     val after = StoreSink.readEntries(new Path(dir), fs)
     assert(seedNames.forall(after.map(_.name).contains),
@@ -2267,5 +2218,14 @@ class StoreSinkSpec extends SparkSpec {
     def chain(t: Throwable): String =
       if (t == null) "" else t.getMessage + "|" + chain(t.getCause)
     assert(chain(err).contains("batch-write option"), chain(err))
+  }
+
+  test("inParallel: when both branches fail, the first rethrows with the second suppressed") {
+    val err = intercept[IllegalStateException] {
+      StoreSink.inParallel[Int, Int](throw new IllegalStateException("a failed"))(
+        throw new IllegalArgumentException("b failed"))
+    }
+    assert(err.getMessage == "a failed")
+    assert(err.getSuppressed.map(_.getMessage).toSeq == Seq("b failed"))
   }
 }
