@@ -27,15 +27,15 @@ object LlmOps extends OpModule {
 
   /** q_dedup_near's live shingle cache; replaced (and the old entry
     * unpersisted) on each rebuild — see the builder comment. */
-  private var lastShingleCache: Option[DataFrame] = None
+  private var liveShingleCache: Option[DataFrame] = None
 
   /** Unpersist the live shingle cache. Verify/Bench call this at shutdown so
     * the last build's entry doesn't outlive the queries that used it
     * (the builder itself can only unpersist the *previous* entry — its own
     * action runs after it returns). */
   def release(): Unit = {
-    lastShingleCache.foreach(_.unpersist())
-    lastShingleCache = None
+    liveShingleCache.foreach(_.unpersist())
+    liveShingleCache = None
   }
 
   // 5-gram word shingles — JVM kernel (TextHashes.shingles); the SQL
@@ -273,12 +273,12 @@ object LlmOps extends OpModule {
     * Bench's warmup+2 timed passes (a builder can't unpersist its own entry
     * — the action runs after it returns). */
   private def shingleFrame(s: SparkSession, d: String): DataFrame = {
-    lastShingleCache.foreach(_.unpersist())
+    liveShingleCache.foreach(_.unpersist())
     val sh = Tables.documents(s, d)
       .select(col("doc_id"),
               graft.functions.TextHashes.shingles(5)(split(trim(col("text")), " ")).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastShingleCache = Some(sh)
+    liveShingleCache = Some(sh)
     sh
   }
 

@@ -5,6 +5,7 @@ import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.types._
@@ -43,10 +44,6 @@ object BucketSource {
     StructField("amt", LongType, nullable = false)))
 
   def amtOf(id: Long): Long = id * 13 % 1000
-
-  /** Last bucket planning observation: (total buckets, buckets planned
-    * after V2-predicate pruning). Spec observability. */
-  @volatile private[sources] var lastBucketPlan: Option[(Int, Int)] = None
 }
 
 private class BucketTable(rows: Long, groups: Int) extends Table with SupportsRead {
@@ -154,10 +151,15 @@ private class BucketScan(rows: Long, groups: Int,
   override def outputPartitioning(): Partitioning =
     new KeyGroupedPartitioning(Array(Expressions.identity("grp")), planned.size)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    BucketSource.lastBucketPlan = Some((groups, planned.size))
+  override def planInputPartitions(): Array[InputPartition] =
     planned.map(b => BucketPartition(b, rows, groups): InputPartition).toArray
-  }
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = ScanMetrics.defs(
+    "buckets" -> "bucket: buckets in the table",
+    "plannedBuckets" -> "bucket: buckets planned after predicate pruning")
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    ScanMetrics.values("buckets" -> groups.toLong, "plannedBuckets" -> planned.size.toLong)
 
   override def createReaderFactory(): PartitionReaderFactory = BucketReaderFactory()
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, ReadAllAvailable, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow, Offset => StreamOffset}
 import org.apache.spark.sql.sources._
@@ -89,11 +90,6 @@ object RangeSource {
     * id 8 B + val 8 B + tag (single ASCII char as UTF8String) ~8 B. */
   val RowBytes = 24L
 
-  /** Test observability (single-JVM): the last runtime-filter narrowing as
-    * (slices planned without the filter, slices surviving it). Written by
-    * [[RangeScan.planInputPartitions]] only when a runtime filter arrived. */
-  @volatile private[sources] var lastRuntimePrune: Option[(Int, Int)] = None
-
   // ------------------------------------------------------ streaming arrival
   /** External arrival state per feedId: how many rows (as an absolute id
     * high-water mark) have "arrived" — the stand-in for the upstream log a
@@ -116,11 +112,6 @@ object RangeSource {
   /** Reset a feed's arrival state so a fresh query streams the chunked
     * arrival trajectory deterministically from the beginning. */
   def resetFeed(feedId: String): Unit = feedArrived.remove(feedId)
-
-  /** Test observability: the start offset of the first batch each stream
-    * RUN plans — pins that a restarted run resumes from the committed
-    * offset, not from initialOffset. */
-  @volatile private[sources] var lastRunFirstPlannedStart: Option[Long] = None
 }
 
 private class RangeTable(start: Long, end: Long) extends Table with SupportsRead {
@@ -439,16 +430,23 @@ private class RangeScan(lo: Long, hi: Long, required: StructType,
       val s = lo + i * RangeSource.SliceRows
       RangePartition(s, math.min(s + RangeSource.SliceRows, hi)): InputPartition
     }
-    keepSlices match {
-      case Some(keep) =>
-        val kept = all.zipWithIndex.collect {
-          case (p, i) if keep.contains(i.toLong) => p
-        }
-        RangeSource.lastRuntimePrune = Some((n, kept.length))
-        kept.toArray
-      case None => all.toArray
-    }
+    val kept = keepSlices.fold(all)(keep => all.zipWithIndex.collect {
+      case (p, i) if keep.contains(i.toLong) => p
+    })
+    sliceCounts = Seq("slices" -> n.toLong, "plannedSlices" -> kept.length.toLong)
+    kept.toArray
   }
+
+  /** The last planning's (slices in the range, slices a runtime filter
+    * kept), reported as driver metrics. */
+  @volatile private var sliceCounts: Seq[(String, Long)] = Nil
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = ScanMetrics.defs(
+    "slices" -> "range: slices in the range",
+    "plannedSlices" -> "range: slices planned after runtime filtering")
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    ScanMetrics.values(sliceCounts: _*)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new RangeReaderFactory(required, sample, joinedColOf)
@@ -482,8 +480,8 @@ private case class RangeStreamOffset(pos: Long) extends StreamOffset {
   * during one run; the rest arrives "between" runs), so one query executes
   * as ceil(range/chunk) micro-batches. Restart: Spark restores the last
   * committed offset from the checkpoint and plans [committed, available) —
-  * [[RangeSource.lastRunFirstPlannedStart]] lets the spec pin that no row
-  * is re-read or skipped across the restart.
+  * the run's first progress `startOffset` shows no row is re-read or
+  * skipped across the restart.
   *
   * ADMISSION CONTROL ([[SupportsAdmissionControl]]): `maxRowsPerTrigger`
   * caps each micro-batch's admitted offset range below what has arrived —
@@ -500,7 +498,6 @@ private class RangeMicroBatchStream(lo: Long, hi: Long, required: StructType,
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private var reveals = 0
-  private var firstPlanOfRun = true
   private var availableNowGoal: Option[Long] = None
 
   override def initialOffset(): StreamOffset = RangeStreamOffset(lo)
@@ -556,10 +553,6 @@ private class RangeMicroBatchStream(lo: Long, hi: Long, required: StructType,
   override def planInputPartitions(start: StreamOffset, end: StreamOffset): Array[InputPartition] = {
     val s = start.asInstanceOf[RangeStreamOffset].pos
     val e = end.asInstanceOf[RangeStreamOffset].pos
-    if (firstPlanOfRun) {
-      RangeSource.lastRunFirstPlannedStart = Some(s)
-      firstPlanOfRun = false
-    }
     if (e <= s) return Array.empty
     val n = ((e - s + RangeSource.SliceRows - 1) / RangeSource.SliceRows).toInt
     (0 until n).map { i =>

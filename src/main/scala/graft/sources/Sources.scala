@@ -27,6 +27,11 @@ import org.apache.spark.sql.types._
   */
 object Sources extends OpModule {
 
+  /** `(name, flag)` pairs as `(name, 1|0, 0)` rows — the z-flag rows of a
+    * three-column result. */
+  private[sources] def flagRows(flags: (String, Boolean)*): Seq[org.apache.spark.sql.Row] =
+    flags.map { case (n, v) => org.apache.spark.sql.Row(n, if (v) 1L else 0L, 0L) }
+
   private[graft] def tmp(d: String, name: String) =
     s"target/tmp/src_${name}_${java.lang.Integer.toHexString(d.hashCode)}"
 
@@ -555,25 +560,20 @@ object Sources extends OpModule {
     // partitioning report shrinks with the plan (KeyGroupedPartitioning
     // must match planned partitions exactly).
     "src_dsv2_v2filter" -> ((s, d) => {
-      graft.sources.BucketSource.lastBucketPlan = None
       val df = s.sql("""SELECT grp, COUNT(*) AS n, CAST(SUM(amt) AS BIGINT) AS amt_sum
                        |FROM graft.bucket_fact WHERE grp IN ('g2', 'g5')
                        |GROUP BY grp""".stripMargin)
       val content = df.collect()
-      val pruned = graft.sources.BucketSource.lastBucketPlan.contains((8, 2))
+      def bucketsOf(q: DataFrame) = (ScanMetrics(q).sum("buckets"), ScanMetrics(q).sum("plannedBuckets"))
+      val pruned = bucketsOf(df) == ((8L, 2L))
       val filterGone = !df.queryExecution.executedPlan.toString.contains("Filter (")
-      graft.sources.BucketSource.lastBucketPlan = None
-      val emptyCount = s.sql(
-        "SELECT COUNT(*) FROM graft.bucket_fact WHERE grp = 'zzz'")
-        .collect()(0).getLong(0)
-      val emptyDomain = emptyCount == 0L &&
-        graft.sources.BucketSource.lastBucketPlan.contains((8, 0))
-      def flag(n: String, b: Boolean) =
-        org.apache.spark.sql.Row(n, if (b) 1L else 0L, 0L)
-      val rows = content.toSeq ++ Seq(
-        flag("z_empty_domain_zero_parts", emptyDomain),
-        flag("z_filter_gone", filterGone),
-        flag("z_pruned_2_of_8", pruned))
+      val emptyDf = s.sql("SELECT COUNT(*) FROM graft.bucket_fact WHERE grp = 'zzz'")
+      val emptyDomain = emptyDf.collect()(0).getLong(0) == 0L &&
+        bucketsOf(emptyDf) == ((8L, 0L))
+      val rows = content.toSeq ++ flagRows(
+        "z_empty_domain_zero_parts" -> emptyDomain,
+        "z_filter_gone" -> filterGone,
+        "z_pruned_2_of_8" -> pruned)
       val schema = StructType(Seq(
         StructField("grp", StringType), StructField("n", LongType),
         StructField("amt_sum", LongType)))
@@ -660,14 +660,12 @@ object Sources extends OpModule {
         s.sql("DROP TABLE graft.raw.big")
         s.sql("DROP NAMESPACE graft.raw")
         val gone = s.sql("SHOW NAMESPACES IN graft").count() == 0L
-        def flag(n: String, b: Boolean) =
-          org.apache.spark.sql.Row(n, if (b) 1L else 0L, 0L)
-        val rows = agg.toSeq ++ Seq(
-          flag("z_drop_nonempty_loud", dropNonEmptyLoud),
-          flag("z_dropped", gone),
-          flag("z_ns_listed", nsListed),
-          flag("z_prop_kept", propKept),
-          flag("z_tbl_listed", tblListed))
+        val rows = agg.toSeq ++ flagRows(
+          "z_drop_nonempty_loud" -> dropNonEmptyLoud,
+          "z_dropped" -> gone,
+          "z_ns_listed" -> nsListed,
+          "z_prop_kept" -> propKept,
+          "z_tbl_listed" -> tblListed)
         val schema = StructType(Seq(
           StructField("grp", StringType), StructField("n", LongType),
           StructField("sum_cents", LongType)))
@@ -1288,16 +1286,15 @@ object Sources extends OpModule {
       val bounds = base.agg(min(col("k")), max(col("k"))).collect()(0)
       val (loK, hiK) = (bounds.getLong(0), bounds.getLong(0) +
         (bounds.getLong(1) - bounds.getLong(0)) / 8)
-      def plannedFor(probe: => Unit): Int = { probe; graft.sources.StoreSink.lastZonePrune.get._2 }
-      def probeRange(): Unit =
-        s.read.format("graft.sources.StoreSink").option("path", path).load()
-          .where(col("k").between(loK, hiK)).agg(count(lit(1))).collect()
-      val plannedBefore = plannedFor(probeRange())
-      val filesBefore = graft.sources.StoreSink.lastZonePrune.get._1
+      def probeRange(): (Long, Long) = {
+        val q = s.read.format("graft.sources.StoreSink").option("path", path).load()
+          .where(col("k").between(loK, hiK)).agg(count(lit(1)))
+        q.collect(); ScanMetrics(q).plannedFiles
+      }
+      val (filesBefore, plannedBefore) = probeRange()
       val total = base.count()
       graft.sources.StoreSink.compact(s, path, (total + 7) / 8)
-      val plannedAfter = plannedFor(probeRange())
-      val filesAfter = graft.sources.StoreSink.lastZonePrune.get._1
+      val (filesAfter, plannedAfter) = probeRange()
       val zones = graft.sources.StoreSink.readEntries(root, fsys)
         .flatMap(e => e.minK.zip(e.maxK)).sortBy(_._1)
       val disjoint = zones.zip(zones.drop(1)).forall { case ((_, a), (b, _)) => a < b }
@@ -1644,18 +1641,15 @@ object Sources extends OpModule {
       val (loK, hiK) = (b.getLong(0), b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 16)
       val (loA, hiA) = (b.getLong(2), b.getLong(2) + (b.getLong(3) - b.getLong(2)) / 16)
       val total = b.getLong(4)
-      def plannedFor(probe: => Unit): Int = { probe; graft.sources.StoreSink.lastZonePrune.get._2 }
-      def probeK(): Unit =
-        s.read.format("graft.sources.StoreSink").option("path", path).load()
-          .where(col("k").between(loK, hiK)).agg(count(lit(1))).collect()
-      def probeA(): Unit =
-        s.read.format("graft.sources.StoreSink").option("path", path).load()
-          .where(col("amt_cents").between(loA, hiA)).agg(count(lit(1))).collect()
-      val plannedABefore = plannedFor(probeA())
+      def probe(c: String, lo: Long, hi: Long): (Long, Long) = {
+        val q = s.read.format("graft.sources.StoreSink").option("path", path).load()
+          .where(col(c).between(lo, hi)).agg(count(lit(1)))
+        q.collect(); ScanMetrics(q).plannedFiles
+      }
+      val (_, plannedABefore) = probe("amt_cents", loA, hiA)
       s.sql(s"CALL graft.zorder('$path', ${(total + 15) / 16})").collect()
-      val plannedKAfter = plannedFor(probeK())
-      val filesAfter = graft.sources.StoreSink.lastZonePrune.get._1
-      val plannedAAfter = plannedFor(probeA())
+      val (filesAfter, plannedKAfter) = probe("k", loK, hiK)
+      val (_, plannedAAfter) = probe("amt_cents", loA, hiA)
       def aggOf(src: DataFrame, v: String) =
         src.groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
@@ -2044,12 +2038,11 @@ object Sources extends OpModule {
       val dim = Tables.orders(s, d)
         .select(col("o_orderstatus").as("dgrp")).distinct()
         .where(conv(substring(md5(col("dgrp")), 1, 2), 16, 10) < 100)
-      graft.sources.StoreSink.lastZonePrune = None
-      val joined = store.join(broadcast(dim), col("grp") === col("dgrp"))
+      val joinedDf = store.join(broadcast(dim), col("grp") === col("dgrp"))
         .groupBy(col("grp"))
         .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-        .collect()
-      val (total, planned) = graft.sources.StoreSink.lastZonePrune.get
+      val joined = joinedDf.collect()
+      val (total, planned) = ScanMetrics(joinedDf).plannedFiles
       val rows = joined.toSeq :+
         org.apache.spark.sql.Row("z_bloom_join_pruned",
           if (planned < total && planned >= 1) 1L else 0L, 0L)
@@ -2081,18 +2074,19 @@ object Sources extends OpModule {
         .write.format("graft.sources.StoreSink").mode("overwrite")
         .option("path", path).save()
       def store = s.read.format("graft.sources.StoreSink").option("path", path).load()
-      val p = store.where(col("grp") === "P")
+      val pDf = store.where(col("grp") === "P")
         .groupBy(col("grp"))
         .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-        .collect()
-      val (totalP, plannedP) = graft.sources.StoreSink.lastZonePrune.get
-      val nAbsent = store.where(col("grp") === "NEW").count()
-      val (_, plannedAbsent) = graft.sources.StoreSink.lastZonePrune.get
+      val p = pDf.collect()
+      val (totalP, plannedP) = ScanMetrics(pDf).plannedFiles
+      val absentDf = store.where(col("grp") === "NEW").agg(count(lit(1)))
+      val nAbsent = absentDf.collect()(0).getLong(0)
+      val (_, plannedAbsent) = ScanMetrics(absentDf).plannedFiles
       val root = new org.apache.hadoop.fs.Path(path)
       val bloomed = graft.sources.StoreSink.readEntries(root, fsys)
         .forall(_.bloom.isDefined)
       val rows = p.toSeq ++ Seq(
-        org.apache.spark.sql.Row("z_absent_rows", nAbsent, plannedAbsent.toLong),
+        org.apache.spark.sql.Row("z_absent_rows", nAbsent, plannedAbsent),
         org.apache.spark.sql.Row("z_bloom_present", if (bloomed) 1L else 0L, 0L),
         org.apache.spark.sql.Row("z_bloom_pruned",
           if (plannedP < totalP && plannedP >= 1) 1L else 0L, 0L))
@@ -2202,18 +2196,16 @@ object Sources extends OpModule {
           .option("path", path).save()
         def store = s.read.format("graft.sources.StoreSink")
           .option("path", path).load()
-        val filt = store.where(col("fee") < 125)
+        val filtDf = store.where(col("fee") < 125)
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("fee")).as("fee_sum"))
           .select(concat(lit("grp:"), col("grp")).as("step"), col("n"),
                   col("fee_sum"))
-          .collect()
-        val (total, planned) = graft.sources.StoreSink.lastZonePrune.get
-        graft.sources.StoreSink.lastAggPush = None
-        val mm = store.agg(min(col("fee")).as("a"), max(col("fee")).as("b"))
-          .collect()(0)
-        val pushed = graft.sources.StoreSink.lastAggPush
-          .contains(Seq("min_s:fee", "max_s:fee"))
+        val filt = filtDf.collect()
+        val (total, planned) = ScanMetrics(filtDf).plannedFiles
+        val mmDf = store.agg(min(col("fee")).as("a"), max(col("fee")).as("b"))
+        val mm = mmDf.collect()(0)
+        val pushed = ScanMetrics(mmDf).aggPush.contains("min_s:fee,max_s:fee")
         val rows = filt.toSeq ++ Seq(
           org.apache.spark.sql.Row("minmax", mm.getLong(0), mm.getLong(1)),
           org.apache.spark.sql.Row("z_agg_pushed", if (pushed) 1L else 0L, 0L),
@@ -2252,21 +2244,22 @@ object Sources extends OpModule {
           .option("path", path).save()
         def store = s.read.format("graft.sources.StoreSink")
           .option("path", path).load()
-        store.where(col("fee") < 125).count()
-        val (t0, p0) = graft.sources.StoreSink.lastZonePrune.get
+        val before = store.where(col("fee") < 125).agg(count(lit(1)))
+        before.collect()
+        val (t0, p0) = ScanMetrics(before).plannedFiles
         val noPruneBefore = t0 == p0 // stat-less: nothing prunes
         s.sql("ALTER TABLE graft.store SET TBLPROPERTIES " +
               "('graft.stats.cols' = 'fee')")
         val audit = s.sql(s"CALL graft.analyze('$path')").collect()(0)
         val filesBefore = graft.sources.StoreSink
           .readManifest(new org.apache.hadoop.fs.Path(path), fsys)
-        val filt = store.where(col("fee") < 125)
+        val filtDf = store.where(col("fee") < 125)
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("fee")).as("fee_sum"))
           .select(concat(lit("grp:"), col("grp")).as("step"), col("n"),
                   col("fee_sum"))
-          .collect()
-        val (t1, p1) = graft.sources.StoreSink.lastZonePrune.get
+        val filt = filtDf.collect()
+        val (t1, p1) = ScanMetrics(filtDf).plannedFiles
         // NDV sketches (verdict r9 #4): analyze also persisted per-column
         // HLL distinct counts — exact at tiny cardinalities (grp has 3
         // statuses), within HLL++ error at large ones (k is unique per row)
@@ -2485,8 +2478,10 @@ object Sources extends OpModule {
         src.groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
           .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
-      val rangeRows = aggOf(store.where(col("k").between(100, 999)), "range").collect()
-      val (segsTotal, segsRead) = graft.sources.StoreSink.lastSegPlan.get
+      val rangeDf = aggOf(store.where(col("k").between(100, 999)), "range")
+      val rangeRows = rangeDf.collect()
+      val segsTotal = ScanMetrics(rangeDf).sum("manifestSegments")
+      val segsRead = ScanMetrics(rangeDf).sum("segmentsRead")
       val maxK = base.agg(max(col("k"))).collect()(0).getLong(0)
       s.range(1, 6)
         .select((col("id") + maxK).as("k"), lit("NEW").as("grp"),
@@ -2524,15 +2519,15 @@ object Sources extends OpModule {
       val path = tmp(d, "storeaggpush")
       seedStore(s, d, path)
       def store = s.read.format("graft.sources.StoreSink").option("path", path).load()
-      graft.sources.StoreSink.lastAggPush = None
-      val all = store.agg(count(lit(1)).as("n"), min(col("k")).as("min_k"),
-                          max(col("k")).as("max_k")).collect()(0)
-      val pushed = graft.sources.StoreSink.lastAggPush.contains(Seq("count", "min", "max"))
-      graft.sources.StoreSink.lastAggPush = None
-      val filt = store.where(col("grp") === "F")
+      val allDf = store.agg(count(lit(1)).as("n"), min(col("k")).as("min_k"),
+                            max(col("k")).as("max_k"))
+      val all = allDf.collect()(0)
+      val pushed = ScanMetrics(allDf).aggPush.contains("count,min,max")
+      val filtDf = store.where(col("grp") === "F")
         .agg(count(lit(1)).as("n"), min(col("k")).as("min_k"),
-             max(col("k")).as("max_k")).collect()(0)
-      val declined = graft.sources.StoreSink.lastAggPush.isEmpty
+             max(col("k")).as("max_k"))
+      val filt = filtDf.collect()(0)
+      val declined = ScanMetrics(filtDf).aggPush.isEmpty
       val rows = Seq(
         org.apache.spark.sql.Row("all", all.getLong(0), all.getLong(1), all.getLong(2)),
         org.apache.spark.sql.Row("filtered", filt.getLong(0), filt.getLong(1), filt.getLong(2)),
@@ -2637,15 +2632,15 @@ object Sources extends OpModule {
         // bucket-pure IN probe: keys ≡ 1 (mod 8) — partition pruning must
         // plan ONLY bucket 1's files, regardless of zones
         val probeKeys = (0 until 100).map(i => 8L * i + 1)
-        graft.sources.StoreSink.lastPartPrune = None
-        s.table("graft.part_fact").where(col("k").isin(probeKeys: _*)).count()
+        val probe = s.table("graft.part_fact").where(col("k").isin(probeKeys: _*))
+          .agg(count(lit(1)))
+        probe.collect()
         val root = new org.apache.hadoop.fs.Path(s"$dir/part_fact")
         val bucket1 = graft.sources.StoreSink.readEntries(root, fsys)
           .count(_.part.contains("1"))
-        val pruned = graft.sources.StoreSink.lastPartPrune match {
-          case Some((cand, kept)) if kept == bucket1 && kept < cand => 1L
-          case _ => 0L
-        }
+        val cand = ScanMetrics(probe).sum("zoneKeptFiles")
+        val kept = ScanMetrics(probe).sum("partKeptFiles")
+        val pruned = if (kept == bucket1 && kept < cand) 1L else 0L
         val dirsOk = if ((0 to 7).forall(b =>
           fsys.exists(new org.apache.hadoop.fs.Path(root, s"k_bucket=$b")))) 1L else 0L
         s.sql("DROP TABLE graft.part_fact")
@@ -2745,11 +2740,9 @@ object Sources extends OpModule {
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
           .collect()
         s.sql("DROP TABLE graft.pdyn")
-        def flag(n: String, b: Boolean) =
-          org.apache.spark.sql.Row(n, if (b) 1L else 0L, 0L)
-        val rows = agg.toSeq ++ Seq(
-          flag("z_replaced_fresh", replaced),
-          flag("z_untouched_by_name", untouched))
+        val rows = agg.toSeq ++ flagRows(
+          "z_replaced_fresh" -> replaced,
+          "z_untouched_by_name" -> untouched)
         val schema = StructType(Seq(
           StructField("grp", StringType), StructField("n", LongType),
           StructField("sum_cents", LongType)))
@@ -2809,24 +2802,22 @@ object Sources extends OpModule {
     // are exact; the cut falls back to the full plan whenever a candidate
     // entry's live count is not exact (legacy lines, equality masks) or a
     // runtime filter narrowed the scan. Flags pin the prefix cut, the
-    // exact counts, and the covers-everything case.
+    // exact counts, and the covers-everything case; the scan reports
+    // `limitKeptFiles` only when its cut ran, and names the pushed limit.
     "q_store_limit_push" -> ((s, d) => {
       val path = tmp(d, "storelim")
       seedStore(s, d, path) // 8 range-clustered files
       withStorePath(s, path) {
-        graft.sources.StoreSink.lastLimitPlan = None
-        val limited = s.sql(
-          "SELECT COUNT(*) AS n FROM (SELECT * FROM graft.store LIMIT 100)")
-          .collect()(0).getLong(0)
-        val cut = graft.sources.StoreSink.lastLimitPlan
-        val prefixCut = cut.exists { case (cand, planned) =>
-          planned < cand && planned >= 1 }
-        graft.sources.StoreSink.lastLimitPlan = None
-        val total = s.sql(
-          "SELECT COUNT(*) AS n FROM (SELECT * FROM graft.store LIMIT 2000000000)")
-          .collect()(0).getLong(0)
-        val fullWhenOver = graft.sources.StoreSink.lastLimitPlan
-          .exists { case (cand, planned) => planned == cand }
+        def limitedTo(n: Long) = {
+          val q = s.sql(s"SELECT COUNT(*) AS n FROM (SELECT * FROM graft.store LIMIT $n)")
+          val rows = q.collect()(0).getLong(0)
+          val m = ScanMetrics(q)
+          (rows, m.described(s" limit=$n"), m.sum("partKeptFiles"), m.sum("limitKeptFiles"))
+        }
+        val (limited, pushed, cand, planned) = limitedTo(100)
+        val prefixCut = pushed && planned < cand && planned >= 1
+        val (total, pushedAll, candAll, plannedAll) = limitedTo(2000000000)
+        val fullWhenOver = pushedAll && plannedAll == candAll && plannedAll >= 1
         val rows = Seq(
           org.apache.spark.sql.Row("n_limited", limited),
           org.apache.spark.sql.Row("n_total", total),
@@ -2940,11 +2931,9 @@ object Sources extends OpModule {
         val agg = s.table("graft.store").groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
           .collect()
-        def flag(n: String, b: Boolean) =
-          org.apache.spark.sql.Row(n, if (b) 1L else 0L, 0L)
-        val rows = agg.toSeq ++ Seq(
-          flag("z_one_commit", oneCommit),
-          flag("z_untouched_by_name", untouched))
+        val rows = agg.toSeq ++ flagRows(
+          "z_one_commit" -> oneCommit,
+          "z_untouched_by_name" -> untouched)
         val schema = StructType(Seq(
           StructField("grp", StringType), StructField("n", LongType),
           StructField("sum_cents", LongType)))
@@ -2990,11 +2979,9 @@ object Sources extends OpModule {
         val agg = s.table("graft.store").groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
           .collect()
-        def flag(n: String, b: Boolean) =
-          org.apache.spark.sql.Row(n, if (b) 1L else 0L, 0L)
-        val rows = agg.toSeq ++ Seq(
-          flag("z_orphans_gone", orphansGone),
-          flag("z_young_kept", youngKept))
+        val rows = agg.toSeq ++ flagRows(
+          "z_orphans_gone" -> orphansGone,
+          "z_young_kept" -> youngKept)
         val schema = StructType(Seq(
           StructField("grp", StringType), StructField("n", LongType),
           StructField("sum_cents", LongType)))
@@ -3031,12 +3018,10 @@ object Sources extends OpModule {
         val agg = s.table("graft.store").groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
           .collect()
-        def flag(n: String, b: Boolean) =
-          org.apache.spark.sql.Row(n, if (b) 1L else 0L, 0L)
-        val rows = agg.toSeq ++ Seq(
-          flag("z_audit", auditOk),
-          flag("z_tag_pinned", tagAlive),
-          flag("z_v1_expired", v1Gone))
+        val rows = agg.toSeq ++ flagRows(
+          "z_audit" -> auditOk,
+          "z_tag_pinned" -> tagAlive,
+          "z_v1_expired" -> v1Gone)
         val schema = StructType(Seq(
           StructField("grp", StringType), StructField("n", LongType),
           StructField("sum_cents", LongType)))
@@ -3080,13 +3065,11 @@ object Sources extends OpModule {
         val agg = s.table("graft.store").groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
           .collect()
-        def flag(n: String, b: Boolean) =
-          org.apache.spark.sql.Row(n, if (b) 1L else 0L, 0L)
-        val rows = agg.toSeq ++ Seq(
-          flag("z_props_shown", propsShown),
-          flag("z_unset_selective", unsetOk),
-          flag("z_v1_expired", v1Expired),
-          flag("z_vacuum_used_prop", keptOne))
+        val rows = agg.toSeq ++ flagRows(
+          "z_props_shown" -> propsShown,
+          "z_unset_selective" -> unsetOk,
+          "z_v1_expired" -> v1Expired,
+          "z_vacuum_used_prop" -> keptOne)
         val schema = StructType(Seq(
           StructField("grp", StringType), StructField("n", LongType),
           StructField("sum_cents", LongType)))
@@ -3373,29 +3356,23 @@ object Sources extends OpModule {
           .write.format("graft.sources.StoreSink").mode("append")
           .option("path", path).save()
         def store = s.table("graft.store")
-        def plannedOf(v: => Unit): (Int, Int) = {
-          graft.sources.StoreSink.lastTopNPlan = None
-          v
-          graft.sources.StoreSink.lastTopNPlan.getOrElse((-1, -1))
+        def topN(tag: String, k: org.apache.spark.sql.Column) = {
+          val q = store.orderBy(k).limit(12)
+            .select(lit(tag).as("tag"), col("k"), col("amt_cents"))
+          val rows = q.collect().toSeq
+          val m = ScanMetrics(q)
+          (rows, m.described(" topN=12"), m.sum("partKeptFiles"), m.sum("limitKeptFiles"))
         }
-        var ascRows: Seq[org.apache.spark.sql.Row] = Nil
-        val (ta, pa) = plannedOf {
-          ascRows = store.orderBy(col("k").asc).limit(12)
-            .select(lit("asc").as("tag"), col("k"), col("amt_cents")).collect().toSeq
-        }
-        var descRows: Seq[org.apache.spark.sql.Row] = Nil
-        val (td, pd) = plannedOf {
-          descRows = store.orderBy(col("k").desc).limit(12)
-            .select(lit("desc").as("tag"), col("k"), col("amt_cents")).collect().toSeq
-        }
-        graft.sources.StoreSink.lastZonePrune = None
-        val nNull = store.where(col("k").isNull).count()
-        val (tn, pn) = graft.sources.StoreSink.lastZonePrune.get
+        val (ascRows, pushedA, ta, pa) = topN("asc", col("k").asc)
+        val (descRows, pushedD, td, pd) = topN("desc", col("k").desc)
+        val nullDf = store.where(col("k").isNull).agg(count(lit(1)))
+        val nNull = nullDf.collect()(0).getLong(0)
+        val (tn, pn) = ScanMetrics(nullDf).plannedFiles
         val rows = ascRows ++ descRows ++ Seq(
           org.apache.spark.sql.Row("z_asc_pruned",
-            if (pa < ta && pa >= 1) 1L else 0L, 0L),
+            if (pushedA && pa < ta && pa >= 1) 1L else 0L, 0L),
           org.apache.spark.sql.Row("z_desc_pruned",
-            if (pd < td && pd >= 1) 1L else 0L, 0L),
+            if (pushedD && pd < td && pd >= 1) 1L else 0L, 0L),
           org.apache.spark.sql.Row("z_isnull_pruned",
             if (pn == 1 && tn > 1) 1L else 0L, nNull))
         val schema = StructType(Seq(
@@ -3428,19 +3405,18 @@ object Sources extends OpModule {
           .write.format("graft.sources.StoreSink").mode("overwrite")
           .option("path", path).save()
         def store = s.table("graft.store")
-        graft.sources.StoreSink.lastOffsetPlan = None
-        val a = store.offset(37)
-          .agg(count(lit(1)).as("n"), countDistinct(col("k")).as("nd"))
-          .collect()(0)
-        val plan37 = graft.sources.StoreSink.lastOffsetPlan
-        graft.sources.StoreSink.lastOffsetPlan = None
-        val b = store.offset(5000)
-          .agg(count(lit(1)).as("n"), countDistinct(col("k")).as("nd"))
-          .collect()(0)
-        val planBig = graft.sources.StoreSink.lastOffsetPlan
+        def offsetBy(m: Int) = {
+          val q = store.offset(m)
+            .agg(count(lit(1)).as("n"), countDistinct(col("k")).as("nd"))
+          val r = q.collect()(0)
+          val sm = ScanMetrics(q)
+          val p = sm.sum("plannedFiles")
+          (r, sm.described(s" offset=$m") && p <= sm.sum("partKeptFiles") && p >= 1)
+        }
+        val (a, pushed37) = offsetBy(37)
+        val (b, pushedBig) = offsetBy(5000)
         val c = store.offset(37).limit(100).count()
-        val pushed = plan37.exists { case (t, p) => p <= t && p >= 1 } &&
-          planBig.exists { case (t, p) => p <= t && p >= 1 }
+        val pushed = pushed37 && pushedBig
         val rows = Seq(
           org.apache.spark.sql.Row("off37", a.getLong(0), a.getLong(1)),
           org.apache.spark.sql.Row("off5000", b.getLong(0), b.getLong(1)),
@@ -3679,12 +3655,11 @@ object Sources extends OpModule {
           .option("path", path).save()
         def store = s.table("graft.store")
         def probe(dfq: org.apache.spark.sql.DataFrame,
-                  step: String): (org.apache.spark.sql.Row, (Int, Int)) = {
-          graft.sources.StoreSink.lastZonePrune = None
-          val r = dfq.agg(count(lit(1)).as("n"),
-            coalesce(sum(col("k")), lit(0L)).as("k_sum")).collect()(0)
-          (org.apache.spark.sql.Row(step, r.getLong(0), r.getLong(1)),
-            graft.sources.StoreSink.lastZonePrune.get)
+                  step: String): (org.apache.spark.sql.Row, (Long, Long)) = {
+          val q = dfq.agg(count(lit(1)).as("n"),
+            coalesce(sum(col("k")), lit(0L)).as("k_sum"))
+          val r = q.collect()(0)
+          (org.apache.spark.sql.Row(step, r.getLong(0), r.getLong(1)), ScanMetrics(q).plannedFiles)
         }
         val (eqRow, (t1, p1)) =
           probe(store.where(col("name") === "Customer#000000321"), "eq")
@@ -3735,9 +3710,9 @@ object Sources extends OpModule {
           .write.format("graft.sources.StoreSink").mode("append")
           .option("path", path).save() // routes under the NEW spec
         def store = s.table("graft.store")
-        graft.sources.StoreSink.lastZonePrune = None
-        val k6 = store.where(col("k") === 6).count()
-        val (t0, p0) = graft.sources.StoreSink.lastZonePrune.get
+        val k6Df = store.where(col("k") === 6).agg(count(lit(1)))
+        val k6 = k6Df.collect()(0).getLong(0)
+        val (t0, p0) = ScanMetrics(k6Df).plannedFiles
         val ddlRefused =
           try { s.sql("ALTER TABLE graft.store DROP PARTITION (grp='O')"); false }
           catch { case _: Exception => true }

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
 object StoreColumnar extends OpModule {
 
   import Sources.{tmp, withStorePath, seedStore, storeCdc,
-    storeSummary}
+    storeSummary, flagRows}
 
   private val fmt = "graft.sources.StoreSink"
 
@@ -64,9 +64,6 @@ object StoreColumnar extends OpModule {
     }
   }
 
-  private def flagRows(flags: (String, Boolean)*): Seq[Row] =
-    flags.map { case (n, v) => Row(n, if (v) 1L else 0L, 0L) }
-
   private val summarySchema = StructType(Seq(
     StructField("grp", StringType), StructField("n", LongType),
     StructField("sum_cents", LongType)))
@@ -92,7 +89,7 @@ object StoreColumnar extends OpModule {
     // THE WHY: a narrow projection over a WIDE columnar table reads only
     // the blocks it names. Five physical columns, a two-column aggregate
     // (fee is one of two trailing adds) — the reader must touch 2 of 5
-    // blocks (z_blocks pins it via the lastColBlocks hook), and the
+    // blocks (z_blocks pins it from the scan's block counts), and the
     // zero-column existence scan touches 0 of 5. The text encoding would
     // split all five fields of every row either way; this is the
     // within-file scan cost the format exists to shed.
@@ -110,20 +107,16 @@ object StoreColumnar extends OpModule {
                   pmod(col("o_orderkey"), lit(997)).as("fee"))
           .repartitionByRange(4, col("k"))
           .write.format(fmt).mode("append").option("path", path).save()
-        StoreSink.lastColBlocks = None
-        val agg = s.table("graft.store")
+        val aggDf = s.table("graft.store")
           .groupBy(col("grp")).agg(sum(col("fee")).as("fee_sum"))
-          .collect()
-        val narrow = StoreSink.lastColBlocks // (grp, fee) of 5
-        StoreSink.lastColBlocks = None
-        val nRows = s.table("graft.store").select(lit(1).as("one"))
-          .collect().length.toLong
-        val empty = StoreSink.lastColBlocks // header-only
+        val agg = aggDf.collect()
+        val oneDf = s.table("graft.store").select(lit(1).as("one"))
+        val nRows = oneDf.collect().length.toLong
         val rows = agg.toSeq.map(r => Row(r.getString(0), r.getLong(1), 0L)) ++
           Seq(Row("z_rows", nRows, 0L)) ++
           flagRows(
-            "z_blocks_narrow" -> narrow.contains((2, 5)),
-            "z_blocks_zero"   -> empty.contains((0, 5)))
+            "z_blocks_narrow" -> ScanMetrics(aggDf).readEach(2, 5), // (grp, fee) of 5
+            "z_blocks_zero"   -> ScanMetrics(oneDf).readEach(0, 5)) // header-only
         val schema = StructType(Seq(
           StructField("grp", StringType), StructField("fee_sum", LongType),
           StructField("pad", LongType)))
@@ -347,14 +340,13 @@ object StoreColumnar extends OpModule {
       val path = tmp(d, "storecolzone")
       seedColumnar(s, d, path)
       withStorePath(s, path) {
-        StoreSink.lastZonePrune = None
-        val agg = s.table("graft.store")
+        val aggDf = s.table("graft.store")
           .where(col("k").between(100, 999))
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val pruned = StoreSink.lastZonePrune.exists { case (t, p) =>
-          p < t && p >= 1 }
+        val agg = aggDf.collect()
+        val (t, p) = ScanMetrics(aggDf).plannedFiles
+        val pruned = p < t && p >= 1
         val rows = agg.toSeq ++ flagRows("z_zone_pruned" -> pruned)
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.asJava, summarySchema).orderBy(col("grp"))
@@ -512,12 +504,10 @@ object StoreColumnar extends OpModule {
         // the rare status: most grp-sorted groups lack it → dict skip
         val rare = s.table("graft.store").groupBy(col("grp")).count()
           .orderBy(col("count"), col("grp")).collect()(0).getString(0)
-        StoreSink.lastColGroups = None
-        val rareAgg = s.table("graft.store").where(col("grp") === rare)
+        val rareDf = s.table("graft.store").where(col("grp") === rare)
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()(0)
-        val skipped = StoreSink.lastColGroups.exists { case (r, t) =>
-          r >= 1 && r < t }
+        val rareAgg = rareDf.collect()(0)
+        val skipped = ScanMetrics(rareDf).groupsSkipped
         val full = s.table("graft.store").groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
           .collect()
@@ -556,14 +546,12 @@ object StoreColumnar extends OpModule {
         val rare = Tables.orders(s, d).groupBy(col("o_orderstatus"))
           .count().orderBy(col("count"), col("o_orderstatus"))
           .collect()(0).getString(0)
-        StoreSink.lastColGroups = None
-        val agg = s.table("graft.store")
+        val aggDf = s.table("graft.store")
           .where(col("grp").like(s"st-$rare-%"))
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val skipped = StoreSink.lastColGroups.exists { case (r, t) =>
-          r >= 1 && r < t }
+        val agg = aggDf.collect()
+        val skipped = ScanMetrics(aggDf).groupsSkipped
         val rows = agg.toSeq ++ flagRows("z_dict_like_skip" -> skipped)
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.asJava, summarySchema).orderBy(col("grp"))
@@ -617,12 +605,10 @@ object StoreColumnar extends OpModule {
       withStorePath(s, path) {
         val rare = s.table("graft.store").groupBy(col("grp")).count()
           .orderBy(col("count"), col("grp")).collect()(0).getString(0)
-        StoreSink.lastColGroups = None
-        val rareAgg = s.table("graft.store").where(col("grp") === rare)
+        val rareDf = s.table("graft.store").where(col("grp") === rare)
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()(0)
-        val skipped = StoreSink.lastColGroups.exists { case (r, t) =>
-          r >= 1 && r < t }
+        val rareAgg = rareDf.collect()(0)
+        val skipped = ScanMetrics(rareDf).groupsSkipped
         val full = s.table("graft.store").groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
           .collect()
@@ -663,13 +649,11 @@ object StoreColumnar extends OpModule {
       val (lo, hi) = (maxK * 45 / 100, maxK * 70 / 100)
       withStorePath(s, path) {
         s.sql(s"DELETE FROM graft.store WHERE k IN (${dvKeys.mkString(",")})")
-        StoreSink.lastColGroups = None
-        val agg = s.table("graft.store").where(col("k").between(lo, hi))
+        val aggDf = s.table("graft.store").where(col("k").between(lo, hi))
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val skipped = StoreSink.lastColGroups.exists { case (r, t) =>
-          r >= 1 && r < t }
+        val agg = aggDf.collect()
+        val skipped = ScanMetrics(aggDf).groupsSkipped
         val hasDv = StoreSink.readEntries(
           new org.apache.hadoop.fs.Path(path), fsOf(s)).exists(_.dv.isDefined)
         val rows = agg.toSeq ++ flagRows(

@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write._
@@ -777,28 +778,9 @@ object StoreSink {
   private[sources] def readEntries(root: Path, fsys: FileSystem): Seq[StoreFileEntry] =
     readManifestLines(root, fsys).filterNot(_.startsWith("#")).map(parseEntry)
 
-  /** Test observability: last (planned, kept) zone-map narrowing. */
-  @volatile private[sources] var lastZonePrune: Option[(Int, Int)] = None
-  /** Last runtime filter handed to a store scan (spec observability). */
-  @volatile private[graft] var lastRuntimeFilter: Option[String] = None
-
   /** Test hook: runs between a DELETE's rewrite computation and its
     * publish — the conflict window the optimistic retry covers. */
   @volatile private[sources] var onDeleteComputed: () => Unit = () => ()
-
-  /** Test observability: last (candidates, kept) partition-value pruning
-    * (set only for scans over a partitioned store). */
-  @volatile private[sources] var lastPartPrune: Option[(Int, Int)] = None
-
-  /** Last limit-pushdown planning observation: (candidate files, files
-    * actually planned after the limit prefix cut). Spec observability. */
-  @volatile private[sources] var lastLimitPlan: Option[(Int, Int)] = None
-
-  /** Top-n twin: (candidates, planned after zone-ordered coverage). */
-  @volatile private[sources] var lastTopNPlan: Option[(Int, Int)] = None
-
-  /** Offset twin: (candidates, planned after the leading-file drop). */
-  @volatile private[sources] var lastOffsetPlan: Option[(Int, Int)] = None
 
   /** A file's partition key as the InternalRow SPJ alignment compares:
     * bucket ids are ints, identity values are strings (null mark → null). */
@@ -975,7 +957,13 @@ object StoreSink {
     * InheritableThreadLocal, so the child thread's jobs stay in the
     * caller's group — while `b` runs on the calling thread. Both always
     * run to completion before return; the first failure rethrows, carrying
-    * the second (if any) as a suppressed exception. */
+    * the second (if any) as a suppressed exception. Both branches may plan
+    * store, bucket and range scans: each scan reports what it planned on
+    * its own plan node, so neither branch sees the other's counts. The one
+    * remaining last-writer-wins state is TextIndex's probe slots
+    * (`lastTopNFiles`, `lastOrFiles`, `lastScoreShards`, `lastPhraseShards`,
+    * `lastSnippetShards`): do not run two TextIndex probes here and read
+    * those slots. */
   private[graft] def inParallel[A, B](a: => A)(b: => B): (A, B) = {
     @volatile var ra: Either[Throwable, A] =
       Left(new IllegalStateException("parallel branch did not complete"))
@@ -993,21 +981,6 @@ object StoreSink {
       case (_, Left(e))         => throw e
     }
   }
-
-  /** Test observability: (blocks read, blocks in file) of the last
-    * columnar projected read — pins that narrow projections skip blocks. */
-  @volatile private[sources] var lastColBlocks: Option[(Int, Int)] = None
-
-  /** Test observability: (groups decoded, groups in file) ACCUMULATED
-    * across the partitions of columnar reads since the last reset — pins
-    * that per-group zone stats skip groups a pushed predicate excludes. */
-  @volatile private[sources] var lastColGroups: Option[(Int, Int)] = None
-  private[sources] def addColGroups(read: Int, total: Int): Unit =
-    synchronized {
-      lastColGroups = Some(lastColGroups.fold((read, total)) {
-        case (r, t) => (r + read, t + total)
-      })
-    }
 
   /** One field's text encoding — the SHARED per-value codec both the row
     * format (fields joined per ROW) and the columnar format (fields joined
@@ -1431,8 +1404,7 @@ object StoreSink {
 
   /** Read SELECTED blocks of a columnar file: seeks past everything else.
     * `slots` beyond the file's width are absent from the result (the
-    * caller pads the column's default — the short-file contract). Records
-    * [[lastColBlocks]]. */
+    * caller pads the column's default — the short-file contract). */
   private[sources] def readColBlocks(in: org.apache.hadoop.fs.FSDataInputStream,
                                      h: ColHeader,
                                      slots: Array[Int],
@@ -1442,15 +1414,6 @@ object StoreSink {
     // blocks a pre-check already decoded (the dict group filter) are
     // reused, never re-read
     want.foreach { s => out += s -> preloaded.getOrElse(s, readOneBlock(in, h, s)) }
-    // keep the WIDEST read since the last reset: partition readers race
-    // and only some files carry masks (their readers add the key block) —
-    // last-writer-wins made the eq-mask pin order-dependent (observed
-    // 1-in-6 flake)
-    synchronized {
-      lastColBlocks = Some(lastColBlocks.fold((want.length, h.lens.length)) {
-        case (w, t) => (math.max(w, want.length), math.max(t, h.lens.length))
-      })
-    }
     out.result()
   }
 
@@ -2071,13 +2034,6 @@ object StoreSink {
     * uncommitted. */
   private[sources] def readManifestLines(root: Path, fsys: FileSystem): Seq[String] =
     expand(root, fsys, readListLines(root, fsys))
-
-  /** Test observability: last planning's (segments in list, segments read). */
-  @volatile private[sources] var lastSegPlan: Option[(Int, Int)] = None
-
-  /** Test observability: functions of the last metadata-answered aggregate
-    * pushdown (None = last agg query fell back to the row scan). */
-  @volatile private[sources] var lastAggPush: Option[Seq[String]] = None
 
   /** Seal a segment for `group`, returning its pointer (file written only
     * if absent — content addressing dedupes). */
@@ -5856,7 +5812,6 @@ private class StoreScanBuilder(pathStr: String, version: Option[Int] = None,
         entries.flatMap(_.stats.find(_._1 == f.substring(6)).map(_._3)).max
     }
     aggFuncs = fs.flatten
-    StoreSink.lastAggPush = Some(aggFuncs)
     true
   }
 
@@ -5979,31 +5934,6 @@ private case class StoreAggReaderFactory()
     }
   }
 }
-
-/** Driver-side metric definitions for the store scan (sum across the one
-  * driver report; the aggregate is just the latest value rendered).
-  * Concrete zero-arg classes, NOT a parameterized case class: the SQL
-  * metrics listener re-instantiates CustomMetric implementations
-  * REFLECTIVELY by class name to aggregate values, and a class without a
-  * no-arg constructor makes every query over the store log a
-  * SparkException per metric (observed; the metrics still rendered, but
-  * the log noise buried real failures). */
-private sealed class StoreMetric(mName: String, mDesc: String)
-    extends org.apache.spark.sql.connector.metric.CustomMetric {
-  override def name(): String = mName
-  override def description(): String = mDesc
-  override def aggregateTaskMetrics(taskMetrics: Array[Long]): String =
-    taskMetrics.sum.toString
-}
-
-private class ManifestFilesMetric
-  extends StoreMetric("manifestFiles", "store: files in manifest")
-
-private class PlannedFilesMetric
-  extends StoreMetric("plannedFiles", "store: files planned after zone pruning")
-
-private case class StoreMetricValue(name: String, value: Long)
-    extends org.apache.spark.sql.connector.metric.CustomTaskMetric
 
 /** The `_file` metadata column definition. */
 private object StoreFileColumn extends MetadataColumn {
@@ -6165,21 +6095,28 @@ private class StoreScan(pathStr: String,
     }
   }
 
-  /** Last planning's (manifest, kept) file counts — surfaced as DRIVER
-    * metrics so zone-map effectiveness shows in the SQL UI per scan (the
-    * operational half of the zone-map story: "did the layout help THIS
-    * query" without reading logs). */
-  @volatile private var plannedCounts: Option[(Int, Int)] = None
+  /** The last planning's file and segment counts at each pruning step —
+    * DRIVER metrics, so "did the layout help THIS query" shows on the
+    * scan's own plan node (SQL UI, specs, the bench trace) without reading
+    * logs. The columnar reader adds its block and group counts per task. */
+  @volatile private var planCounts: Seq[(String, Long)] = Nil
 
-  override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new ManifestFilesMetric, new PlannedFilesMetric)
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    ScanMetrics.defs(
+      "manifestFiles" -> "store: files in manifest",
+      "manifestSegments" -> "store: manifest segments",
+      "segmentsRead" -> "store: manifest segments read at planning",
+      "zoneKeptFiles" -> "store: files kept by zone maps, blooms and null counts",
+      "partKeptFiles" -> "store: files kept by partition pruning",
+      "limitKeptFiles" -> "store: files kept by the limit or top-n cut (0: no cut ran)",
+      "plannedFiles" -> "store: files planned after zone pruning",
+      "colBlocksRead" -> "store: columnar blocks read",
+      "colBlocks" -> "store: columnar blocks in the groups read",
+      "colGroupsRead" -> "store: columnar groups decoded",
+      "colGroups" -> "store: columnar groups in the files read")
 
-  override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    plannedCounts.map { case (m, p) =>
-      Array[org.apache.spark.sql.connector.metric.CustomTaskMetric](
-        StoreMetricValue("manifestFiles", m.toLong),
-        StoreMetricValue("plannedFiles", p.toLong))
-    }.getOrElse(Array.empty)
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    ScanMetrics.values(planCounts: _*)
 
   /** PHYSICAL list of the pinned snapshot, or the current manifest. */
   private def currentPhysical(root: Path, fsys: FileSystem): Seq[String] =
@@ -6191,9 +6128,9 @@ private class StoreScan(pathStr: String,
   /** Plan over the manifest TREE: walk the list, skip whole segments whose
     * key range misses the pushed bounds (their aggregate counts still feed
     * the totals — no read), expand only matched segments. Returns
-    * (total data files, candidate entries). Driver cost is O(list +
-    * matched segments), the tree's point. */
-  protected def plannedCandidates(root: Path, fsys: FileSystem): (Int, Seq[StoreSink.StoreFileEntry]) = {
+    * (total data files, (segments, segments read), candidate entries).
+    * Driver cost is O(list + matched segments), the tree's point. */
+  protected def plannedCandidates(root: Path, fsys: FileSystem): (Int, (Int, Int), Seq[StoreSink.StoreFileEntry]) = {
     val items = currentPhysical(root, fsys).filterNot(_.startsWith("#"))
     var total = 0
     var segsTotal = 0; var segsRead = 0
@@ -6212,9 +6149,8 @@ private class StoreScan(pathStr: String,
         Seq(StoreSink.parseEntry(l))
       }
     }
-    StoreSink.lastSegPlan = Some((segsTotal, segsRead))
     val staged = branchEntries(root, fsys)
-    (total + staged.size, candidates ++ staged)
+    (total + staged.size, (segsTotal, segsRead), candidates ++ staged)
   }
 
   /** Entries of the pinned snapshot, or the current manifest (plus the
@@ -6242,12 +6178,23 @@ private class StoreScan(pathStr: String,
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  /** Columns of the runtime filters handed to this scan (DPP), shown in
+    * its description. */
+  @volatile private var runtimeFilterCols: Seq[String] = Nil
+
   override def description(): String = {
     val z = (kLo, kHi) match {
       case (None, None) => ""
       case _ => s" zones=[${kLo.getOrElse("-inf")}, ${kHi.getOrElse("+inf")}]"
     }
-    s"GraftStoreScan($pathStr)$z"
+    val cut = (topNDesc, limitN) match {
+      case (Some(_), Some(n)) => s" topN=$n"
+      case (None, Some(n)) => s" limit=$n"
+      case _ => ""
+    }
+    val rf = if (runtimeFilterCols.isEmpty) ""
+             else runtimeFilterCols.mkString(" runtimeFilters=[", ",", "]")
+    s"GraftStoreScan($pathStr)$z$cut${offsetN.map(m => s" offset=$m").getOrElse("")}$rf"
   }
 
   // ---- runtime filtering (DPP into the store via zone maps AND blooms)
@@ -6264,9 +6211,7 @@ private class StoreScan(pathStr: String,
       .toArray
 
   override def filter(filters: Array[Filter]): Unit = {
-    StoreSink.lastRuntimeFilter =
-      Some(filters.map(f => f.toString + " [" +
-        f.references.mkString(",") + "]").mkString("; "))
+    runtimeFilterCols = filters.toSeq.flatMap(_.references).distinct
     filters.foreach {
     case In(a, vs) if a == "k" =>
       val ks = vs.collect {
@@ -6316,7 +6261,7 @@ private class StoreScan(pathStr: String,
     // manifest-only planning: uncommitted/stray files cannot be scanned;
     // segment ranges, then zone maps / blooms, then partition values drop
     // files the pushed bounds / grp literals / runtime keys cannot touch
-    val (total, candidates) = plannedCandidates(root, fsys)
+    val (total, (segsTotal, segsRead), candidates) = plannedCandidates(root, fsys)
     val kept = candidates
       .filter(_.mayContain(kLo, kHi))
       .filter(_.mayContainA(aLo, aHi))
@@ -6338,13 +6283,12 @@ private class StoreScan(pathStr: String,
         case None => true
       })
     val keptP = kept.filter(_.part.forall(partMayMatch))
-    if (spec.isDefined)
-      StoreSink.lastPartPrune = Some((kept.size, keptP.size))
     // LIMIT prefix cut (partial pushdown — Spark's Limit still runs): only
     // when every candidate's live count is exact (no legacy stat-less
     // lines, no equality masks whose counts are upper bounds) and no
-    // runtime filter narrowed the scan after pushdown
-    val keptL = (topNDesc, limitN) match {
+    // runtime filter narrowed the scan after pushdown. `cutRan`: a limit
+    // cut or a top-n planning ran (a declined top-n plans in full)
+    val (keptL, cutRan) = (topNDesc, limitN) match {
       // TOP-N: zone-ordered coverage — sound only over mask-free entries
       // with exact rows, null counts, and (where non-null rows exist)
       // zones; anything else plans the full candidate set (partial push)
@@ -6385,21 +6329,15 @@ private class StoreScan(pathStr: String,
             else valueCover(n) ++ nullFiles
           }
         val planned = plan.map(_.name).toSet
-        val out = keptP.filter(e => planned(e.name))
-        StoreSink.lastTopNPlan = Some((keptP.size, out.size))
-        out
-      case (Some(_), _) => // guards unmet: the full set stays sound
-        StoreSink.lastTopNPlan = Some((keptP.size, keptP.size))
-        keptP
+        (keptP.filter(e => planned(e.name)), true)
+      case (Some(_), _) => (keptP, true) // guards unmet: the full set stays sound
       case (None, Some(n)) if keptP.forall(e => e.rows >= 0 && e.eq.isEmpty) &&
           runtimeKeys.isEmpty && runtimeGrps.isEmpty =>
         var acc = 0L
-        val prefix = keptP.takeWhile { e =>
+        (keptP.takeWhile { e =>
           val need = acc < n; acc += e.rows; need
-        }
-        StoreSink.lastLimitPlan = Some((keptP.size, prefix.size))
-        prefix
-      case _ => keptP
+        }, true)
+      case _ => (keptP, false)
     }
     // OFFSET cut (pushOffset promised full semantics): drop whole leading
     // files in manifest order, row-skip the boundary file
@@ -6416,17 +6354,18 @@ private class StoreScan(pathStr: String,
             s"store $pathStr changed between OFFSET pushdown and planning " +
             "(an entry lost its exact live count); re-run the query")
         var remaining = m.toLong
-        val out = keptL.flatMap { e =>
+        keptL.flatMap { e =>
           if (remaining <= 0L) Some((e, 0L))
           else if (e.rows <= remaining) { remaining -= e.rows; None }
           else { val j = remaining; remaining = 0L; Some((e, j)) }
         }
-        StoreSink.lastOffsetPlan = Some((keptL.size, out.size))
-        out
       case None => keptL.map((_, 0L))
     }
-    StoreSink.lastZonePrune = Some((total, keptO.size))
-    plannedCounts = Some((total, keptO.size))
+    planCounts = (Seq("manifestFiles" -> total, "manifestSegments" -> segsTotal,
+      "segmentsRead" -> segsRead, "zoneKeptFiles" -> kept.size,
+      "partKeptFiles" -> keptP.size, "plannedFiles" -> keptO.size) ++
+      Option.when(cutRan)("limitKeptFiles" -> keptL.size))
+      .map { case (n, v) => (n, v.toLong) }
     val isBucket = spec.exists(_.kind == "bucket")
     keptO.map { case (e, skip) => StoreFilePartition(
         new Path(root, e.name).toString,
@@ -6456,7 +6395,7 @@ private class StoreScan(pathStr: String,
         }
       case None => ()
     }
-    val entries = plannedCandidates(root, fsys)._2
+    val entries = plannedCandidates(root, fsys)._3
       .filter(_.mayContain(kLo, kHi))
       .filter(_.mayContainA(aLo, aHi))
       .filter(e => statBounds.forall { case (c, lo, hi) =>
@@ -6815,7 +6754,10 @@ private case class StoreReaderFactory(required: StructType = StoreSink.schema,
           private var colGetters: Array[Int => Any] = _
           private var ord = -1
           private var toSkip = part.skipRows
-          private var gRead = 0 // groups actually decoded (observability)
+          // read counts, reported as task metrics: (blocks read, blocks in
+          // the groups read, groups decoded, groups in the file)
+          private var blocksRead, blocksIn, gRead = 0L
+          private var gTotal = groups.length.toLong
           // blocks decoded by the CURRENT group's dict pre-check — reused
           // by readColBlocks when the group survives (read-once)
           private var preRead: Map[Int, StoreSink.ColValues] = Map.empty
@@ -6852,6 +6794,8 @@ private case class StoreReaderFactory(required: StructType = StoreSink.schema,
             if (gi >= groups.length) return false
             gRead += 1
             val blocks = StoreSink.readColBlocks(rawIn, groups(gi), want, preRead)
+            blocksRead += blocks.size
+            blocksIn += groups(gi).lens.length
             keyBlock = blocks.getOrElse(0, null)
             // per-column typed getters parse straight from the block text
             // by offset — no per-value String materialization
@@ -6915,10 +6859,17 @@ private case class StoreReaderFactory(required: StructType = StoreSink.schema,
             while (i < colGetters.length) { vals(i) = colGetters(i)(cur); i += 1 }
             new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
           }
-          override def close(): Unit = {
-            StoreSink.addColGroups(gRead, groups.length)
-            rawIn.close()
+          override def currentMetricsValues(): Array[CustomTaskMetric] =
+            ScanMetrics.values("colBlocksRead" -> blocksRead, "colBlocks" -> blocksIn,
+              "colGroupsRead" -> gRead, "colGroups" -> gTotal)
+          // a task reading several files (storage-partitioned groups) reuses
+          // the metrics: start from the previous reader's counts
+          override def initMetricsValues(prev: Array[CustomTaskMetric]): Unit = {
+            val p = prev.map(m => m.name() -> m.value()).toMap.withDefaultValue(0L)
+            blocksRead += p("colBlocksRead"); blocksIn += p("colBlocks")
+            gRead += p("colGroupsRead"); gTotal += p("colGroups")
           }
+          override def close(): Unit = rawIn.close()
         }
       case None => textReader(rawIn, part, fileName, types, slotOf, defaults,
         masked, eqKeys)

@@ -68,4 +68,26 @@ class InventorySpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"session conf mutation outside GraftSession: ${offenders.mkString("; ")}")
   }
+
+  test("no process-global last* observation slots in src/main") {
+    // what a scan planned is reported on its own plan node; a global slot
+    // is last-writer-wins across concurrent queries. TextIndex's probe
+    // slots stay until a per-query trace record replaces them.
+    val pending = Set("lastTopNFiles", "lastOrFiles", "lastScoreShards",
+      "lastPhraseShards", "lastSnippetShards")
+    val slot = """\bvar\s+(last[A-Z]\w*)""".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      for {
+        p <- walk.iterator().asScala.toSeq
+        if p.toString.endsWith(".scala")
+        (line, i) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+        m <- slot.findAllMatchIn(line)
+        if !pending(m.group(1))
+      } yield s"$p:${i + 1}: ${m.group(1)}"
+    } finally walk.close()
+    assert(offenders.isEmpty,
+      s"process-global observation slots: ${offenders.mkString("; ")}")
+  }
 }

@@ -80,11 +80,10 @@ class AnnIndexSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     import spark.implicits._
     val q = Seq((9000L, Array(1.0f, 0.05f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
       .withColumn("nrm", sqrt(expr("graft_float_dot(embedding, embedding)")))
-    StoreSink.lastZonePrune = None
-    val got = AnnIndex.probe(spark, q, idx, nprobe = 1, topk = 3).collect()
+    val (got, plans) = withPlans(AnnIndex.probe(spark, q, idx, nprobe = 1, topk = 3).collect())
     assert(got.length == 3 && got.forall(_.getLong(1) <= 9),
       s"nprobe=1 must rank inside cluster A only: ${got.toSeq}")
-    val (cand, kept) = StoreSink.lastZonePrune.get
+    val (cand, kept) = ScanMetrics(plans, AnnIndex.postingsPath(idx)).plannedFiles
     assert(cand == 2 && kept == 1,
       s"probe must PLAN only the probed posting list: kept $kept of $cand")
     // plan shape: the candidate side reads the postings store (a store scan
@@ -205,14 +204,13 @@ class AnnIndexSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       s"postings must carry the attribute in the amt slot: ${posted.toSeq}")
     val q = Seq((9000L, Array(1.0f, 0.05f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
       .withColumn("nrm", sqrt(expr("graft_float_dot(embedding, embedding)")))
-    StoreSink.lastZonePrune = None
-    val got = AnnIndex.probeFiltered(spark, q, idx, 1L, nprobe = 1, topk = 3)
-      .collect()
+    val (got, plans) = withPlans(
+      AnnIndex.probeFiltered(spark, q, idx, 1L, nprobe = 1, topk = 3).collect())
     // cluster A holds ids 0..9; only the odd ones may rank
     assert(got.length == 3 &&
         got.forall(r => r.getLong(1) % 2 == 1 && r.getLong(1) <= 9),
       s"filtered probe must rank odd-labeled cluster-A vectors only: ${got.toSeq}")
-    val (cand, kept) = StoreSink.lastZonePrune.get
+    val (cand, kept) = ScanMetrics(plans, AnnIndex.postingsPath(idx)).plannedFiles
     assert(cand == 2 && kept <= 1,
       s"filtered probe must still plan only the probed cell: kept $kept of $cand")
     // the filtered set is NOT post-filtered top-k: an unfiltered top-3 of

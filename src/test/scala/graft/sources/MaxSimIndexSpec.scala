@@ -103,10 +103,10 @@ class MaxSimIndexSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(!plan.toLowerCase.contains(corpus.toLowerCase),
       "probe must not rescan the corpus store")
     // partition pruning in the postings: ONE of 2 cells planned
-    StoreSink.lastZonePrune = None
-    spark.read.format(fmt).option("path", MaxSimIndex.postingsPath(idx))
-      .load().where(col("grp") === "0").count()
-    val (cand, kept) = StoreSink.lastZonePrune.get
+    val (cand, kept) = scansOf {
+      spark.read.format(fmt).option("path", MaxSimIndex.postingsPath(idx))
+        .load().where(col("grp") === "0").count()
+    }.plannedFiles
     assert(cand == 2 && kept == 1,
       s"postings must prune to the probed cell: kept $kept of $cand")
   }

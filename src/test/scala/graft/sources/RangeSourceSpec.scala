@@ -65,7 +65,6 @@ class RangeSourceSpec extends SparkSpec {
   }
 
   test("runtime filtering: DPP narrows partition planning to the dim's keys") {
-    RangeSource.lastRuntimePrune = None
     val dim = spark.range(0, 200000, 25000)
       .select(col("id").as("dim_id")).where(col("dim_id") % 3 === 0)
     val q = ranged(0, 200000).join(broadcast(dim), col("id") === col("dim_id"))
@@ -76,8 +75,8 @@ class RangeSourceSpec extends SparkSpec {
     val r = q.collect().head
     assert(r.getLong(0) == 3L && r.getLong(1) == 0L && r.getLong(2) == 150000L)
     // 8 slices in the declared extent; only the 3 holding dim keys planned
-    assert(RangeSource.lastRuntimePrune.contains((8, 3)),
-      s"expected 8→3 slice narrowing, got ${RangeSource.lastRuntimePrune}")
+    val slices = (ScanMetrics(q).sum("slices"), ScanMetrics(q).sum("plannedSlices"))
+    assert(slices == ((8L, 3L)), s"expected 8→3 slice narrowing, got $slices")
   }
 
   test("EqualTo prunes to a single-row scan") {
@@ -210,7 +209,7 @@ class RangeSourceSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(base), true)
     val feedId = "spec-restart"
     RangeSource.resetFeed(feedId)
-    def run(reveals: Int): Unit = {
+    def run(reveals: Int): Array[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
       val q = spark.readStream.format("graft.sources.RangeSource")
         .option("start", "0").option("end", "200000")
         .option("feedId", feedId).option("chunkRows", "30000")
@@ -219,17 +218,15 @@ class RangeSourceSpec extends SparkSpec {
         .writeStream.format("parquet")
         .option("path", s"$base/out").option("checkpointLocation", s"$base/chk")
         .start()
-      try q.processAllAvailable() finally q.stop()
+      try { q.processAllAvailable(); q.recentProgress } finally q.stop()
     }
     // run 1: the external log only yields two chunks during this run
     run(2)
     assert(spark.read.parquet(s"$base/out").count() == 60000L,
       "run 1 must drain exactly the two revealed chunks")
     // run 2: must resume AT the committed offset — not initialOffset
-    RangeSource.lastRunFirstPlannedStart = None
-    run(Int.MaxValue)
-    assert(RangeSource.lastRunFirstPlannedStart.contains(60000L),
-      s"restart planned from ${RangeSource.lastRunFirstPlannedStart}, not the committed offset")
+    val start = run(Int.MaxValue).head.sources.head.startOffset
+    assert(start == "60000", s"restart planned from $start, not the committed offset")
     val all = spark.read.parquet(s"$base/out")
     assert(all.count() == 200000L, "restart lost or duplicated an offset range")
     assert(all.select(col("id")).distinct().count() == 200000L,

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *  - files are self-identifying (magic), so one manifest carries text and
   *    columnar generations side by side — encoding flips are per-file facts,
   *    never table rewrites;
-  *  - a narrow projection READS ONLY ITS BLOCKS (the lastColBlocks hook) —
+  *  - a narrow projection READS ONLY ITS BLOCKS (the scan's block counts) —
   *    the within-file scan cost the row format could not shed;
   *  - every mask/maintenance path (dv, eq, COW absorb) is encoding-blind;
   *  - values round-trip bit-identically under either encoding (shared
@@ -83,21 +83,18 @@ class StoreColumnarSpec extends SparkSpec {
     val dir = freshDir("proj")
     markColumnar(dir)
     df(1 to 1000, "g").write.format(fmt).mode("append").option("path", dir).save()
-    StoreSink.lastColBlocks = None
-    val ks = spark.read.format(fmt).option("path", dir).load()
-      .select(col("k")).collect().map(_.getLong(0)).toSet
-    assert(ks == (1L to 1000L).toSet)
-    assert(StoreSink.lastColBlocks.contains((1, 3)),
-      s"single-column projection read ${StoreSink.lastColBlocks} blocks")
+    assert(scansOf {
+      val ks = spark.read.format(fmt).option("path", dir).load()
+        .select(col("k")).collect().map(_.getLong(0)).toSet
+      assert(ks == (1L to 1000L).toSet)
+    }.readEach(1, 3), "single-column projection must read one block of three")
     // a zero-column scan (no masks needing keys) reads the header alone —
     // zero blocks (a plain COUNT(*) never even gets here: metadata agg
     // pushdown answers it without planning files)
-    StoreSink.lastColBlocks = None
-    val n = spark.read.format(fmt).option("path", dir).load()
-      .select(lit(1).as("one")).collect().length
-    assert(n == 1000)
-    assert(StoreSink.lastColBlocks.contains((0, 3)),
-      s"zero-column scan read ${StoreSink.lastColBlocks} blocks")
+    assert(scansOf {
+      assert(spark.read.format(fmt).option("path", dir).load()
+        .select(lit(1).as("one")).collect().length == 1000)
+    }.readEach(0, 3), "zero-column scan must read no block")
   }
 
   test("dv + eq masks and COW absorb are encoding-blind") {
@@ -117,12 +114,14 @@ class StoreColumnarSpec extends SparkSpec {
       assert(StoreSink.readEntries(new Path(dir), fs).exists(_.eq.isDefined))
       // a projection NOT containing k still applies the key mask (the key
       // block joins the read set)
-      StoreSink.lastColBlocks = None
-      val grps = spark.read.format(fmt).option("path", dir).load()
-        .select(col("grp")).collect()
-      assert(grps.length == 496)
-      assert(StoreSink.lastColBlocks.exists(_._1 == 2),
-        s"eq-masked grp scan read ${StoreSink.lastColBlocks} — wanted grp+key")
+      // (counts sum over groups: a masked group reads 2 blocks, others 1)
+      val masked = scansOf {
+        assert(spark.read.format(fmt).option("path", dir).load()
+          .select(col("grp")).collect().length == 496)
+      }
+      val (read, groups) = (masked.sum("colBlocksRead"), masked.sum("colGroupsRead"))
+      assert(read > groups && read <= 2 * groups,
+        s"eq-masked grp scan read $read blocks in $groups groups — wanted grp+key")
       // bulk delete -> COW rewrite; replacement files are columnar and clean
       spark.sql("DELETE FROM graft.store WHERE k > 100")
       val entries2 = StoreSink.readEntries(new Path(dir), fs)
@@ -254,10 +253,12 @@ class StoreColumnarSpec extends SparkSpec {
     assert(readBack(dir).map(_._1) ==
       ((1L to 950L).toSet -- Set(1L, 100L, 101L, 555L, 950L)))
     // narrow projection still reads one block per group
-    StoreSink.lastColBlocks = None
-    assert(spark.read.format(fmt).option("path", dir).load()
-      .select(col("amt_cents")).collect().length == 945)
-    assert(StoreSink.lastColBlocks.exists(_._2 == 3))
+    val narrow = scansOf {
+      assert(spark.read.format(fmt).option("path", dir).load()
+        .select(col("amt_cents")).collect().length == 945)
+    }
+    val (blocks, groups) = (narrow.sum("colBlocks"), narrow.sum("colGroupsRead"))
+    assert(groups > 0 && blocks == 3 * groups)
     // offset pushdown's boundary row-skip crosses group boundaries
     val off = spark.read.format(fmt).option("path", dir).load()
       .orderBy(col("k")).offset(300).limit(2).collect().map(_.getLong(0))
@@ -289,25 +290,23 @@ class StoreColumnarSpec extends SparkSpec {
     // block-local predicate index: 'region-2' lives only in group 2 (k
     // sorted, 100 rows per group) — the other groups' dictionaries lack
     // it and skip after ONE block read
-    StoreSink.lastColGroups = None
-    val n2 = spark.read.format(fmt).option("path", dir).load()
-      .where(col("grp") === "region-2").count()
-    assert(n2 == 100, s"$n2")
-    val (r, t) = StoreSink.lastColGroups.get
+    val (r, t) = scansOf {
+      val n2 = spark.read.format(fmt).option("path", dir).load()
+        .where(col("grp") === "region-2").count()
+      assert(n2 == 100, s"$n2")
+    }.groups
     assert(t == 3 && r == 1, s"dictionary pre-check must skip groups: $r of $t")
     // LIKE-'p%' rides the same one-block pre-check (round-12 verdict #7):
     // 'region-2%' matches nothing in groups 0/1's dictionaries — skipped;
     // a prefix matching EVERY group ('region-%') skips nothing
-    StoreSink.lastColGroups = None
-    val nLike = spark.read.format(fmt).option("path", dir).load()
-      .where(col("grp").like("region-2%")).count()
-    assert(nLike == 100, s"$nLike")
-    val (rl, tl) = StoreSink.lastColGroups.get
+    val (rl, tl) = scansOf {
+      val nLike = spark.read.format(fmt).option("path", dir).load()
+        .where(col("grp").like("region-2%")).count()
+      assert(nLike == 100, s"$nLike")
+    }.groups
     assert(tl == 3 && rl == 1, s"prefix pre-check must skip groups: $rl of $tl")
-    StoreSink.lastColGroups = None
-    assert(spark.read.format(fmt).option("path", dir).load()
-      .where(col("grp").like("region-%")).count() == 300)
-    assert(StoreSink.lastColGroups.get._1 == 3,
+    assert(scansOf(assert(spark.read.format(fmt).option("path", dir).load()
+      .where(col("grp").like("region-%")).count() == 300)).groups._1 == 3,
       "an all-matching prefix must not skip anything")
     // masks stay ordinal-correct over dict blocks
     withStore(dir) {
@@ -438,11 +437,9 @@ class StoreColumnarSpec extends SparkSpec {
     assert(readBack(dir) == rows.toSet, "e blocks must round-trip")
     // the dictionary predicate index is LAYOUT-BLIND: 'region-2' absent
     // from groups 0/1's e-block dictionaries — skipped after one block
-    StoreSink.lastColGroups = None
-    assert(spark.read.format(fmt).option("path", dir).load()
-      .where(col("grp") === "region-2").count() == 100)
-    assert(StoreSink.lastColGroups.contains((1, 3)),
-      s"e-block dict-skip: ${StoreSink.lastColGroups}")
+    val eSkip = scansOf(assert(spark.read.format(fmt).option("path", dir).load()
+      .where(col("grp") === "region-2").count() == 100)).groups
+    assert(eSkip == ((1L, 3L)), s"e-block dict-skip: $eSkip")
     // masks stay ordinal-correct through run-decoded ordinals
     withStore(dir) {
       spark.sql("DELETE FROM graft.store WHERE k IN (5, 150, 250)")
@@ -505,11 +502,9 @@ class StoreColumnarSpec extends SparkSpec {
     assert(groups.forall(h => h.compressed && h.dictFlags(1)),
       "dict + deflate must coexist per block")
     assert(readBack(dir) == rows.toSet)
-    StoreSink.lastColGroups = None
-    assert(spark.read.format(fmt).option("path", dir).load()
-      .where(col("grp") === "region-0").count() == 100)
-    assert(StoreSink.lastColGroups.contains((1, 3)),
-      s"dict-skip must work through inflation: ${StoreSink.lastColGroups}")
+    val zSkip = scansOf(assert(spark.read.format(fmt).option("path", dir).load()
+      .where(col("grp") === "region-0").count() == 100)).groups
+    assert(zSkip == ((1L, 3L)), s"dict-skip must work through inflation: $zSkip")
     // streaming epoch write inherits all three properties
     val sdir = freshDir("dictzip_stream")
     markColumnar(sdir)
@@ -556,20 +551,20 @@ class StoreColumnarSpec extends SparkSpec {
       // mid-file range: groups 0-1 and 4 skip, 2-3 load; the dv'd keys
       // 194/291 fall INSIDE the read range — a reader that forgot to
       // advance ordinals past skipped groups would mask the wrong rows
-      StoreSink.lastColGroups = None
-      val got = spark.table("graft.store").where(col("k").between(200, 399))
-        .select(col("k")).collect().map(_.getLong(0)).toSet
-      assert(got == (200 to 399).toSet - 291L - 388L, s"${got.size} rows")
-      val (read, total) = StoreSink.lastColGroups.get
+      val (read, total) = scansOf {
+        val got = spark.table("graft.store").where(col("k").between(200, 399))
+          .select(col("k")).collect().map(_.getLong(0)).toSet
+        assert(got == (200 to 399).toSet - 291L - 388L, s"${got.size} rows")
+      }.groups
       assert(total == 5 && read == 2,
         s"a mid-file range must decode only its groups: $read of $total")
       // a COW rewrite (bulk delete) keeps slot-0 group stats in the
       // replacement file: the next ranged read still skips
       spark.sql("DELETE FROM graft.store WHERE k >= 400")
-      StoreSink.lastColGroups = None
-      val n = spark.table("graft.store").where(col("k") < 100).count()
-      assert(n == 98, s"$n") // 0 and 97 deleted
-      val (r2, t2) = StoreSink.lastColGroups.get
+      val (r2, t2) = scansOf {
+        val n = spark.table("graft.store").where(col("k") < 100).count()
+        assert(n == 98, s"$n") // 0 and 97 deleted
+      }.groups
       assert(r2 < t2, s"COW replacement must keep group stats: $r2 of $t2")
       // row-level COW (UPDATE) must read whole files — no static pushdown
       // reaches its scan, so nothing can be skipped out of the rewrite
@@ -599,10 +594,8 @@ class StoreColumnarSpec extends SparkSpec {
     assert(spark.read.format(fmt).option("path", dir).load().collect().toSet ==
       spark.read.format(fmt).option("path", plain).load().collect().toSet)
     // narrow projection still skips blocks (inflate only what's projected)
-    StoreSink.lastColBlocks = None
-    assert(spark.read.format(fmt).option("path", dir).load()
-      .select(col("k")).collect().length == 2000)
-    assert(StoreSink.lastColBlocks.contains((1, 3)))
+    assert(scansOf(assert(spark.read.format(fmt).option("path", dir).load()
+      .select(col("k")).collect().length == 2000)).readEach(1, 3))
     // dv mask + COW rewrite: the replacement stays compressed (#GC2)
     withStore(dir) {
       spark.sql("DELETE FROM graft.store WHERE k in (5, 6)") // dv
@@ -630,19 +623,22 @@ class StoreColumnarSpec extends SparkSpec {
       .write.format(fmt).mode("append").option("path", dir).save()
     def store = spark.read.format(fmt).option("path", dir).load()
     // LIMIT: a live-row-count file prefix
-    StoreSink.lastLimitPlan = None
-    assert(store.limit(10).collect().length == 10)
-    assert(StoreSink.lastLimitPlan.exists { case (t, p) => p < t && p >= 1 },
-      s"limit should plan a file prefix: ${StoreSink.lastLimitPlan}")
+    // (candidates, files the cut planned; 0 when no cut ran)
+    def cut(df: DataFrame) = {
+      val m = ScanMetrics(df); (m.sum("partKeptFiles"), m.sum("limitKeptFiles"))
+    }
+    val lim = store.limit(10)
+    assert(lim.collect().length == 10)
+    val (t, p) = cut(lim)
+    assert(p < t && p >= 1, s"limit should plan a file prefix: ${cut(lim)}")
     // TopN: zone-ordered coverage; values must be the true top
-    StoreSink.lastTopNPlan = None
-    val top = store.orderBy(col("k").desc).limit(5).collect().map(_.getLong(0))
+    val topq = store.orderBy(col("k").desc).limit(5)
+    val top = topq.collect().map(_.getLong(0))
     assert(top.toSeq == (996 to 1000).reverse.map(_.toLong),
       s"topn over columnar misread: ${top.toSeq}")
-    assert(StoreSink.lastTopNPlan.exists { case (t, p) => p < t && p >= 1 },
-      s"topn should plan zone coverage: ${StoreSink.lastTopNPlan}")
+    val (tt, tp) = cut(topq)
+    assert(tp < tt && tp >= 1, s"topn should plan zone coverage: ${cut(topq)}")
     // OFFSET: whole-file drop + boundary row-skip into a columnar file
-    StoreSink.lastOffsetPlan = None
     val off = store.orderBy(col("k")).offset(300).limit(3)
       .collect().map(_.getLong(0))
     assert(off.toSeq == Seq(301L, 302L, 303L), s"offset misread: ${off.toSeq}")

@@ -47,10 +47,9 @@ class StorePartSpec extends SparkSpec {
     val t = spark.read.format(fmt).option("path", dir).load()
     assert(t.count() == 90)
     // EXACT partition pruning (the bloom is probabilistic; dirs are not)
-    StoreSink.lastPartPrune = None
-    val one = t.where(col("grp") === "g1").agg(sum(col("amt_cents"))).collect()(0).getLong(0)
-    assert(one == (1 to 90).filter(_ % 3 == 1).map(_ * 100L).sum)
-    val (_, kept) = StoreSink.lastPartPrune.get
+    val oneq = t.where(col("grp") === "g1").agg(sum(col("amt_cents")))
+    assert(oneq.collect()(0).getLong(0) == (1 to 90).filter(_ % 3 == 1).map(_ * 100L).sum)
+    val kept = ScanMetrics(oneq).sum("partKeptFiles")
     assert(kept == entries.count(_.part.contains("g1")) && kept < entries.size,
       s"grp=g1 should plan exactly its partition's files, planned kept=$kept " +
         s"of ${entries.size}")
@@ -198,9 +197,7 @@ class StorePartSpec extends SparkSpec {
     // MIXED-GENERATION PRUNING: k = 5 prunes gen-1 via its bucket value
     // (floorMod(5,4)=1) and can only zone-prune gen-2; grp='g1' prunes
     // gen-2 via its identity value. Both answers stay exact.
-    StoreSink.lastZonePrune = None
-    assert(t.where(col("k") === 5).count() == 1)
-    val (tot1, kept1) = StoreSink.lastZonePrune.get
+    val (tot1, kept1) = scansOf(assert(t.where(col("k") === 5).count() == 1)).plannedFiles
     assert(kept1 < tot1, s"k=5 must prune the old bucket generation: $kept1/$tot1")
     assert(t.where(col("grp") === "g1").count() == 40)
     // partition DDL refuses while generations are mixed (the same logical
@@ -274,9 +271,8 @@ class StorePartSpec extends SparkSpec {
     // an IN list spanning the whole key range but ONE bucket: zones keep
     // every file (each covers the range), the bucket mapping prunes alone
     val keys = (2L to 78L by 4L).toSeq
-    StoreSink.lastPartPrune = None
-    assert(t.where(col("k").isin(keys: _*)).count() == keys.size)
-    val (cand, kept) = StoreSink.lastPartPrune.get
+    val probed = scansOf(assert(t.where(col("k").isin(keys: _*)).count() == keys.size))
+    val (cand, kept) = (probed.sum("zoneKeptFiles"), probed.sum("partKeptFiles"))
     val inBucket2 = StoreSink.readEntries(root, fs).count(_.part.contains("2"))
     assert(kept == inBucket2 && kept < cand,
       s"k IN (bucket-2 keys) should plan only bucket 2's files, planned ($cand, $kept)")

@@ -26,6 +26,12 @@ class StoreSinkSpec extends SparkSpec {
     spark.read.format(fmt).option("path", dir).load()
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
 
+  /** (files in the manifest, files planned) over every store scan `body` ran. */
+  private def filesOf(body: => Any): (Long, Long) = scansOf(body).plannedFiles
+
+  /** The aggregate functions the manifest answered for `body`'s queries. */
+  private def aggPushOf(body: => Any): Option[String] = scansOf(body).aggPush
+
   private def freshDir(name: String): String = {
     val dir = s"target/tmp/storesink_spec_$name"
     fs.delete(new Path(dir), true)
@@ -221,10 +227,8 @@ class StoreSinkSpec extends SparkSpec {
     df(1000 to 1040, "b").repartition(2).write.format(fmt).mode("append").option("path", dir).save()
     val all = spark.read.format(fmt).option("path", dir).load()
 
-    StoreSink.lastZonePrune = None
     val low = all.where(col("k") < 100)
-    assert(low.count() == 40)
-    val (planned, kept) = StoreSink.lastZonePrune.get
+    val (planned, kept) = filesOf(assert(low.count() == 40))
     assert(planned > kept && kept <= 2,
       s"zone maps did not skip the high-range files: planned=$planned kept=$kept")
     val p = low.queryExecution.executedPlan.toString
@@ -232,13 +236,11 @@ class StoreSinkSpec extends SparkSpec {
 
     // runtime filtering: a selective broadcast dim prunes planning to the
     // zones its realized keys land in (the dim filter is runtime-only)
-    StoreSink.lastZonePrune = None
     val dim = spark.range(0, 4).select((col("id") + 1000).as("dk"))
       .where(col("dk") % 2 === 0)
     val j = all.join(org.apache.spark.sql.functions.broadcast(dim),
                      col("k") === col("dk"))
-    assert(j.count() == 2)
-    val (p2, k2) = StoreSink.lastZonePrune.get
+    val (p2, k2) = filesOf(assert(j.count() == 2))
     assert(k2 < p2, s"runtime keys did not narrow planning: $p2 -> $k2")
   }
 
@@ -255,28 +257,24 @@ class StoreSinkSpec extends SparkSpec {
     // dim realizes exactly "b" at RUNTIME: the selective predicate is on
     // `id`, so no static grp constant can be inferred — and a Range dim
     // (not a LocalRelation) is what DPP's injection heuristic accepts
-    StoreSink.lastZonePrune = None
-    StoreSink.lastRuntimeFilter = None
     val dim = spark.range(0, 2)
       .select(col("id"), expr("case when id = 0 then 'a' else 'b' end").as("dgrp"))
       .where(col("id") % 2 === 1)
     val j = all.join(org.apache.spark.sql.functions.broadcast(dim),
                      col("grp") === col("dgrp"))
-    assert(j.count() == 40)
-    assert(StoreSink.lastRuntimeFilter.exists(_.contains("grp")),
-      s"no runtime grp filter was injected: ${StoreSink.lastRuntimeFilter}")
-    val (t1, p1) = StoreSink.lastZonePrune.get
+    val joined = scansOf(assert(j.count() == 40))
+    assert(joined.described("runtimeFilters=[grp]"),
+      s"no runtime grp filter was injected: ${joined.scans.map(_.scan.description())}")
+    val (t1, p1) = joined.plannedFiles
     assert(t1 == 4 && p1 == 2,
       s"realized grp values must prune via the blooms: $p1/$t1")
     // an absent realized value prunes EVERY file
-    StoreSink.lastZonePrune = None
     val dimAbsent = spark.range(0, 2)
       .select(col("id"), expr("case when id = 0 then 'zz' else 'b' end").as("dgrp"))
       .where(col("id") % 2 === 0)
     val j0 = all.join(org.apache.spark.sql.functions.broadcast(dimAbsent),
                       col("grp") === col("dgrp"))
-    assert(j0.count() == 0)
-    val (t0, p0) = StoreSink.lastZonePrune.get
+    val (t0, p0) = filesOf(assert(j0.count() == 0))
     assert(t0 == 4 && p0 == 0,
       s"absent realized value must plan zero files: $p0/$t0")
   }
@@ -423,10 +421,11 @@ class StoreSinkSpec extends SparkSpec {
       s"expected 4 sealed segments and nothing loose, got: ${listLines()}")
 
     // point query: only the one zone-matched segment is READ during planning
-    val n = spark.read.format(fmt).option("path", dir).load()
-      .where(col("k").between(10, 20)).count()
-    assert(n == 11)
-    val (segsTotal, segsRead) = StoreSink.lastSegPlan.get
+    val point = scansOf {
+      assert(spark.read.format(fmt).option("path", dir).load()
+        .where(col("k").between(10, 20)).count() == 11)
+    }
+    val (segsTotal, segsRead) = (point.sum("manifestSegments"), point.sum("segmentsRead"))
     assert(segsTotal == 4 && segsRead == 1,
       s"point planning must read 1 of 4 segments, read $segsRead")
 
@@ -470,11 +469,10 @@ class StoreSinkSpec extends SparkSpec {
       .option("path", dir).save()
     val t = spark.read.format(fmt).option("path", dir).load()
 
-    StoreSink.lastAggPush = None
     val q = t.agg(count(lit(1)), min(col("k")), max(col("k")))
     val r = q.collect()(0)
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((60L, 1L, 60L)))
-    assert(StoreSink.lastAggPush.contains(Seq("count", "min", "max")),
+    assert(ScanMetrics(q).aggPush.contains("count,min,max"),
       "unfiltered COUNT/MIN/MAX must be metadata-answered")
     assert(q.queryExecution.executedPlan.toString.contains("GraftStoreAggScan"),
       "executed plan must carry the metadata agg scan — no file partitions")
@@ -482,22 +480,17 @@ class StoreSinkSpec extends SparkSpec {
     // a pinned snapshot answers from ITS version's metadata
     spark.conf.set(GraftCatalog.StorePathKey, dir)
     try {
-      StoreSink.lastAggPush = None
-      assert(spark.sql("SELECT COUNT(*) FROM graft.store VERSION AS OF 1")
-        .collect()(0).getLong(0) == 40)
-      assert(StoreSink.lastAggPush.contains(Seq("count")))
+      assert(aggPushOf(assert(spark.sql("SELECT COUNT(*) FROM graft.store VERSION AS OF 1")
+        .collect()(0).getLong(0) == 40)).contains("count"))
     } finally spark.conf.unset(GraftCatalog.StorePathKey)
 
     // residual filters make metadata unsafe: decline, fall back, agree
-    StoreSink.lastAggPush = None
-    assert(t.where(col("grp") === "b").agg(count(lit(1)))
-      .collect()(0).getLong(0) == 20)
-    assert(StoreSink.lastAggPush.isEmpty, "filtered aggregate must decline")
+    assert(aggPushOf(assert(t.where(col("grp") === "b").agg(count(lit(1)))
+      .collect()(0).getLong(0) == 20)).isEmpty, "filtered aggregate must decline")
 
     // COUNT(col) (null-sensitive) is not answerable from row counts
-    StoreSink.lastAggPush = None
-    assert(t.agg(count(col("grp"))).collect()(0).getLong(0) == 60)
-    assert(StoreSink.lastAggPush.isEmpty, "COUNT(col) must decline")
+    assert(aggPushOf(assert(t.agg(count(col("grp"))).collect()(0).getLong(0) == 60))
+      .isEmpty, "COUNT(col) must decline")
   }
 
   test("_file metadata column: provenance on request, absent from SELECT *") {
@@ -548,14 +541,38 @@ class StoreSinkSpec extends SparkSpec {
     df(1000 to 1040, "b").repartition(2).write.format(fmt).mode("append").option("path", dir).save()
     val q = spark.read.format(fmt).option("path", dir).load()
       .where(col("k") < 100)
-    q.collect()
-    val scan = q.queryExecution.executedPlan.collectLeaves()
-      .find(_.getClass.getSimpleName == "BatchScanExec").get
-    val metrics = scan.metrics
-    assert(metrics.contains("manifestFiles") && metrics.contains("plannedFiles"),
-      s"custom metrics missing: ${metrics.keys}")
-    assert(metrics("manifestFiles").value == 4 && metrics("plannedFiles").value == 2,
-      s"expected 4 manifest / 2 planned, got ${metrics("manifestFiles").value}/${metrics("plannedFiles").value}")
+    // an aggregate adds an exchange, so the scan sits under the adaptive
+    // plan's query stages — the walker reaches it there too
+    val agg = q.groupBy(col("grp")).count()
+    Seq(q, agg).foreach { d =>
+      d.collect()
+      val metrics = ScanMetrics(d).scans.head.metrics
+      assert(metrics.contains("manifestFiles") && metrics.contains("plannedFiles"),
+        s"custom metrics missing: ${metrics.keys}")
+      assert(ScanMetrics(d).plannedFiles == ((4L, 2L)),
+        s"expected 4 manifest / 2 planned, got ${ScanMetrics(d).plannedFiles}")
+    }
+    assert(agg.queryExecution.executedPlan.getClass.getSimpleName == "AdaptiveSparkPlanExec")
+  }
+
+  test("concurrent scans each report their own planning on their own plan") {
+    val dir = freshDir("isolation")
+    // four 10-row files: a point probe plans one, a LIMIT 15 cut plans two
+    df(1 to 40, "a").repartitionByRange(4, col("k"))
+      .write.format(fmt).mode("overwrite").option("path", dir).save()
+    def store = spark.read.format(fmt).option("path", dir).load()
+    (1 to 3).foreach { round =>
+      val point = store.where(col("k") === 5L)
+      val limited = store.limit(15)
+      val (np, nl) = StoreSink.inParallel(point.collect().length)(limited.collect().length)
+      assert(np == 1 && nl == 15)
+      def seen(d: DataFrame) = {
+        val m = ScanMetrics(d)
+        (m.plannedFiles, (m.sum("partKeptFiles"), m.sum("limitKeptFiles")))
+      }
+      assert(seen(point) == (((4L, 1L), (1L, 0L))), s"round $round point: ${seen(point)}")
+      assert(seen(limited) == (((4L, 2L), (4L, 2L))), s"round $round limit: ${seen(limited)}")
+    }
   }
 
   test("null columns and URL-unsafe strings round-trip") {
@@ -606,19 +623,15 @@ class StoreSinkSpec extends SparkSpec {
       case (g, ks) => df(ks, g).repartition(1)
         .write.format(fmt).mode("append").option("path", dir).save()
     }
-    val got = spark.read.format(fmt).option("path", dir).load()
-      .where(col("grp") === "b").agg(count(lit(1))).collect()(0).getLong(0)
-    assert(got == 100)
-    assert(StoreSink.lastZonePrune.contains((3, 1)),
-      s"bloom should plan 1 of 3 files for grp='b', got ${StoreSink.lastZonePrune}")
-    val absent = spark.read.format(fmt).option("path", dir).load()
-      .where(col("grp") === "zz").count()
-    assert(absent == 0 && StoreSink.lastZonePrune.contains((3, 0)),
-      s"absent grp literal should plan zero files, got ${StoreSink.lastZonePrune}")
+    def load = spark.read.format(fmt).option("path", dir).load()
+    val b = filesOf(assert(load.where(col("grp") === "b").agg(count(lit(1)))
+      .collect()(0).getLong(0) == 100))
+    assert(b == ((3L, 1L)), s"bloom should plan 1 of 3 files for grp='b', got $b")
+    val absent = filesOf(assert(load.where(col("grp") === "zz").count() == 0))
+    assert(absent == ((3L, 0L)), s"absent grp literal should plan zero files, got $absent")
     // blooms prune files, never rows: an IN over two grps keeps both files
-    val in2 = spark.read.format(fmt).option("path", dir).load()
-      .where(col("grp").isin("a", "c")).count()
-    assert(in2 == 200 && StoreSink.lastZonePrune.contains((3, 2)))
+    assert(filesOf(assert(load.where(col("grp").isin("a", "c")).count() == 200))
+      == ((3L, 2L)))
   }
 
   test("changes: net row diff between versions, updates as delete+insert pairs") {
@@ -675,13 +688,11 @@ class StoreSinkSpec extends SparkSpec {
       .map(k => (k.toLong, "a", k * 100L)).toSet)
     // live row counts track the vector (COUNT pushdown stays exact; MIN/MAX
     // declines on vectored entries)
-    StoreSink.lastAggPush = None
     val t = spark.read.format(fmt).option("path", dir).load()
-    assert(t.agg(count(lit(1))).collect()(0).getLong(0) == 79)
-    assert(StoreSink.lastAggPush.contains(Seq("count")))
-    StoreSink.lastAggPush = None
-    assert(t.agg(min(col("k"))).collect()(0).getLong(0) == 1)
-    assert(StoreSink.lastAggPush.isEmpty, "MIN must decline on vectored entries")
+    assert(aggPushOf(assert(t.agg(count(lit(1))).collect()(0).getLong(0) == 79))
+      .contains("count"))
+    assert(aggPushOf(assert(t.agg(min(col("k"))).collect()(0).getLong(0) == 1))
+      .isEmpty, "MIN must decline on vectored entries")
     // a second delete in the same file ACCUMULATES into a fresh vector
     del(7L)
     val e2 = StoreSink.readEntries(root, fs)
@@ -725,11 +736,9 @@ class StoreSinkSpec extends SparkSpec {
     assert(readBack(dir) == (1 to 80).filterNot(Set(5, 25))
       .map(k => (k.toLong, "a", k * 100L)).toSet)
     // rows is an UPPER BOUND on eq-vectored entries: every agg declines
-    StoreSink.lastAggPush = None
     val t = spark.read.format(fmt).option("path", dir).load()
-    assert(t.agg(count(lit(1))).collect()(0).getLong(0) == 78)
-    assert(StoreSink.lastAggPush.isEmpty,
-      "COUNT must decline on equality-vectored entries")
+    assert(aggPushOf(assert(t.agg(count(lit(1))).collect()(0).getLong(0) == 78))
+      .isEmpty, "COUNT must decline on equality-vectored entries")
     // a second keyed delete absorbs the previous sidecar into a fresh one
     eqDel(dir, Seq(7L))
     assert(readBack(dir).size == 77)
@@ -739,10 +748,8 @@ class StoreSinkSpec extends SparkSpec {
       "compaction must absorb equality sidecars")
     assert(readBack(dir).size == 77 &&
       !readBack(dir).exists(r => Set(5L, 7L, 25L)(r._1)))
-    StoreSink.lastAggPush = None
-    assert(spark.read.format(fmt).option("path", dir).load()
-      .agg(count(lit(1))).collect()(0).getLong(0) == 77)
-    assert(StoreSink.lastAggPush.contains(Seq("count")),
+    assert(aggPushOf(assert(spark.read.format(fmt).option("path", dir).load()
+      .agg(count(lit(1))).collect()(0).getLong(0) == 77)).contains("count"),
       "pushdown must resume once sidecars are absorbed")
     // vacuum GCs sidecars referenced only by expired generations
     StoreSink.vacuum(dir, 1)
@@ -1154,15 +1161,15 @@ class StoreSinkSpec extends SparkSpec {
       // narrow fee range plans a strict file subset (spec-pinned count)
       val narrow = spark.read.format(fmt).option("path", dir).load()
         .where(col("fee") >= 0 && col("fee") < 50)
-      assert(narrow.count() == (1L to 400L).count(k => (k * 7) % 400 < 50))
-      val (total, planned) = StoreSink.lastZonePrune.get
+      val (total, planned) =
+        filesOf(assert(narrow.count() == (1L to 400L).count(k => (k * 7) % 400 < 50)))
       assert(total == 8 && planned <= 2,
         s"fee zones must prune planning: planned $planned of $total")
       // unfiltered MIN/MAX(fee): answered from metadata, zero files
-      StoreSink.lastAggPush = None
-      val mm = spark.read.format(fmt).option("path", dir).load()
-        .agg(min(col("fee")), max(col("fee"))).collect()(0)
-      assert(StoreSink.lastAggPush.contains(Seq("min_s:fee", "max_s:fee")))
+      val mmq = spark.read.format(fmt).option("path", dir).load()
+        .agg(min(col("fee")), max(col("fee")))
+      val mm = mmq.collect()(0)
+      assert(ScanMetrics(mmq).aggPush.contains("min_s:fee,max_s:fee"))
       assert(mm.getLong(0) == (1L to 400L).map(k => (k * 7) % 400).min &&
              mm.getLong(1) == (1L to 400L).map(k => (k * 7) % 400).max)
       // compaction rewrites PRESERVE declared stats (factory re-resolves)
@@ -1177,10 +1184,10 @@ class StoreSinkSpec extends SparkSpec {
                 "('graft.stats.cols')")
       Seq((1000L, "gx", 1L, 9999L)).toDF("k", "grp", "amt_cents", "fee")
         .write.format(fmt).mode("append").option("path", dir).save()
-      StoreSink.lastAggPush = None
-      val mm2 = spark.read.format(fmt).option("path", dir).load()
-        .agg(max(col("fee"))).collect()(0)
-      assert(StoreSink.lastAggPush.isEmpty,
+      val mm2q = spark.read.format(fmt).option("path", dir).load()
+        .agg(max(col("fee")))
+      val mm2 = mm2q.collect()(0)
+      assert(ScanMetrics(mm2q).aggPush.isEmpty,
         "MIN/MAX must decline when a row-bearing entry lacks the stat")
       assert(mm2.getLong(0) == 9999L)
       val wide = spark.read.format(fmt).option("path", dir).load()
@@ -1212,9 +1219,7 @@ class StoreSinkSpec extends SparkSpec {
         .toDF("k", "grp", "amt_cents", "fee")
         .repartition(8, col("k"))
         .write.format(fmt).mode("overwrite").option("path", dir).save()
-      def planned(p: org.apache.spark.sql.DataFrame): (Int, Int) = {
-        p.count(); StoreSink.lastZonePrune.get
-      }
+      def planned(p: org.apache.spark.sql.DataFrame): (Long, Long) = filesOf(p.count())
       def store = spark.read.format(fmt).option("path", dir).load()
       val (t0, p0) = planned(store.where(col("fee") < 2048))
       assert(t0 == 8 && p0 == 8, s"scattered layout should not prune: $p0/$t0")
@@ -1342,10 +1347,13 @@ class StoreSinkSpec extends SparkSpec {
     assert(entries.size == 9 && entries.forall(_.nullK.isDefined) &&
            entries.map(_.nullK.get).sum == 3, s"${entries.map(_.nullK)}")
     def store = spark.read.format(fmt).option("path", dir).load()
-    def topn(df: org.apache.spark.sql.DataFrame): (Seq[Any], (Int, Int)) = {
-      StoreSink.lastTopNPlan = None
+    // (rows, (candidates, files the top-n planning kept)); the scan must
+    // name the top-n it took over
+    def topn(df: org.apache.spark.sql.DataFrame): (Seq[Any], (Long, Long)) = {
       val rows = df.collect().map(r => if (r.isNullAt(0)) null else r.getLong(0)).toSeq
-      (rows, StoreSink.lastTopNPlan.getOrElse((-1, -1)))
+      val m = ScanMetrics(df)
+      assert(m.described(" topN=5"), s"top-n not pushed: ${m.scans.map(_.scan.description())}")
+      (rows, (m.sum("partKeptFiles"), m.sum("limitKeptFiles")))
     }
     // ASC NULLS FIRST (Spark's asc default): 3 nulls + the 2 smallest keys;
     // planned = the null file + the lowest zone
@@ -1360,12 +1368,8 @@ class StoreSinkSpec extends SparkSpec {
     val (r3, (t3, p3)) = topn(store.orderBy(col("k").desc).limit(5).select(col("k")))
     assert(r3 == Seq(400L, 399L, 398L, 397L, 396L) && p3 == 1, s"$p3/$t3")
     // IS [NOT] NULL pruning from the exact null counts
-    StoreSink.lastZonePrune = None
-    assert(store.where(col("k").isNull).count() == 3)
-    assert(StoreSink.lastZonePrune.get == ((9, 1)))
-    StoreSink.lastZonePrune = None
-    assert(store.where(col("k").isNotNull).count() == 400)
-    assert(StoreSink.lastZonePrune.get == ((9, 8)),
+    assert(filesOf(assert(store.where(col("k").isNull).count() == 3)) == ((9L, 1L)))
+    assert(filesOf(assert(store.where(col("k").isNotNull).count() == 400)) == ((9L, 8L)),
       "IS NOT NULL must skip the all-null file")
     // an equality mask makes counts inexact: TopN falls back to the FULL
     // candidate plan (sound superset), the answer unchanged
@@ -1398,22 +1402,24 @@ class StoreSinkSpec extends SparkSpec {
     }
     val expected = (entries.drop(2).flatMap(e => linesOf(e.name)) ++
       linesOf(entries(1).name).drop(7)).toSet
-    StoreSink.lastOffsetPlan = None
-    val got = store.offset(m).select(col("k")).collect().map(_.getLong(0)).toSet
+    val page = store.offset(m).select(col("k"))
+    val got = page.collect().map(_.getLong(0)).toSet
     assert(got == expected,
       s"offset must drop exactly the manifest-order prefix: ${got.size} vs ${expected.size}")
-    assert(StoreSink.lastOffsetPlan.contains((8, 7)),
-      s"file 1 should not be planned: ${StoreSink.lastOffsetPlan}")
+    // the scan names the offset it took over; a declined push leaves none
+    val paged = ScanMetrics(page)
+    val cut = (paged.sum("partKeptFiles"), paged.sum("plannedFiles"))
+    assert(paged.described(s" offset=$m") && cut == ((8L, 7L)),
+      s"file 1 should not be planned: $cut")
+    def offsetPushed(body: => Any): Boolean = scansOf(body).described(" offset=")
     // a filter above the scan declines the push (Spark keeps its Offset
     // node; the count is still exact)
-    StoreSink.lastOffsetPlan = None
-    assert(store.where(col("grp") === "a").offset(m).count() == 400L - m)
-    assert(StoreSink.lastOffsetPlan.isEmpty, "filtered scans must not push")
+    assert(!offsetPushed(assert(store.where(col("grp") === "a").offset(m).count() == 400L - m)),
+      "filtered scans must not push")
     // an equality mask makes counts inexact: the push is refused up front
     eqDel(dir, Seq(5L))
-    StoreSink.lastOffsetPlan = None
-    assert(store.offset(10).count() == 389) // 399 live - 10
-    assert(StoreSink.lastOffsetPlan.isEmpty, "masked stores must not push")
+    assert(!offsetPushed(assert(store.offset(10).count() == 389)), // 399 live - 10
+      "masked stores must not push")
   }
 
   test("string zone stats: analyze backfills truncated-prefix bounds, " +
@@ -1435,10 +1441,7 @@ class StoreSinkSpec extends SparkSpec {
         .write.format(fmt).mode("overwrite").option("path", dir).save()
       // written BEFORE the declaration: stat-less, nothing prunes
       def store = spark.read.format(fmt).option("path", dir).load()
-      def planned(p: org.apache.spark.sql.DataFrame): (Int, Int) = {
-        StoreSink.lastZonePrune = None
-        p.count(); StoreSink.lastZonePrune.get
-      }
+      def planned(p: org.apache.spark.sql.DataFrame): (Long, Long) = filesOf(p.count())
       val (t0, p0) = planned(store.where(col("tag") === tagOf(7)))
       assert(t0 == p0, "stat-less files must never prune")
       spark.sql("ALTER TABLE graft.store SET TBLPROPERTIES " +
@@ -1674,10 +1677,10 @@ class StoreSinkSpec extends SparkSpec {
       assert(StoreSink.readProps(root, fs).toMap
         .get(StoreSink.StatColsProp).contains("fare"),
         "rename must follow in graft.stats.cols")
-      StoreSink.lastAggPush = None
-      val mm1 = store.agg(min(col("fare")), max(col("fare"))).collect()(0)
+      val mm1q = store.agg(min(col("fare")), max(col("fare")))
+      val mm1 = mm1q.collect()(0)
       assert((mm1.getLong(0), mm1.getLong(1)) == (0L, 49L))
-      assert(StoreSink.lastAggPush.contains(Seq("min_s:fare", "max_s:fare")),
+      assert(ScanMetrics(mm1q).aggPush.contains("min_s:fare,max_s:fare"),
         "renamed stats must keep serving the metadata MIN/MAX")
       // DROP strips: old entries must NOT satisfy a later same-name re-ADD
       spark.sql("ALTER TABLE graft.store DROP COLUMN fare")
@@ -1691,11 +1694,11 @@ class StoreSinkSpec extends SparkSpec {
       // the re-added fare (fresh field id) reads NULL from every old file:
       // MIN/MAX must decline the metadata path and answer NULL — the
       // pre-fix behavior returned the DROPPED column's extremum here
-      StoreSink.lastAggPush = None
-      val mm2 = store.agg(min(col("fare")), max(col("fare"))).collect()(0)
+      val mm2q = store.agg(min(col("fare")), max(col("fare")))
+      val mm2 = mm2q.collect()(0)
       assert(mm2.isNullAt(0) && mm2.isNullAt(1),
         s"re-added column is all-NULL, got ${mm2.toSeq}")
-      assert(!StoreSink.lastAggPush.exists(_.exists(_.startsWith("min_s"))),
+      assert(!ScanMetrics(mm2q).aggPush.exists(_.contains("min_s")),
         "stat-less entries must decline the metadata MIN/MAX")
       // STRING stats get the same hygiene: drop a string stat column, then
       // RENAME another string column onto the freed name — the old prefix
@@ -1904,27 +1907,28 @@ class StoreSinkSpec extends SparkSpec {
       entries.forall(e => e.minA.isDefined && e.maxA.isDefined),
       s"amt zones missing from manifest: ${entries.map(_.line)}")
     // a narrow amt probe plans a strict subset of files, result exact
-    val got = spark.read.format(fmt).option("path", dir).load()
-      .where(col("amt_cents") <= 70L).collect()
-    val (total, kept) = StoreSink.lastZonePrune.get
+    val probe = spark.read.format(fmt).option("path", dir).load()
+      .where(col("amt_cents") <= 70L)
+    val got = probe.collect()
+    val (total, kept) = ScanMetrics(probe).plannedFiles
     assert(total == 4 && kept < 4, s"amt zones did not prune: $total/$kept")
     assert(got.map(_.getLong(0)).sorted.toSeq ==
       (1 to 400).filter(k => (k % 100) * 7 <= 70).map(_.toLong),
       "pruned amt read lost or invented rows")
     // unfiltered MIN/MAX(amt_cents) answers from metadata (zero files)
-    StoreSink.lastAggPush = None
-    val r = spark.read.format(fmt).option("path", dir).load()
-      .agg(min(col("amt_cents")), max(col("amt_cents"))).collect()(0)
-    assert(StoreSink.lastAggPush.contains(Seq("min_a", "max_a")),
-      s"amt MIN/MAX not metadata-answered: ${StoreSink.lastAggPush}")
+    val mmq = spark.read.format(fmt).option("path", dir).load()
+      .agg(min(col("amt_cents")), max(col("amt_cents")))
+    val r = mmq.collect()(0)
+    assert(ScanMetrics(mmq).aggPush.contains("min_a,max_a"),
+      s"amt MIN/MAX not metadata-answered: ${ScanMetrics(mmq).aggPush}")
     assert(r.getLong(0) == 0L && r.getLong(1) == 99L * 7L)
     // a deletion vector turns zones conservative: MIN/MAX must decline
-    StoreSink.lastAggPush = None
     graft.sources.Sources.withStorePath(spark, dir) {
       spark.sql("DELETE FROM graft.store WHERE k = 7")
-      val r2 = spark.table("graft.store")
-        .agg(min(col("amt_cents")), max(col("amt_cents"))).collect()(0)
-      assert(StoreSink.lastAggPush.isEmpty,
+      val r2q = spark.table("graft.store")
+        .agg(min(col("amt_cents")), max(col("amt_cents")))
+      val r2 = r2q.collect()(0)
+      assert(ScanMetrics(r2q).aggPush.isEmpty,
         "MIN/MAX pushdown must decline on a vectored entry")
       assert(r2.getLong(0) == 0L && r2.getLong(1) == 99L * 7L)
     }
@@ -1936,13 +1940,16 @@ class StoreSinkSpec extends SparkSpec {
       .write.format(fmt).mode("overwrite").option("path", dir).save()
     graft.sources.Sources.withStorePath(spark, dir) {
       // 4 files x 10 rows; LIMIT 15 needs exactly the first 2 files
-      StoreSink.lastLimitPlan = None
-      val n = spark.sql(
-        "SELECT COUNT(*) FROM (SELECT * FROM graft.store LIMIT 15)")
-        .collect()(0).getLong(0)
-      assert(n == 15)
-      assert(StoreSink.lastLimitPlan.contains((4, 2)),
-        s"expected a 2-file prefix plan, got ${StoreSink.lastLimitPlan}")
+      // (candidates, files the prefix cut planned; 0 when it declined)
+      def limit15(): (Long, Long) = {
+        val q = spark.sql("SELECT COUNT(*) FROM (SELECT * FROM graft.store LIMIT 15)")
+        assert(q.collect()(0).getLong(0) == 15)
+        val m = ScanMetrics(q)
+        assert(m.described(" limit=15"), s"limit not pushed: ${m.scans.map(_.scan.description())}")
+        (m.sum("partKeptFiles"), m.sum("limitKeptFiles"))
+      }
+      val cut = limit15()
+      assert(cut == ((4L, 2L)), s"expected a 2-file prefix plan, got $cut")
       // an equality-masked store has upper-bound counts only: the cut
       // must decline (full plan) and the limited count stays exact
       spark.conf.set("spark.graft.store.rowlevel.mode", "delta")
@@ -1950,13 +1957,9 @@ class StoreSinkSpec extends SparkSpec {
       finally spark.conf.unset("spark.graft.store.rowlevel.mode")
       assert(StoreSink.readEntries(new Path(dir), fs).exists(_.eq.isDefined),
         "precondition: the delete should have left equality masks")
-      StoreSink.lastLimitPlan = None
-      val n2 = spark.sql(
-        "SELECT COUNT(*) FROM (SELECT * FROM graft.store LIMIT 15)")
-        .collect()(0).getLong(0)
-      assert(n2 == 15)
-      assert(StoreSink.lastLimitPlan.isEmpty,
-        s"masked entries must decline the prefix cut: ${StoreSink.lastLimitPlan}")
+      val full = limit15()
+      assert(full._1 >= 4 && full._2 == 0,
+        s"masked entries must decline the prefix cut: $full")
     }
   }
 
@@ -2026,10 +2029,11 @@ class StoreSinkSpec extends SparkSpec {
     assert(got.where(col("k") === 4L).collect()(0).getLong(2) == 999L)
     assert(got.count() == 201)
     // partition pruning still exact over the masked layout
-    spark.read.format(fmt).option("path", dir).load()
-      .where(col("grp") === "N").collect()
-    assert(StoreSink.lastPartPrune.exists(_._2 == 1),
-      s"partition pruning degraded: ${StoreSink.lastPartPrune}")
+    val n = spark.read.format(fmt).option("path", dir).load()
+      .where(col("grp") === "N")
+    n.collect()
+    assert(ScanMetrics(n).sum("partKeptFiles") == 1,
+      s"partition pruning degraded: ${ScanMetrics(n).sum("partKeptFiles")}")
   }
 
   test("cherry-pick refuses non-append commits and name conflicts; " +
@@ -2066,10 +2070,11 @@ class StoreSinkSpec extends SparkSpec {
       .toDF("k", "grp", "amt_cents")
     data.repartition(16, col("k"))
       .write.format(fmt).mode("overwrite").option("path", dir).save()
-    def planned(c: org.apache.spark.sql.Column): (Int, Int) = {
-      spark.read.format(fmt).option("path", dir).load()
-        .where(c).agg(count(lit(1))).collect()
-      StoreSink.lastZonePrune.get
+    def planned(c: org.apache.spark.sql.Column): (Long, Long) = {
+      val q = spark.read.format(fmt).option("path", dir).load()
+        .where(c).agg(count(lit(1)))
+      q.collect()
+      ScanMetrics(q).plannedFiles
     }
     val kProbe = col("k").between(1L, 100L)
     val aProbe = col("amt_cents").between(0L, 6250L)

@@ -69,17 +69,16 @@ class TextIndexSpec extends SparkSpec {
     val (nTm, nPl) = TextIndex.build(spark, docs, idx)
     assert(nTm > 0 && nPl > 0)
     // single-term query: the planned postings files must be exactly the
-    // term's shard's files (zone hook counts planned files post-pruning)
-    StoreSink.lastZonePrune = None
+    // term's shard's files (the scan's plannedFiles counts them post-pruning)
     val one = Seq(("zulu", 1L)).toDF("t", "df")
-    val scored = TextIndex.score(spark, idx, one).collect()
+    val (scored, plans) = withPlans(TextIndex.score(spark, idx, one).collect())
     assert(scored.length == 1 && scored(0).getLong(0) == 4L,
       s"zulu lives in doc 4 only: ${scored.toSeq}")
     val entries = StoreSink.readEntries(
       new Path(TextIndex.postingsPath(idx)), fs)
     val total = entries.size
-    val planned = StoreSink.lastZonePrune
-    assert(planned.exists { case (t, p) => p < t },
+    val planned = ScanMetrics(plans, TextIndex.postingsPath(idx)).plannedFiles
+    assert(planned._2 < planned._1,
       s"single-term probe should plan a shard subset of $total files: $planned")
   }
 
