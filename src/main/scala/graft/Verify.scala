@@ -17,7 +17,7 @@ object Verify {
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          if (sys.env.contains("SPARK_GRAFT_VERIFY_DEBUG")) e.printStackTrace()
+          e.printStackTrace() // with its cause chain
         }
     }
     graft.ops.LlmOps.release()

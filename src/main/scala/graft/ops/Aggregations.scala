@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Local, Tables}
 import graft.functions.GeoMean
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -656,12 +656,10 @@ object Aggregations extends OpModule {
     // optimized plan and pins default-off / mixed-aggregate no-ops.
     "q_agg_distinct_auto" -> ((s, d) => {
       graft.GraftSession.withConf(s)("spark.graft.rewrite.distinctBitmap" -> "true") {
-        val res = Tables.events(s, d)
+        Local(Tables.events(s, d)
           .groupBy(col("event_type"))
           .agg(countDistinct(col("user_id")).as("n_users"))
-          .orderBy(col("event_type"))
-        s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
+          .orderBy(col("event_type")), 16).toDF(s)
       }
     }),
   )

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Local, Tables}
 import graft.sources.AnnIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -395,18 +395,10 @@ object IndexOps extends OpModule {
       val ti = graft.sources.TextIndex
       ti.build(s, Tables.documents(s, d).select(col("doc_id"), col("text")), idx)
       ti.lastTopNFiles = None
-      val top = ti.probeTopN(s, idx, topk = 10).collect()
+      val top = Local(ti.probeTopN(s, idx, topk = 10), 10)
       val pruned = ti.lastTopNFiles.exists { case (p, t) => p >= 1 && p < t }
-      val rows = top.toSeq :+ org.apache.spark.sql.Row(-1L,
-        if (pruned) 1L else 0L) // z_pruned
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("bm25_e4",
-          org.apache.spark.sql.types.LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema)
-        .orderBy(col("bm25_e4").desc, col("doc_id"))
+      (top ++ Seq(org.apache.spark.sql.Row(-1L, if (pruned) 1L else 0L))) // z_pruned
+        .toDF(s).orderBy(col("bm25_e4").desc, col("doc_id"))
     }),
 
     // BOOLEAN AND RETRIEVAL on the persisted sparse index: only docs
@@ -451,18 +443,10 @@ object IndexOps extends OpModule {
         .orderBy(col("df").desc, col("t")).limit(3)
         .collect().map(_.getString(0)).toSeq
       ti.lastOrFiles = None
-      val top = ti.probeOr(s, idx, terms, topk = 15).collect()
+      val top = Local(ti.probeOr(s, idx, terms, topk = 15), 15)
       val sane = ti.lastOrFiles.exists { case (p, t) => p >= 1 && p <= t }
-      val rows = top.toSeq :+ org.apache.spark.sql.Row(-1L,
-        if (sane) 1L else 0L)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("bm25_e4",
-          org.apache.spark.sql.types.LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema)
-        .orderBy(col("bm25_e4").desc, col("doc_id"))
+      (top ++ Seq(org.apache.spark.sql.Row(-1L, if (sane) 1L else 0L)))
+        .toDF(s).orderBy(col("bm25_e4").desc, col("doc_id"))
     }),
 
     // METADATA-FILTERED TEXT RETRIEVAL (round-13 verdict #2): "top-k
@@ -489,19 +473,10 @@ object IndexOps extends OpModule {
         .orderBy(col("df").desc, col("t")).limit(3)
         .collect().map(_.getString(0)).toSeq
       ti.lastOrFiles = None
-      val top = ti.probeOr(s, idx, terms, topk = 15, attrEq = Some(1L))
-        .collect()
+      val top = Local(ti.probeOr(s, idx, terms, topk = 15, attrEq = Some(1L)), 15)
       val sane = ti.lastOrFiles.exists { case (p, t) => p >= 1 && p <= t }
-      val rows = top.toSeq :+ org.apache.spark.sql.Row(-1L,
-        if (sane) 1L else 0L)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("bm25_e4",
-          org.apache.spark.sql.types.LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema)
-        .orderBy(col("bm25_e4").desc, col("doc_id"))
+      (top ++ Seq(org.apache.spark.sql.Row(-1L, if (sane) 1L else 0L)))
+        .toDF(s).orderBy(col("bm25_e4").desc, col("doc_id"))
     }),
 
     // PHRASE QUERY over POSITIONAL postings (round-12 verdict #4): the
@@ -686,21 +661,11 @@ object IndexOps extends OpModule {
         val r = s.sql(s"CALL graft.text_index_refresh('$idx')").collect()(0)
         (r.getLong(0), r.getLong(1))
       }
-      val top = ti.probeTop(s, idx, topk = 10)
-        .select(col("doc_id"), col("n_terms"), col("bm25_e4"))
-        .collect()
-      val rows = top.toSeq :+ org.apache.spark.sql.Row(-1L,
-        if (nDocs > 0 && nShards >= 1) 1L else 0L, 0L) // z_incremental
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_terms",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("bm25_e4",
-          org.apache.spark.sql.types.LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema)
-        .orderBy(col("bm25_e4").desc, col("doc_id"))
+      val top = Local(ti.probeTop(s, idx, topk = 10)
+        .select(col("doc_id"), col("n_terms"), col("bm25_e4")), 10)
+      (top ++ Seq(org.apache.spark.sql.Row(-1L,
+        if (nDocs > 0 && nShards >= 1) 1L else 0L, 0L))) // z_incremental
+        .toDF(s).orderBy(col("bm25_e4").desc, col("doc_id"))
     }),
 
     // SPARSE-INDEX REBUILD POLICY — the arming lifecycle closed: a
@@ -741,23 +706,16 @@ object IndexOps extends OpModule {
           .option("path", corpus).save()
         val r1 = s.sql(s"CALL graft.text_index_rebuild_if('$idx')").collect()(0)
         ti.lastTopNFiles = None
-        val t = ti.probeTopN(s, idx, topk = 10).collect()
+        val t = Local(ti.probeTopN(s, idx, topk = 10), 10)
         val p = ti.lastTopNFiles.exists { case (pl, tt) => pl >= 1 && pl < tt }
         val r2 = s.sql(s"CALL graft.text_index_rebuild_if('$idx')").collect()(0)
         (r1.getString(0), r2.getString(0), p, t)
       }
-      val rows = top.toSeq ++ Seq(
+      (top ++ Seq(
         org.apache.spark.sql.Row(-1L, if (pruned) 1L else 0L),
         org.apache.spark.sql.Row(-2L, if (act1 == "rebuild") 1L else 0L),
-        org.apache.spark.sql.Row(-3L, if (act2 == "keep") 1L else 0L))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("bm25_e4",
-          org.apache.spark.sql.types.LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema)
-        .orderBy(col("bm25_e4").desc, col("doc_id"))
+        org.apache.spark.sql.Row(-3L, if (act2 == "keep") 1L else 0L)))
+        .toDF(s).orderBy(col("bm25_e4").desc, col("doc_id"))
     }),
 
     // INDEX POLICIES UNDER `CALL graft.maintain` — the auto-maintenance
@@ -1049,21 +1007,11 @@ object IndexOps extends OpModule {
           .option("path", corpus).save()
         val (nKeys, nCells) = AnnIndex.refresh(s, idx)
         val queries = TrainingOps.nzEmbeddings(s, d).where(col("vec_id") < 10)
-        val top = AnnIndex.probePq(s, queries, idx).collect()
-        val rows = top.toSeq :+ org.apache.spark.sql.Row(-1L, -1L,
-          if (nKeys > 0 && nCells >= 1) 1 else 0, 0) // z_incremental
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("q_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("score_e4",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("rn",
-            org.apache.spark.sql.types.IntegerType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema)
-          .orderBy(col("q_id"), col("rn"), col("n_id"))
+        // 10 queries x the probe's default top 5
+        val top = Local(AnnIndex.probePq(s, queries, idx), 10 * 5)
+        (top ++ Seq(org.apache.spark.sql.Row(-1L, -1L,
+          if (nKeys > 0 && nCells >= 1) 1 else 0, 0))) // z_incremental
+          .toDF(s).orderBy(col("q_id"), col("rn"), col("n_id"))
       }
     }),
 
@@ -1181,21 +1129,11 @@ object IndexOps extends OpModule {
         val q = TrainingOps.nzEmbeddings(s, d).where(col("vec_id") < 20)
           .select(expr("vec_id div 10").as("q_id"), col("vec_id").as("qt"),
                   col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-        val top = graft.sources.MaxSimIndex.probe(s, q, idx).collect()
-        val rows = top.toSeq :+ org.apache.spark.sql.Row(-1L, -1L,
-          if (nKeys > 0 && nParts >= 1) 1L else 0L, 0) // z_incremental
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("q_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("d_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("maxsim_e6",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("rn",
-            org.apache.spark.sql.types.IntegerType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema)
-          .orderBy(col("q_id"), col("rn"))
+        // 2 multi-vector queries x the probe's default top 5
+        val top = Local(graft.sources.MaxSimIndex.probe(s, q, idx), 2 * 5)
+        (top ++ Seq(org.apache.spark.sql.Row(-1L, -1L,
+          if (nKeys > 0 && nParts >= 1) 1L else 0L, 0))) // z_incremental
+          .toDF(s).orderBy(col("q_id"), col("rn"))
       }
     }),
 

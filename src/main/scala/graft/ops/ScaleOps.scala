@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Local, Tables}
 import graft.GraftSession.withConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -143,9 +143,8 @@ object ScaleOps extends OpModule {
         val byStatus = s.table(v).groupBy(col("l_linestatus").as("k"))
           .agg(count(lit(1)).as("n"), Det.moneySum(col("l_extendedprice")).as("cents"))
           .select(lit("status").as("dim"), col("k"), col("n"), col("cents"))
-        val res = byFlag.unionAll(byStatus).orderBy(col("dim"), col("k"))
         // materialize before UNCACHE: the driver's action runs later
-        s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
+        Local(byFlag.unionAll(byStatus).orderBy(col("dim"), col("k")), 16).toDF(s)
       } finally {
         s.sql(s"UNCACHE TABLE IF EXISTS $v")
         s.catalog.dropTempView(v) // don't leak the view into the shared session
@@ -197,9 +196,7 @@ object ScaleOps extends OpModule {
     // PlanAuditSpec asserts the bloom actually lands in the plan.
     "q_runtime_filter" -> ((s, d) =>
       withConf(s)(rfConfs: _*) {
-        val res = runtimeFilterJoin(s, d)
-        s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
+        Local(runtimeFilterJoin(s, d), 16).toDF(s)
       }),
 
     // Bloom-filter runtime pre-filter (spark-sketch): build on the orders

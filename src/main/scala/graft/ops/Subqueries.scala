@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Local, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -216,7 +216,7 @@ object Subqueries extends OpModule {
           |    SELECT cutoff, n_above, CAST(0 AS BIGINT) AS sum_cents_above;
           |  END IF;
           |END""".stripMargin)
-        s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
+        Local(res, 1).toDF(s)
       }
     }),
   )

@@ -649,9 +649,7 @@ object TextAnalysis extends OpModule {
         chosen += best._1
         step += 1L
       }
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(
-        picked.map(p => org.apache.spark.sql.Row(p._1, p._2, p._3, p._4)).asJava,
+      graft.Local(
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("sel_rank",
             org.apache.spark.sql.types.LongType),
@@ -660,8 +658,9 @@ object TextAnalysis extends OpModule {
           org.apache.spark.sql.types.StructField("rel_e4",
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("mmr_e5",
-            org.apache.spark.sql.types.LongType))))
-        .orderBy(col("sel_rank"))
+            org.apache.spark.sql.types.LongType))),
+        picked.toSeq.map(p => org.apache.spark.sql.Row(p._1, p._2, p._3, p._4)))
+        .toDF(s).orderBy(col("sel_rank"))
     }),
 
     // HARD-NEGATIVE MINING (the DPR/contriever training-set recipe,

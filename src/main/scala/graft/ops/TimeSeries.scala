@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Local, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -268,9 +268,9 @@ object TimeSeries extends OpModule {
     // (Generate/explode in the optimized plan, (key, bucket) equi join).
     "q_join_range_auto" -> ((s, d) => {
       graft.GraftSession.withConf(s)("spark.graft.rewrite.intervalJoin" -> "true") {
-        val res = queries("q_join_range")(s, d)
-        s.createDataFrame(
-          java.util.Arrays.asList(res.collect(): _*), res.schema)
+        // the pair list is data-sized: 143 rows at sf0.01, about 14,300
+        // per unit of scale, so this bound trips near sf70
+        Local(queries("q_join_range")(s, d), 1000000).toDF(s)
       }
     }),
 

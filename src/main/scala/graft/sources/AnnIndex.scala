@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Local
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -46,6 +47,13 @@ import org.apache.spark.sql.types.{StringType, StructField}
   * way. A pointer-less root reads as its own generation (legacy). */
 private[sources] object IndexGen {
   val CurrentPtr = "_current"
+
+  /** The most rows Spark's broadcast hash join takes on one long key
+    * (`BroadcastExchangeExec` refuses 512,000,000 or more). A probe's
+    * collected (query, cell) pairs become such a broadcast side, so this
+    * bounds their collect without refusing a probe the join would run;
+    * their real size, |queries| x nprobe, is not known before the job. */
+  val BroadcastRows = 511999999L
 
   def dir(indexPath: String): String = {
     val root = new Path(indexPath)
@@ -432,11 +440,9 @@ object AnnIndex {
     * the collected rows themselves, so the join input is bit-identical). */
   private def localizeProbes(s: SparkSession,
                              probes: DataFrame): (DataFrame, Seq[String]) = {
-    val rows = probes.collect()
-    import scala.jdk.CollectionConverters._
-    val local = s.createDataFrame(rows.toSeq.asJava, probes.schema)
+    val local = Local(probes, IndexGen.BroadcastRows)
     val bi = probes.schema.fieldIndex("bucket")
-    (local, rows.map(_.getLong(bi)).distinct.map(_.toString).toSeq)
+    (local.toDF(s), local.rows.map(_.getLong(bi)).distinct.map(_.toString))
   }
 
   private def probeImpl(s: SparkSession, queries: DataFrame, indexPath: String,

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Local
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -88,13 +89,13 @@ object MaxSimIndex {
     * data reads — one line per partition file): the occupancy audit a
     * PLAID operator reads before deciding to rebuild (skewed token
     * piles = stage-1 candidate lists degenerating toward a scan). */
-  def cellCounts(indexPath: String): Seq[(Long, Long)] = {
-    val plRoot = new Path(postingsPath(indexPath))
+  def cellCounts(indexPath: String): Seq[(Long, Long)] =
+    cellTokens(new Path(postingsPath(indexPath))).toSeq
+
+  private def cellTokens(plRoot: Path): Map[Long, Long] =
     StoreSink.readEntries(plRoot, StoreSink.fs(plRoot))
       .groupBy(e => StoreSink.partTag(e.part.get)._2.toLong)
       .map { case (c, es) => (c, es.map(e => math.max(e.rows, 0L)).sum) }
-      .toSeq
-  }
 
   private def cellsAt(s: SparkSession, genRoot: String): DataFrame = {
     graft.functions.FloatDot.register(s)
@@ -268,15 +269,9 @@ object MaxSimIndex {
       .withColumn("prn", row_number().over(wP))
       .where(col("prn") <= nprobe)
       .select(col("q_id"), col("c_id").as("bucket")).distinct()
-    val probedRows = probedDf.collect()
-    // local-relation schema derives from the collected frame itself (the
-    // AnnIndex.localizeProbes convention) — a type change in the cells
-    // table can no longer drift from a hand-written schema here
-    val probed = {
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(probedRows.toSeq.asJava, probedDf.schema)
-    }
-    val buckets = probedRows.map(_.getLong(1)).distinct.map(_.toString).toSeq
+    val probedRows = Local(probedDf, IndexGen.BroadcastRows)
+    val probed = probedRows.toDF(s)
+    val buckets = probedRows.rows.map(_.getLong(1)).distinct.map(_.toString)
     // candidate docs: any token in a probed cell — partition pruning IS
     // the inverted-list lookup; only (cell, doc) pairs flow, no vectors
     val candScan = s.read.format(Fmt).option("path", pl(genRoot)).load()
@@ -290,19 +285,21 @@ object MaxSimIndex {
     // in one cell is exactly what [[cellCounts]]' skew audit exists to
     // catch before this set degenerates. Collected ONCE: the broadcast
     // side is a local relation and the doc-bucket list derives
-    // driver-side (was a localCheckpoint + a second distinct/collect job)
+    // driver-side (was a localCheckpoint + a second distinct/collect job).
+    // The enforced bound: the probed cells' token counts (from the
+    // manifest, each ≥ the cell's doc count) × the distinct query ids.
     val candDf = attrEq.fold(candScan)(v => candScan.where(col("attr") === v))
       .select(col("grp").cast("long").as("bucket"),
               col("amt_cents").as("d_id"))
       .join(broadcast(probed), "bucket")
       .select(col("q_id"), col("d_id")).distinct()
-    val candRows = candDf.collect()
-    val cand = {
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(candRows.toSeq.asJava, candDf.schema)
-    }
-    val docB = candRows.map(r => java.lang.Math.floorMod(r.getLong(1), nb.toLong))
-      .distinct.map(_.toString).toSeq // ≤ nb
+    val tokens = cellTokens(new Path(pl(genRoot)))
+    val candRows = Local(candDf,
+      buckets.map(b => tokens.getOrElse(b.toLong, 0L)).sum *
+        probedRows.rows.map(_.getLong(0)).distinct.size)
+    val cand = candRows.toDF(s)
+    val docB = candRows.rows.map(r => java.lang.Math.floorMod(r.getLong(1), nb.toLong))
+      .distinct.map(_.toString) // ≤ nb
     val wTop = Window.partitionBy(col("q_id"))
       .orderBy(col("maxsim_e6").desc, col("d_id"))
     // EXACT refinement over the candidates' FULL token sets, from the

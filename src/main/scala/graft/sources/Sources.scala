@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Local, Tables}
 import graft.GraftSession.withConf
 import graft.ops.OpModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -72,14 +72,13 @@ object Sources extends OpModule {
   }
 
   /** Read the store back and aggregate per group, materialized inside the
-    * caller's conf scope (the conf-scoped-query rule). */
-  private[sources] def storeSummary(s: SparkSession, path: String): DataFrame = {
-    val res = s.read.format("graft.sources.StoreSink").option("path", path).load()
+    * caller's conf scope (the conf-scoped-query rule). The stores hold a
+    * handful of groups (order statuses plus the CDC waves' tags). */
+  private[sources] def storeSummary(s: SparkSession, path: String): Local =
+    Local(s.read.format("graft.sources.StoreSink").option("path", path).load()
       .groupBy(col("grp"))
       .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-      .orderBy(col("grp"))
-    s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
-  }
+      .orderBy(col("grp")), 64)
 
   /** The storage-partitioned join (fact 40k rows ⋈ one-row-per-group dim,
     * both KeyGroupedPartitioning(grp, 8)); private[graft] so
@@ -563,22 +562,17 @@ object Sources extends OpModule {
       val df = s.sql("""SELECT grp, COUNT(*) AS n, CAST(SUM(amt) AS BIGINT) AS amt_sum
                        |FROM graft.bucket_fact WHERE grp IN ('g2', 'g5')
                        |GROUP BY grp""".stripMargin)
-      val content = df.collect()
+      val content = Local(df, 2)
       def bucketsOf(q: DataFrame) = (ScanMetrics(q).sum("buckets"), ScanMetrics(q).sum("plannedBuckets"))
       val pruned = bucketsOf(df) == ((8L, 2L))
       val filterGone = !df.queryExecution.executedPlan.toString.contains("Filter (")
       val emptyDf = s.sql("SELECT COUNT(*) FROM graft.bucket_fact WHERE grp = 'zzz'")
       val emptyDomain = emptyDf.collect()(0).getLong(0) == 0L &&
         bucketsOf(emptyDf) == ((8L, 0L))
-      val rows = content.toSeq ++ flagRows(
+      (content ++ flagRows(
         "z_empty_domain_zero_parts" -> emptyDomain,
         "z_filter_gone" -> filterGone,
-        "z_pruned_2_of_8" -> pruned)
-      val schema = StructType(Seq(
-        StructField("grp", StringType), StructField("n", LongType),
-        StructField("amt_sum", LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+        "z_pruned_2_of_8" -> pruned)).toDF(s).orderBy(col("grp"))
     }),
 
     // V2 AGGREGATE FUNCTION through the catalog (AggregateFunction — the
@@ -605,20 +599,14 @@ object Sources extends OpModule {
         val q = """SELECT grp, COUNT(*) AS n,
                   |  graft.checksum(amt_cents) AS cksum
                   |FROM graft.store GROUP BY grp""".stripMargin
-        val pre = s.sql(q).collect()
+        val pre = Local(s.sql(q), 16)
         val total = base.count()
         s.sql(s"CALL graft.compact('$path', ${(total + 3) / 4})").collect()
         val post = s.sql(q).collect()
-        def keyed(rs: Array[org.apache.spark.sql.Row]) =
-          rs.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-        val stable = keyed(pre) == keyed(post)
-        val rows = pre.toSeq ++ Seq(org.apache.spark.sql.Row(
-          "z_stable_under_compact", if (stable) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("cksum", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+        def keyed(rs: Seq[org.apache.spark.sql.Row]) =
+          rs.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+        val stable = keyed(pre.rows) == keyed(post.toSeq)
+        (pre ++ flagRows("z_stable_under_compact" -> stable)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -644,9 +632,8 @@ object Sources extends OpModule {
                 |SELECT o_orderkey AS k, o_orderstatus AS grp,
                 |       CAST(ROUND(o_totalprice * 100) AS BIGINT) AS amt_cents
                 |FROM ord_ns_v WHERE o_totalprice > 100000""".stripMargin)
-        val agg = s.table("graft.raw.big").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
+        val agg = Local(s.table("graft.raw.big").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
         val nsListed = s.sql("SHOW NAMESPACES IN graft")
           .collect().map(_.getString(0)).toSeq == Seq("raw")
         val tblListed = s.sql("SHOW TABLES IN graft.raw")
@@ -660,17 +647,12 @@ object Sources extends OpModule {
         s.sql("DROP TABLE graft.raw.big")
         s.sql("DROP NAMESPACE graft.raw")
         val gone = s.sql("SHOW NAMESPACES IN graft").count() == 0L
-        val rows = agg.toSeq ++ flagRows(
+        (agg ++ flagRows(
           "z_drop_nonempty_loud" -> dropNonEmptyLoud,
           "z_dropped" -> gone,
           "z_ns_listed" -> nsListed,
           "z_prop_kept" -> propKept,
-          "z_tbl_listed" -> tblListed)
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+          "z_tbl_listed" -> tblListed)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -688,8 +670,7 @@ object Sources extends OpModule {
       withConf(s)(
           "spark.sql.sources.v2.bucketing.enabled" -> "true",
           "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        val res = spjJoin(s)
-        s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
+        Local(spjJoin(s), 8).toDF(s)
       }
     }),
 
@@ -848,8 +829,7 @@ object Sources extends OpModule {
           "ShuffledHashJoin", "BroadcastNestedLoopJoin", "CartesianProduct")
         val fused = !joinExec.exists(plan.contains) &&
           plan.contains("pushedJoin=id-intersect")
-        val out = res.withColumn("z_fused", lit(if (fused) 1L else 0L))
-        s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+        Local(res.withColumn("z_fused", lit(if (fused) 1L else 0L)), 1).toDF(s)
       }
     }),
 
@@ -866,7 +846,7 @@ object Sources extends OpModule {
       seedStore(s, d, path)
       withStorePath(s, path) {
         s.sql("DELETE FROM graft.store WHERE grp = 'F' OR k < 1000")
-        storeSummary(s, path)
+        storeSummary(s, path).toDF(s)
       }
     }),
 
@@ -882,21 +862,20 @@ object Sources extends OpModule {
     // petabyte table writes kilobytes.
     "q_store_delete_mor" -> ((s, d) => {
       val path = tmp(d, "storemor")
-      val (base, _) = seedStore(s, d, path)
+      val (base, maxK) = seedStore(s, d, path)
       val root = new org.apache.hadoop.fs.Path(path)
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       def dataFiles() = fsys.listStatus(root).map(_.getPath.getName)
         .filter(n => n.startsWith("part-") && !n.contains(".dv-")).toSet
       val filesBefore = dataFiles()
-      // bounded CDC key list (~1% of keys) — the scalar-election pattern
-      val keys = base.where(pmod(col("k"), lit(101)) === 0)
-        .select(col("k")).collect().map(_.getLong(0))
+      // CDC key list (~1% of keys), pasted into the DELETE's SQL text
+      val keys = Local(base.where(pmod(col("k"), lit(101)) === 0).select(col("k")),
+        maxK / 101 + 1).rows.map(_.getLong(0))
       withStorePath(s, path) {
-        def aggOf(v: String) = s.table("graft.store")
+        def aggOf(v: String) = Local(s.table("graft.store")
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
-          .collect()
+          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents")), 16)
         s.sql(s"DELETE FROM graft.store WHERE k IN (${keys.mkString(",")})")
         val noRewrite = dataFiles() == filesBefore
         val nDv = graft.sources.StoreSink.readEntries(root, fsys)
@@ -906,15 +885,11 @@ object Sources extends OpModule {
         val absorbed = graft.sources.StoreSink.readEntries(root, fsys)
           .forall(_.dv.isEmpty)
         val cowRows = aggOf("cow")
-        val rows = morRows.toSeq ++ cowRows ++ Seq(
+        (morRows ++ cowRows.rows ++ Seq(
           org.apache.spark.sql.Row("z_absorbed", "-", if (absorbed) 1L else 0L, 0L),
           org.apache.spark.sql.Row("z_dv", "-", if (nDv >= 1) 1L else 0L, 0L),
-          org.apache.spark.sql.Row("z_no_rewrite", "-", if (noRewrite) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("v", StringType), StructField("grp", StringType),
-          StructField("n", LongType), StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("v"), col("grp"))
+          org.apache.spark.sql.Row("z_no_rewrite", "-", if (noRewrite) 1L else 0L, 0L)))
+          .toDF(s).orderBy(col("v"), col("grp"))
       }
     }),
 
@@ -933,24 +908,23 @@ object Sources extends OpModule {
     // against cold data.
     "q_store_delete_eq" -> ((s, d) => {
       val path = tmp(d, "storeeq")
-      val (base, _) = seedStore(s, d, path)
+      val (base, maxK) = seedStore(s, d, path)
       val root = new org.apache.hadoop.fs.Path(path)
       val fsys = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       def dataFiles() = fsys.listStatus(root).map(_.getPath.getName)
         .filter(n => n.startsWith("part-") && !n.contains(".dv-") &&
                      !n.contains(".eq-")).toSet
       val filesBefore = dataFiles()
-      // bounded keyed-retraction list — the scalar-election pattern
-      val keys = base.where(pmod(col("k"), lit(293)) === 0)
-        .select(col("k")).collect().map(_.getLong(0))
+      // keyed-retraction list (~0.3% of keys), one In filter
+      val keys = Local(base.where(pmod(col("k"), lit(293)) === 0).select(col("k")),
+        maxK / 293 + 1).rows.map(_.getLong(0))
       withStorePath(s, path) {
-        def aggOf(v: String) = s.table("graft.store")
+        def aggOf(v: String) = Local(s.table("graft.store")
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
-          .collect()
+          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents")), 16)
         graft.sources.StoreSink.equalityDelete(path,
-          Array(org.apache.spark.sql.sources.In("k", keys.map(k => k: Any))))
+          Array(org.apache.spark.sql.sources.In("k", keys.map(k => k: Any).toArray)))
         val noDataIo = dataFiles() == filesBefore
         val entries = graft.sources.StoreSink.readEntries(root, fsys)
         val nEq = entries.count(_.eq.isDefined)
@@ -961,16 +935,12 @@ object Sources extends OpModule {
         val absorbed = graft.sources.StoreSink.readEntries(root, fsys)
           .forall(_.eq.isEmpty)
         val compRows = aggOf("compacted")
-        val rows = eqRows.toSeq ++ compRows ++ Seq(
+        (eqRows ++ compRows.rows ++ Seq(
           org.apache.spark.sql.Row("z_absorbed", "-", if (absorbed) 1L else 0L, 0L),
           org.apache.spark.sql.Row("z_count", "-", cntAfter, 0L),
           org.apache.spark.sql.Row("z_eq_nodata", "-",
-            if (nEq >= 1 && noDv && noDataIo) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("v", StringType), StructField("grp", StringType),
-          StructField("n", LongType), StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("v"), col("grp"))
+            if (nEq >= 1 && noDv && noDataIo) 1L else 0L, 0L)))
+          .toDF(s).orderBy(col("v"), col("grp"))
       }
     }),
 
@@ -990,15 +960,14 @@ object Sources extends OpModule {
       val path = tmp(d, "storemerge")
       val (base, maxK) = seedStore(s, d, path)
       val (dels, upds, ins) = storeCdc(base, maxK)
-      val touched = dels.select(col("k"))
-        .unionAll(upds.select(col("k")))
-        .collect().map(_.getLong(0))
+      val touched = Local(dels.select(col("k")).unionAll(upds.select(col("k"))),
+        maxK / 89 + maxK / 97 + 2).rows.map(_.getLong(0))
       withStorePath(s, path) {
         s.sql(s"DELETE FROM graft.store WHERE k IN (${touched.mkString(",")})")
         upds.unionByName(ins)
           .write.format("graft.sources.StoreSink").mode("append")
           .option("path", path).save()
-        storeSummary(s, path)
+        storeSummary(s, path).toDF(s)
       }
     }),
 
@@ -1027,7 +996,7 @@ object Sources extends OpModule {
                  |WHEN MATCHED AND s.op = 'D' THEN DELETE
                  |WHEN MATCHED AND s.op = 'U' THEN UPDATE SET grp = s.grp, amt_cents = s.amt_cents
                  |WHEN NOT MATCHED AND s.op = 'I' THEN INSERT (k, grp, amt_cents) VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
-        storeSummary(s, path)
+        storeSummary(s, path).toDF(s)
       } finally s.catalog.dropTempView(v)
     }),
 
@@ -1085,11 +1054,8 @@ object Sources extends OpModule {
           mem.addData(w1); q.processAllAvailable()
           mem.addData(w2); q.processAllAvailable() // arrives mid-stream
         } finally q.stop()
-        val agg = storeSummary(s, path)
-        import scala.jdk.CollectionConverters._
-        val rows = agg.collect().toSeq :+ org.apache.spark.sql.Row(
-          "z_incremental", if (nBatches >= 2) 1L else 0L, 0L)
-        s.createDataFrame(rows.asJava, agg.schema).orderBy(col("grp"))
+        (storeSummary(s, path) ++ flagRows("z_incremental" -> (nBatches >= 2)))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -1147,11 +1113,8 @@ object Sources extends OpModule {
         val entries = graft.sources.StoreSink.readEntries(root, fsys)
         val noRewrite = seedNames.forall(entries.map(_.name).contains) &&
           entries.exists(_.eq.isDefined)
-        val agg = storeSummary(s, path)
-        import scala.jdk.CollectionConverters._
-        val rows = agg.collect().toSeq :+ org.apache.spark.sql.Row(
-          "z_no_rewrite", if (noRewrite) 1L else 0L, 0L)
-        s.createDataFrame(rows.asJava, agg.schema).orderBy(col("grp"))
+        (storeSummary(s, path) ++ flagRows("z_no_rewrite" -> noRewrite))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -1183,7 +1146,7 @@ object Sources extends OpModule {
                  |WHEN MATCHED AND s.op = 'D' THEN DELETE
                  |WHEN MATCHED AND s.op = 'U' THEN UPDATE SET grp = s.grp, amt_cents = s.amt_cents
                  |WHEN NOT MATCHED AND s.op = 'I' THEN INSERT (k, grp, amt_cents) VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
-        storeSummary(s, path)
+        storeSummary(s, path).toDF(s)
       } finally s.catalog.dropTempView(v)
     }),
 
@@ -1207,11 +1170,8 @@ object Sources extends OpModule {
         val entries = graft.sources.StoreSink.readEntries(root, fsys)
         val noRewrite = seedNames.forall(entries.map(_.name).contains) &&
           entries.exists(_.eq.isDefined)
-        val agg = storeSummary(s, path)
-        import scala.jdk.CollectionConverters._
-        val rows = agg.collect().toSeq :+ org.apache.spark.sql.Row(
-          "z_no_rewrite", if (noRewrite) 1L else 0L, 0L)
-        s.createDataFrame(rows.asJava, agg.schema).orderBy(col("grp"))
+        (storeSummary(s, path) ++ flagRows("z_no_rewrite" -> noRewrite))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -1239,7 +1199,7 @@ object Sources extends OpModule {
                  |WHEN MATCHED THEN UPDATE SET amt_cents = s.amt_cents
                  |WHEN NOT MATCHED THEN INSERT (k, grp, amt_cents) VALUES (s.k, s.grp, s.amt_cents)
                  |WHEN NOT MATCHED BY SOURCE AND t.grp <> 'P' THEN DELETE""".stripMargin)
-        storeSummary(s, path)
+        storeSummary(s, path).toDF(s)
       } finally s.catalog.dropTempView(v)
     }),
 
@@ -1251,12 +1211,11 @@ object Sources extends OpModule {
     "q_store_zone_read" -> ((s, d) => {
       val path = tmp(d, "storezone")
       seedStore(s, d, path)
-      val res = s.read.format("graft.sources.StoreSink").option("path", path).load()
+      Local(s.read.format("graft.sources.StoreSink").option("path", path).load()
         .where(col("k").between(100, 999))
         .groupBy(col("grp"))
         .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-        .orderBy(col("grp"))
-      s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
+        .orderBy(col("grp")), 16).toDF(s)
     }),
 
     // OPTIMIZE/compaction as a transactional layout change: a fragmented,
@@ -1299,23 +1258,20 @@ object Sources extends OpModule {
         .flatMap(e => e.minK.zip(e.maxK)).sortBy(_._1)
       val disjoint = zones.zip(zones.drop(1)).forall { case ((_, a), (b, _)) => a < b }
       def aggOf(src: DataFrame, v: String) =
-        src.groupBy(col("grp"))
+        Local(src.groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
-      val rows = withStorePath(s, path) {
-        aggOf(s.table("graft.store"), "post").collect() ++
-          aggOf(s.sql("SELECT * FROM graft.store VERSION AS OF 1"), "v1").collect()
-      } ++ Seq(
+          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents")), 16)
+      val res = withStorePath(s, path) {
+        aggOf(s.table("graft.store"), "post") ++
+          aggOf(s.sql("SELECT * FROM graft.store VERSION AS OF 1"), "v1").rows
+      }
+      (res ++ Seq(
           org.apache.spark.sql.Row("z_disjoint_zones", "-", if (disjoint) 1L else 0L, 0L),
           org.apache.spark.sql.Row("z_fewer_files", "-",
             if (filesAfter < filesBefore) 1L else 0L, 0L),
           org.apache.spark.sql.Row("z_prune_gain", "-",
-            if (plannedAfter < plannedBefore && plannedAfter <= 2) 1L else 0L, 0L))
-      val schema = StructType(Seq(
-        StructField("v", StringType), StructField("grp", StringType),
-        StructField("n", LongType), StructField("sum_cents", LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.toSeq.asJava, schema).orderBy(col("v"), col("grp"))
+            if (plannedAfter < plannedBefore && plannedAfter <= 2) 1L else 0L, 0L)))
+        .toDF(s).orderBy(col("v"), col("grp"))
     }),
 
     // TRIGGER-BASED COMPACTION POLICY (round-12 verdict #5 —
@@ -1651,24 +1607,21 @@ object Sources extends OpModule {
       val (filesAfter, plannedKAfter) = probe("k", loK, hiK)
       val (_, plannedAAfter) = probe("amt_cents", loA, hiA)
       def aggOf(src: DataFrame, v: String) =
-        src.groupBy(col("grp"))
+        Local(src.groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
-      val rows = withStorePath(s, path) {
-        aggOf(s.table("graft.store"), "post").collect() ++
-          aggOf(s.sql("SELECT * FROM graft.store VERSION AS OF 1"), "v1").collect()
-      } ++ Seq(
+          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents")), 16)
+      val res = withStorePath(s, path) {
+        aggOf(s.table("graft.store"), "post") ++
+          aggOf(s.sql("SELECT * FROM graft.store VERSION AS OF 1"), "v1").rows
+      }
+      (res ++ Seq(
           org.apache.spark.sql.Row("z_amt_prune_2d", "-",
             if (plannedAAfter * 2 <= filesAfter) 1L else 0L, 0L),
           org.apache.spark.sql.Row("z_amt_prune_gain", "-",
             if (plannedAAfter < plannedABefore) 1L else 0L, 0L),
           org.apache.spark.sql.Row("z_k_prune_2d", "-",
-            if (plannedKAfter * 2 <= filesAfter) 1L else 0L, 0L))
-      val schema = StructType(Seq(
-        StructField("v", StringType), StructField("grp", StringType),
-        StructField("n", LongType), StructField("sum_cents", LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.toSeq.asJava, schema).orderBy(col("v"), col("grp"))
+            if (plannedKAfter * 2 <= filesAfter) 1L else 0L, 0L)))
+        .toDF(s).orderBy(col("v"), col("grp"))
     }),
 
     // CHANGE DATA FEED reconstructed from version manifests: after an
@@ -1696,21 +1649,14 @@ object Sources extends OpModule {
           .map(graft.sources.StoreSink.parseEntry(_).name)
         val replaced = names(1).diff(names(2)).size
         def aggOf(win: String, df: DataFrame) =
-          df.groupBy(col("op"), col("grp"))
+          Local(df.groupBy(col("op"), col("grp"))
             .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-            .select(lit(win).as("win"), col("op"), col("grp"), col("n"), col("sum_cents"))
-        val rows =
-          aggOf("1..3", graft.sources.StoreSink.changes(s, path, 1)).collect() ++
-          aggOf("2..3", graft.sources.StoreSink.changes(s, path, 2, Some(3))).collect() :+
-          org.apache.spark.sql.Row("flag", "z_subset_rewrite", "-",
-            if (replaced > 0 && replaced < names(1).size) 1L else 0L, 0L)
-        val schema = StructType(Seq(
-          StructField("win", StringType), StructField("op", StringType),
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.toSeq.asJava, schema)
-          .orderBy(col("win"), col("op"), col("grp"))
+            .select(lit(win).as("win"), col("op"), col("grp"), col("n"), col("sum_cents")), 16)
+        (aggOf("1..3", graft.sources.StoreSink.changes(s, path, 1)) ++
+          aggOf("2..3", graft.sources.StoreSink.changes(s, path, 2, Some(3))).rows ++
+          Seq(org.apache.spark.sql.Row("flag", "z_subset_rewrite", "-",
+            if (replaced > 0 && replaced < names(1).size) 1L else 0L, 0L)))
+          .toDF(s).orderBy(col("win"), col("op"), col("grp"))
       }
     }),
 
@@ -1732,18 +1678,11 @@ object Sources extends OpModule {
         val v2F = s.sql("SELECT COUNT(*) AS n FROM graft.store VERSION AS OF 2 " +
             "WHERE grp = 'F'").collect()(0).getLong(0)
         val nVersions = graft.sources.StoreSink.history(path).size.toLong
-        val agg = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = agg.toSeq ++ Seq(
-          org.apache.spark.sql.Row("z_bad_gen_kept",
-            if (v2F == 0L && nVersions == 3L) 1L else 0L, 0L),
-          org.apache.spark.sql.Row("z_rolled", if (rolled) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+        val agg = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (agg ++ flagRows(
+          "z_bad_gen_kept" -> (v2F == 0L && nVersions == 3L),
+          "z_rolled" -> rolled)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -1778,17 +1717,10 @@ object Sources extends OpModule {
             Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
               .exists(t => t.getMessage != null &&
                 t.getMessage.contains("cherry-pick conflict")) }
-        val agg = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = agg.toSeq ++ Seq(
-          org.apache.spark.sql.Row("z_picked", if (picked) 1L else 0L, 0L),
-          org.apache.spark.sql.Row("z_repick_refused", if (refused) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+        val agg = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (agg ++ flagRows("z_picked" -> picked, "z_repick_refused" -> refused))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -1838,20 +1770,12 @@ object Sources extends OpModule {
         val gcClean = graft.sources.StoreSink.listDataFiles(root, fsys).toSet ==
           graft.sources.StoreSink.readEntries(root, fsys)
             .flatMap(e => e.name +: e.dv.toSeq).toSet
-        val agg = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = agg.toSeq ++ Seq(
-          org.apache.spark.sql.Row("z_abandon_gc",
-            if (abandoned == 1L && gcClean) 1L else 0L, 0L),
-          org.apache.spark.sql.Row("z_audit",
-            if (auditSees && auditClean) 1L else 0L, 0L),
-          org.apache.spark.sql.Row("z_invisible", if (invisible) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+        val agg = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (agg ++ flagRows(
+          "z_abandon_gc" -> (abandoned == 1L && gcClean),
+          "z_audit" -> (auditSees && auditClean),
+          "z_invisible" -> invisible)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -1874,10 +1798,9 @@ object Sources extends OpModule {
           .option("path", path).option("branch", "audit").save()
         val seedN = base.count()
         val stagedN = base.where(pmod(col("k"), lit(101)) === 0).count()
-        val agg = s.sql("SELECT * FROM graft.store VERSION AS OF 'audit'")
+        val agg = Local(s.sql("SELECT * FROM graft.store VERSION AS OF 'audit'")
           .groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
         val mainUntouched = s.table("graft.store").count() == seedN
         // vacuum with the branch LIVE: staged files are reference roots
         graft.sources.StoreSink.vacuum(path, 1)
@@ -1887,19 +1810,12 @@ object Sources extends OpModule {
         s.sql(s"CALL graft.publish('$path', 'audit')")
         val goneLoud =
           try { s.sql("SELECT * FROM graft.store VERSION AS OF 'audit'")
-                  .collect(); 0L }
-          catch { case _: Exception => 1L }
-        val rows = agg.toSeq ++ Seq(
-          org.apache.spark.sql.Row("z_gone_after_publish", goneLoud, 0L),
-          org.apache.spark.sql.Row("z_main_untouched",
-            if (mainUntouched) 1L else 0L, 0L),
-          org.apache.spark.sql.Row("z_vacuum_pins",
-            if (vacuumPins) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+                  .collect(); false }
+          catch { case _: Exception => true }
+        (agg ++ flagRows(
+          "z_gone_after_publish" -> goneLoud,
+          "z_main_untouched" -> mainUntouched,
+          "z_vacuum_pins" -> vacuumPins)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -1939,13 +1855,8 @@ object Sources extends OpModule {
           .where(col("n") > 0)
         val direct = aggOf(s.table("graft.store"))
         val matches = ivm.exceptAll(direct).isEmpty && direct.exceptAll(ivm).isEmpty
-        val rows = direct.collect().toSeq :+
-          org.apache.spark.sql.Row("z_ivm_match", if (matches) 1L else 0L, 0L)
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+        (Local(direct, 16) ++ flagRows("z_ivm_match" -> matches))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -1996,15 +1907,10 @@ object Sources extends OpModule {
         val direct = aggOf(s.table("graft.mvsrc"))
         val matches = ivm.exceptAll(direct).isEmpty &&
           direct.exceptAll(ivm).isEmpty
-        val rows = direct.collect().toSeq ++ Seq(
-          org.apache.spark.sql.Row("z_cdf_shape", if (shapeOk) 1L else 0L, 0L),
-          org.apache.spark.sql.Row("z_ivm_match", if (matches) 1L else 0L, 0L))
+        val res = Local(direct, 16) ++
+          flagRows("z_cdf_shape" -> shapeOk, "z_ivm_match" -> matches)
         s.sql("DROP TABLE graft.mvsrc")
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+        res.toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -2041,16 +1947,10 @@ object Sources extends OpModule {
       val joinedDf = store.join(broadcast(dim), col("grp") === col("dgrp"))
         .groupBy(col("grp"))
         .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-      val joined = joinedDf.collect()
+      val joined = Local(joinedDf, 16)
       val (total, planned) = ScanMetrics(joinedDf).plannedFiles
-      val rows = joined.toSeq :+
-        org.apache.spark.sql.Row("z_bloom_join_pruned",
-          if (planned < total && planned >= 1) 1L else 0L, 0L)
-      val schema = StructType(Seq(
-        StructField("grp", StringType), StructField("n", LongType),
-        StructField("sum_cents", LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+      (joined ++ flagRows("z_bloom_join_pruned" -> (planned < total && planned >= 1)))
+        .toDF(s).orderBy(col("grp"))
     }),
 
     // Per-file GRP BLOOM pruning — the zone maps' sibling for the
@@ -2077,7 +1977,7 @@ object Sources extends OpModule {
       val pDf = store.where(col("grp") === "P")
         .groupBy(col("grp"))
         .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-      val p = pDf.collect()
+      val p = Local(pDf, 1)
       val (totalP, plannedP) = ScanMetrics(pDf).plannedFiles
       val absentDf = store.where(col("grp") === "NEW").agg(count(lit(1)))
       val nAbsent = absentDf.collect()(0).getLong(0)
@@ -2085,16 +1985,10 @@ object Sources extends OpModule {
       val root = new org.apache.hadoop.fs.Path(path)
       val bloomed = graft.sources.StoreSink.readEntries(root, fsys)
         .forall(_.bloom.isDefined)
-      val rows = p.toSeq ++ Seq(
-        org.apache.spark.sql.Row("z_absent_rows", nAbsent, plannedAbsent),
-        org.apache.spark.sql.Row("z_bloom_present", if (bloomed) 1L else 0L, 0L),
-        org.apache.spark.sql.Row("z_bloom_pruned",
-          if (plannedP < totalP && plannedP >= 1) 1L else 0L, 0L))
-      val schema = StructType(Seq(
-        StructField("grp", StringType), StructField("n", LongType),
-        StructField("sum_cents", LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+      (p ++ Seq(org.apache.spark.sql.Row("z_absent_rows", nAbsent, plannedAbsent)) ++
+        flagRows("z_bloom_present" -> bloomed,
+          "z_bloom_pruned" -> (plannedP < totalP && plannedP >= 1)))
+        .toDF(s).orderBy(col("grp"))
     }),
 
     // SCHEMA EVOLUTION through the catalog: `ALTER TABLE graft.store ADD
@@ -2159,12 +2053,11 @@ object Sources extends OpModule {
           .option("path", path).save()
         s.sql("UPDATE graft.store SET amt_cents = amt_cents + 5 " +
               "WHERE note IS NOT NULL")
-        val res = s.table("graft.store")
+        Local(s.table("graft.store")
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"),
                count(col("note")).as("n_note"), max(col("note")).as("max_note"))
-          .orderBy(col("grp"))
-        s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
+          .orderBy(col("grp")), 16).toDF(s)
       }
     }),
 
@@ -2201,21 +2094,15 @@ object Sources extends OpModule {
           .agg(count(lit(1)).as("n"), sum(col("fee")).as("fee_sum"))
           .select(concat(lit("grp:"), col("grp")).as("step"), col("n"),
                   col("fee_sum"))
-        val filt = filtDf.collect()
+        val filt = Local(filtDf, 16)
         val (total, planned) = ScanMetrics(filtDf).plannedFiles
         val mmDf = store.agg(min(col("fee")).as("a"), max(col("fee")).as("b"))
         val mm = mmDf.collect()(0)
         val pushed = ScanMetrics(mmDf).aggPush.contains("min_s:fee,max_s:fee")
-        val rows = filt.toSeq ++ Seq(
-          org.apache.spark.sql.Row("minmax", mm.getLong(0), mm.getLong(1)),
-          org.apache.spark.sql.Row("z_agg_pushed", if (pushed) 1L else 0L, 0L),
-          org.apache.spark.sql.Row("z_stat_pruned",
-            if (planned < total && planned >= 1) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("step", StringType), StructField("n", LongType),
-          StructField("fee_sum", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+        (filt ++ Seq(org.apache.spark.sql.Row("minmax", mm.getLong(0), mm.getLong(1))) ++
+          flagRows("z_agg_pushed" -> pushed,
+            "z_stat_pruned" -> (planned < total && planned >= 1)))
+          .toDF(s).orderBy(col("step"))
       }
     }),
 
@@ -2258,7 +2145,7 @@ object Sources extends OpModule {
           .agg(count(lit(1)).as("n"), sum(col("fee")).as("fee_sum"))
           .select(concat(lit("grp:"), col("grp")).as("step"), col("n"),
                   col("fee_sum"))
-        val filt = filtDf.collect()
+        val filt = Local(filtDf, 16)
         val (t1, p1) = ScanMetrics(filtDf).plannedFiles
         // NDV sketches (verdict r9 #4): analyze also persisted per-column
         // HLL distinct counts — exact at tiny cardinalities (grp has 3
@@ -2274,22 +2161,16 @@ object Sources extends OpModule {
         val nRows = store.count()
         // HLL++ at the default 5% rsd: gate at 2 sigma
         val kClose = math.abs(ndv.getOrElse("k", 0L) - nRows) <= nRows / 10
-        val rows = filt.toSeq ++ Seq(
+        (filt ++ Seq(
           org.apache.spark.sql.Row("z_analyze_audit",
             audit.getLong(0), audit.getLong(1)),
-          org.apache.spark.sql.Row("z_ndv_grp", ndv.getOrElse("grp", -1L), 0L),
-          org.apache.spark.sql.Row("z_ndv_k_close", if (kClose) 1L else 0L, 0L),
-          org.apache.spark.sql.Row("z_no_rewrite",
-            if (graft.sources.StoreSink.readManifest(
-                  new org.apache.hadoop.fs.Path(path), fsys) == filesBefore) 1L
-            else 0L, 0L),
-          org.apache.spark.sql.Row("z_prunes_after",
-            if (noPruneBefore && p1 < t1 && p1 >= 1) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("step", StringType), StructField("n", LongType),
-          StructField("fee_sum", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+          org.apache.spark.sql.Row("z_ndv_grp", ndv.getOrElse("grp", -1L), 0L)) ++
+          flagRows(
+            "z_ndv_k_close" -> kClose,
+            "z_no_rewrite" -> (graft.sources.StoreSink.readManifest(
+              new org.apache.hadoop.fs.Path(path), fsys) == filesBefore),
+            "z_prunes_after" -> (noPruneBefore && p1 < t1 && p1 >= 1)))
+          .toDF(s).orderBy(col("step"))
       }
     }),
 
@@ -2321,12 +2202,11 @@ object Sources extends OpModule {
           .write.format("graft.sources.StoreSink").mode("append")
           .option("path", path).save()
         val head = s.table("graft.store")
-        val agg = head.groupBy(col("grp"))
+        val agg = Local(head.groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), count(col("memo")).as("n_memo"),
                max(col("memo")).as("max_memo"))
           .select(concat(lit("grp:"), col("grp")).as("step"), col("n"),
-                  col("n_memo"), col("max_memo"))
-          .collect()
+                  col("n_memo"), col("max_memo")), 16)
         val headOk = head.schema.fieldNames.toSeq ==
           Seq("k", "grp", "amt_cents", "memo")
         // pre-rename snapshot: archived schema, OLD name, same values
@@ -2334,17 +2214,13 @@ object Sources extends OpModule {
         val travelOk = v2.schema.fieldNames.toSeq ==
           Seq("k", "grp", "amt_cents", "note")
         val v2Notes = v2.agg(count(col("note"))).collect()(0).getLong(0)
-        val rows = agg.toSeq ++ Seq(
+        (agg ++ Seq(
           org.apache.spark.sql.Row("z_head_renamed",
             if (headOk) 1L else 0L, 0L, "-"),
           org.apache.spark.sql.Row("z_travel_old_name",
             if (travelOk) 1L else 0L, 0L, "-"),
-          org.apache.spark.sql.Row("z_travel_notes", v2Notes, 0L, "-"))
-        val schema = StructType(Seq(
-          StructField("step", StringType), StructField("n", LongType),
-          StructField("n_memo", LongType), StructField("max_memo", StringType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+          org.apache.spark.sql.Row("z_travel_notes", v2Notes, 0L, "-")))
+          .toDF(s).orderBy(col("step"))
       }
     }),
 
@@ -2383,29 +2259,24 @@ object Sources extends OpModule {
         // row-level rewrite under the tombstoned layout (v4)
         s.sql("UPDATE graft.store SET fee = fee + 1 WHERE grp = 'NEW2'")
         val head = s.table("graft.store")
-        val agg = head.groupBy(col("grp"))
+        val agg = Local(head.groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("fee")).as("fee_sum"),
                count(col("note")).as("n_note"))
           .select(concat(lit("grp:"), col("grp")).as("step"), col("n"),
-                  col("fee_sum"), col("n_note"))
-          .collect()
+                  col("fee_sum"), col("n_note")), 16)
         val headOk = head.schema.fieldNames.toSeq ==
           Seq("k", "grp", "amt_cents", "fee", "note")
         val v2 = s.sql("SELECT * FROM graft.store VERSION AS OF 2")
         val travelOk = v2.schema.fieldNames.toSeq ==
           Seq("k", "grp", "amt_cents", "note", "fee")
         val v2Notes = v2.agg(count(col("note"))).collect()(0).getLong(0)
-        val rows = agg.toSeq ++ Seq(
+        (agg ++ Seq(
           org.apache.spark.sql.Row("z_head_schema",
             if (headOk) 1L else 0L, 0L, 0L),
           org.apache.spark.sql.Row("z_travel_schema",
             if (travelOk) 1L else 0L, 0L, 0L),
-          org.apache.spark.sql.Row("z_travel_notes", v2Notes, 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("step", StringType), StructField("n", LongType),
-          StructField("fee_sum", LongType), StructField("n_note", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+          org.apache.spark.sql.Row("z_travel_notes", v2Notes, 0L, 0L)))
+          .toDF(s).orderBy(col("step"))
       }
     }),
 
@@ -2432,19 +2303,14 @@ object Sources extends OpModule {
       val total = base.count()
       val compact = s.sql(s"CALL graft.compact('$path', ${(total + 3) / 4})").collect()(0)
       val vacuum = s.sql(s"CALL graft.vacuum('$path', 1)").collect()(0)
-      val content = s.read.format("graft.sources.StoreSink").option("path", path).load()
+      val content = Local(s.read.format("graft.sources.StoreSink").option("path", path).load()
         .groupBy(col("grp"))
         .agg(count(lit(1)).as("a"), sum(col("amt_cents")).as("b"))
-        .select(concat(lit("grp:"), col("grp")).as("step"), col("a"), col("b"))
-        .collect()
-      val rows = content.toSeq ++ Seq(
+        .select(concat(lit("grp:"), col("grp")).as("step"), col("a"), col("b")), 16)
+      (content ++ Seq(
         org.apache.spark.sql.Row("compact", compact.getLong(0), compact.getLong(1)),
-        org.apache.spark.sql.Row("vacuum", vacuum.getLong(0), vacuum.getLong(1)))
-      val schema = StructType(Seq(
-        StructField("step", StringType), StructField("a", LongType),
-        StructField("b", LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+        org.apache.spark.sql.Row("vacuum", vacuum.getLong(0), vacuum.getLong(1))))
+        .toDF(s).orderBy(col("step"))
     }),
 
     // MANIFEST TREE: the store's metadata path at 100 TB scale. The list
@@ -2479,7 +2345,7 @@ object Sources extends OpModule {
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
           .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
       val rangeDf = aggOf(store.where(col("k").between(100, 999)), "range")
-      val rangeRows = rangeDf.collect()
+      val rangeRows = Local(rangeDf, 16)
       val segsTotal = ScanMetrics(rangeDf).sum("manifestSegments")
       val segsRead = ScanMetrics(rangeDf).sum("segmentsRead")
       val maxK = base.agg(max(col("k"))).collect()(0).getLong(0)
@@ -2490,7 +2356,7 @@ object Sources extends OpModule {
         .option("path", path).save()
       val after = listLines()
       val loose = after.filterNot(l => l.startsWith("@seg|") || l.startsWith("#"))
-      val rows = rangeRows.toSeq ++ aggOf(store, "all").collect() ++ Seq(
+      (rangeRows ++ Local(aggOf(store, "all"), 16).rows ++ Seq(
         org.apache.spark.sql.Row("z_append_reuse", "-",
           if (segsOf(after) == segsBefore) 1L else 0L, 0L),
         org.apache.spark.sql.Row("z_loose_tail", "-",
@@ -2498,12 +2364,8 @@ object Sources extends OpModule {
         org.apache.spark.sql.Row("z_point_plan", "-",
           if (segsTotal == 4 && segsRead == 1) 1L else 0L, 0L),
         org.apache.spark.sql.Row("z_sealed", "-",
-          if (segsBefore.size == 4) 1L else 0L, 0L))
-      val schema = StructType(Seq(
-        StructField("v", StringType), StructField("grp", StringType),
-        StructField("n", LongType), StructField("sum_cents", LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema).orderBy(col("v"), col("grp"))
+          if (segsBefore.size == 4) 1L else 0L, 0L)))
+        .toDF(s).orderBy(col("v"), col("grp"))
     }),
 
     // AGGREGATE PUSHDOWN on the store scan: an unfiltered COUNT(*) /
@@ -2528,16 +2390,15 @@ object Sources extends OpModule {
              max(col("k")).as("max_k"))
       val filt = filtDf.collect()(0)
       val declined = ScanMetrics(filtDf).aggPush.isEmpty
-      val rows = Seq(
-        org.apache.spark.sql.Row("all", all.getLong(0), all.getLong(1), all.getLong(2)),
-        org.apache.spark.sql.Row("filtered", filt.getLong(0), filt.getLong(1), filt.getLong(2)),
-        org.apache.spark.sql.Row("z_filtered_declined", if (declined) 1L else 0L, 0L, 0L),
-        org.apache.spark.sql.Row("z_pushed", if (pushed) 1L else 0L, 0L, 0L))
       val schema = StructType(Seq(
         StructField("v", StringType), StructField("n", LongType),
         StructField("min_k", LongType), StructField("max_k", LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema).orderBy(col("v"))
+      Local(schema, Seq(
+        org.apache.spark.sql.Row("all", all.getLong(0), all.getLong(1), all.getLong(2)),
+        org.apache.spark.sql.Row("filtered", filt.getLong(0), filt.getLong(1), filt.getLong(2)),
+        org.apache.spark.sql.Row("z_filtered_declined", if (declined) 1L else 0L, 0L, 0L),
+        org.apache.spark.sql.Row("z_pushed", if (pushed) 1L else 0L, 0L, 0L)))
+        .toDF(s).orderBy(col("v"))
     }),
 
     // NAMED REFS (tags): `CALL graft.tag(path, 'baseline', 1)` pins an
@@ -2559,12 +2420,11 @@ object Sources extends OpModule {
         // versions [1,2,3]; keep 1 → v3 by age, v1 by PIN, v2 expires
         graft.sources.StoreSink.vacuum(path, 1)
         def aggOf(src: DataFrame, v: String) =
-          src.groupBy(col("grp"))
+          Local(src.groupBy(col("grp"))
             .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-            .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
-        val rows =
-          aggOf(s.sql("SELECT * FROM graft.store VERSION AS OF 'baseline'"), "baseline").collect() ++
-          aggOf(s.table("graft.store"), "current").collect() ++
+            .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents")), 16)
+        (aggOf(s.sql("SELECT * FROM graft.store VERSION AS OF 'baseline'"), "baseline") ++
+          aggOf(s.table("graft.store"), "current").rows ++
           Seq(
             org.apache.spark.sql.Row("z_tag_audit", "-", audit.getLong(0), audit.getLong(1)),
             org.apache.spark.sql.Row("z_v2_expired", "-",
@@ -2572,12 +2432,8 @@ object Sources extends OpModule {
                catch { case _: Exception => 1L }), 0L),
             org.apache.spark.sql.Row("z_unknown_tag_loud", "-",
               (try { s.sql("SELECT * FROM graft.store VERSION AS OF 'nope'").collect(); 0L }
-               catch { case _: Exception => 1L }), 0L))
-        val schema = StructType(Seq(
-          StructField("v", StringType), StructField("grp", StringType),
-          StructField("n", LongType), StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.toSeq.asJava, schema).orderBy(col("v"), col("grp"))
+               catch { case _: Exception => 1L }), 0L)))
+          .toDF(s).orderBy(col("v"), col("grp"))
       }
     }),
 
@@ -2626,9 +2482,8 @@ object Sources extends OpModule {
                   col("dm.amt_cents").as("y"))
         val noExchange =
           if (j.queryExecution.executedPlan.toString.contains("Exchange")) 0L else 1L
-        val agg = j.groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("x") + col("y")).as("sum_cents"))
-          .collect()
+        val agg = Local(j.groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("x") + col("y")).as("sum_cents")), 16)
         // bucket-pure IN probe: keys ≡ 1 (mod 8) — partition pruning must
         // plan ONLY bucket 1's files, regardless of zones
         val probeKeys = (0 until 100).map(i => 8L * i + 1)
@@ -2645,15 +2500,11 @@ object Sources extends OpModule {
           fsys.exists(new org.apache.hadoop.fs.Path(root, s"k_bucket=$b")))) 1L else 0L
         s.sql("DROP TABLE graft.part_fact")
         s.sql("DROP TABLE graft.part_dim")
-        val rows = agg.toSeq ++ Seq(
+        (agg ++ Seq(
           org.apache.spark.sql.Row("z_bucket_dirs", dirsOk, 0L),
           org.apache.spark.sql.Row("z_no_exchange", noExchange, 0L),
-          org.apache.spark.sql.Row("z_part_prune", pruned, 0L))
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+          org.apache.spark.sql.Row("z_part_prune", pruned, 0L)))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -2684,22 +2535,17 @@ object Sources extends OpModule {
         s.sql("ALTER TABLE graft.pmq DROP PARTITION (grp='F')")
         val filesKept = filesBefore.forall(f =>
           fsys.exists(new org.apache.hadoop.fs.Path(root, f)))
-        val agg = s.table("graft.pmq").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
+        val agg = Local(s.table("graft.pmq").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
         s.sql("TRUNCATE TABLE graft.pmq PARTITION (grp='O')")
         val afterTrunc = s.table("graft.pmq").count()
         s.sql("DROP TABLE graft.pmq")
-        val rows = agg.toSeq ++ Seq(
+        (agg ++ Seq(
           org.apache.spark.sql.Row("z_after_trunc", afterTrunc, 0L),
           org.apache.spark.sql.Row("z_files_kept", if (filesKept) 1L else 0L, 0L),
           org.apache.spark.sql.Row("z_parts", nParts, 0L),
-          org.apache.spark.sql.Row("z_show_one", if (showOne) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+          org.apache.spark.sql.Row("z_show_one", if (showOne) 1L else 0L, 0L)))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -2736,18 +2582,12 @@ object Sources extends OpModule {
         val untouched = after.filterNot(_.part.contains("F")).map(_.name).toSet == keepNames
         val replaced = after.filter(_.part.contains("F")).map(_.name).toSet
           .intersect(oldF).isEmpty
-        val agg = s.table("graft.pdyn").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
+        val agg = Local(s.table("graft.pdyn").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
         s.sql("DROP TABLE graft.pdyn")
-        val rows = agg.toSeq ++ flagRows(
+        (agg ++ flagRows(
           "z_replaced_fresh" -> replaced,
-          "z_untouched_by_name" -> untouched)
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+          "z_untouched_by_name" -> untouched)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -2762,11 +2602,10 @@ object Sources extends OpModule {
                 |       CAST(ROUND(o_totalprice * 100) AS BIGINT) AS amt_cents,
                 |       CONCAT('p', o_orderpriority) AS pri
                 |FROM ord_ctas_v WHERE o_totalprice > 150000""".stripMargin)
-        val agg = s.table("graft.big_orders")
+        val agg = Local(s.table("graft.big_orders")
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"),
-               count(col("pri")).as("n_pri"))
-          .collect()
+               count(col("pri")).as("n_pri")), 16)
         // atomicity probe: a CTAS that fails mid-write must leave no table
         val failed =
           try {
@@ -2783,15 +2622,11 @@ object Sources extends OpModule {
         val dropped =
           try { s.table("graft.big_orders").collect(); 0L }
           catch { case _: Exception => 1L }
-        val rows = agg.toSeq ++ Seq(
+        (agg ++ Seq(
           org.apache.spark.sql.Row("z_ctas_failed_loudly", failed, 0L, 0L),
           org.apache.spark.sql.Row("z_ctas_atomic", boomGone, 0L, 0L),
-          org.apache.spark.sql.Row("z_dropped", dropped, 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType), StructField("n_pri", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+          org.apache.spark.sql.Row("z_dropped", dropped, 0L, 0L)))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -2818,15 +2653,14 @@ object Sources extends OpModule {
         val prefixCut = pushed && planned < cand && planned >= 1
         val (total, pushedAll, candAll, plannedAll) = limitedTo(2000000000)
         val fullWhenOver = pushedAll && plannedAll == candAll && plannedAll >= 1
-        val rows = Seq(
+        val schema = StructType(Seq(
+          StructField("item", StringType), StructField("v", LongType)))
+        Local(schema, Seq(
           org.apache.spark.sql.Row("n_limited", limited),
           org.apache.spark.sql.Row("n_total", total),
           org.apache.spark.sql.Row("z_full_when_over", if (fullWhenOver) 1L else 0L),
-          org.apache.spark.sql.Row("z_prefix_cut", if (prefixCut) 1L else 0L))
-        val schema = StructType(Seq(
-          StructField("item", StringType), StructField("v", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("item"))
+          org.apache.spark.sql.Row("z_prefix_cut", if (prefixCut) 1L else 0L)))
+          .toDF(s).orderBy(col("item"))
       }
     }),
 
@@ -2858,10 +2692,9 @@ object Sources extends OpModule {
                 |       CAST(ROUND(o_totalprice * 100) AS BIGINT) AS amt_cents,
                 |       CAST(o_orderkey % 7 AS BIGINT) AS bucket7
                 |FROM ord_rtas_v WHERE o_totalprice > 120000""".stripMargin)
-        val agg = s.table("graft.rt").groupBy(col("grp"))
+        val agg = Local(s.table("graft.rt").groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"),
-               sum(col("bucket7")).as("sum_b7"))
-          .collect()
+               sum(col("bucket7")).as("sum_b7")), 16)
         // a failed replace must leave the (replaced) table intact
         val failedLoud =
           try {
@@ -2872,7 +2705,7 @@ object Sources extends OpModule {
             false
           } catch { case _: Exception => true }
         val intactAfterFail = s.table("graft.rt").count() ==
-          agg.map(_.getLong(1)).sum
+          agg.rows.map(_.getLong(1)).sum
         // the pre-replace generation is still one VERSION AS OF away
         val v1Readable = s.sql("SELECT SUM(amt_cents) FROM graft.rt VERSION AS OF 1")
           .collect()(0).getLong(0) == v1Sum
@@ -2886,17 +2719,12 @@ object Sources extends OpModule {
         s.sql("DROP TABLE graft.rt")
         def flag(n: String, b: Boolean) =
           org.apache.spark.sql.Row(n, if (b) 1L else 0L, 0L, 0L)
-        val rows = agg.toSeq ++ Seq(
+        (agg ++ Seq(
           flag("z_cor_created", corCreated),
           flag("z_failed_loud", failedLoud),
           flag("z_intact_after_fail", intactAfterFail),
           flag("z_missing_loud", missingLoud),
-          flag("z_v1_readable", v1Readable))
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType), StructField("sum_b7", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+          flag("z_v1_readable", v1Readable))).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -2928,17 +2756,11 @@ object Sources extends OpModule {
         val untouched = outside.subsetOf(after.map(_.name).toSet)
         val oneCommit = graft.sources.StoreSink.listVersions(root, fsys).size ==
           versionsBefore + 1
-        val agg = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = agg.toSeq ++ flagRows(
+        val agg = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (agg ++ flagRows(
           "z_one_commit" -> oneCommit,
-          "z_untouched_by_name" -> untouched)
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+          "z_untouched_by_name" -> untouched)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -2976,17 +2798,11 @@ object Sources extends OpModule {
         val orphansGone = swept.getLong(0) == 2L &&
           !fsys.exists(new org.apache.hadoop.fs.Path(root, "part-orphan-dead")) &&
           !fsys.exists(new org.apache.hadoop.fs.Path(root, "_staging/part-dead-stage"))
-        val agg = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = agg.toSeq ++ flagRows(
+        val agg = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (agg ++ flagRows(
           "z_orphans_gone" -> orphansGone,
-          "z_young_kept" -> youngKept)
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+          "z_young_kept" -> youngKept)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -3015,18 +2831,12 @@ object Sources extends OpModule {
           catch { case _: Exception => true }
         val tagAlive = s.sql("SELECT COUNT(*) FROM graft.store VERSION AS OF 'keepme'")
           .collect()(0).getLong(0) > 0L
-        val agg = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = agg.toSeq ++ flagRows(
+        val agg = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (agg ++ flagRows(
           "z_audit" -> auditOk,
           "z_tag_pinned" -> tagAlive,
-          "z_v1_expired" -> v1Gone)
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+          "z_v1_expired" -> v1Gone)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -3062,19 +2872,13 @@ object Sources extends OpModule {
         val afterUnset = s.sql("SHOW TBLPROPERTIES graft.store").collect()
           .map(_.getString(0)).toSet
         val unsetOk = !afterUnset("note") && afterUnset("graft.vacuum.keep")
-        val agg = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = agg.toSeq ++ flagRows(
+        val agg = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (agg ++ flagRows(
           "z_props_shown" -> propsShown,
           "z_unset_selective" -> unsetOk,
           "z_v1_expired" -> v1Expired,
-          "z_vacuum_used_prop" -> keptOne)
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+          "z_vacuum_used_prop" -> keptOne)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -3099,22 +2903,16 @@ object Sources extends OpModule {
           src.groupBy(col("grp"))
             .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
             .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
-        val pre = aggOf(s.sql("SELECT * FROM graft.store VERSION AS OF 1"), "v1")
+        val pre = Local(aggOf(s.sql("SELECT * FROM graft.store VERSION AS OF 1"), "v1")
           .unionByName(aggOf(s.sql("SELECT * FROM graft.store VERSION AS OF 2"), "v2"))
-          .unionByName(aggOf(s.table("graft.store"), "v3"))
-          .collect()
+          .unionByName(aggOf(s.table("graft.store"), "v3")), 48)
         graft.sources.StoreSink.vacuum(path, 2)
         val v1Expired =
           try { s.sql("SELECT * FROM graft.store VERSION AS OF 1").collect(); 0L }
           catch { case _: Exception => 1L }
-        val post = aggOf(s.table("graft.store"), "v4_post_vacuum").collect()
+        val post = Local(aggOf(s.table("graft.store"), "v4_post_vacuum"), 16)
         val marker = org.apache.spark.sql.Row("v1_expired", "-", v1Expired, 0L)
-        val res = (pre ++ post :+ marker).toSeq
-        val schema = StructType(Seq(
-          StructField("v", StringType), StructField("grp", StringType),
-          StructField("n", LongType), StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(res.asJava, schema).orderBy(col("v"), col("grp"))
+        (pre ++ post.rows ++ Seq(marker)).toDF(s).orderBy(col("v"), col("grp"))
       }
     }),
 
@@ -3143,13 +2941,12 @@ object Sources extends OpModule {
             .withZone(java.time.ZoneOffset.UTC)
             .format(java.time.Instant.ofEpochMilli(ms))
         def aggAt(ms: Long, v: String) =
-          s.sql(s"SELECT * FROM graft.store TIMESTAMP AS OF '${tsLit(ms)}'")
+          Local(s.sql(s"SELECT * FROM graft.store TIMESTAMP AS OF '${tsLit(ms)}'")
             .groupBy(col("grp"))
             .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-            .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
-            .collect()
-        val content = aggAt(tsOf(1), "t1") ++ aggAt(tsOf(2), "t2") ++
-          aggAt(tsOf(3), "t3")
+            .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents")), 16)
+        val content = aggAt(tsOf(1), "t1") ++ aggAt(tsOf(2), "t2").rows ++
+          aggAt(tsOf(3), "t3").rows
         val byV = hist.sortBy(_._1).toSeq
         val monotone = byV.zip(byV.drop(1)).forall { case (a, b) => a._2 < b._2 }
         val histOk = hist.map(_._1).toSeq.sorted == Seq(1L, 2L, 3L) &&
@@ -3163,15 +2960,11 @@ object Sources extends OpModule {
           try { s.sql(s"SELECT * FROM graft.store TIMESTAMP AS OF " +
                   s"'${tsLit(tsOf(1))}'").collect(); 0L }
           catch { case _: Exception => 1L }
-        val rows = content.toSeq ++ Seq(
+        (content ++ Seq(
           org.apache.spark.sql.Row("z_expired_loud", "-", expiredLoud, 0L),
           org.apache.spark.sql.Row("z_hist", "-", if (histOk) 1L else 0L, 0L),
-          org.apache.spark.sql.Row("z_pre_epoch_loud", "-", preLoud, 0L))
-        val schema = StructType(Seq(
-          StructField("v", StringType), StructField("grp", StringType),
-          StructField("n", LongType), StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("v"), col("grp"))
+          org.apache.spark.sql.Row("z_pre_epoch_loud", "-", preLoud, 0L)))
+          .toDF(s).orderBy(col("v"), col("grp"))
       }
     }),
 
@@ -3196,20 +2989,13 @@ object Sources extends OpModule {
         // explicit values win; explicit NULL stays NULL (not the default)
         s.sql(s"INSERT INTO graft.store VALUES (${maxK + 2}, 'NEW', 2000, 99, 'gold')")
         s.sql(s"INSERT INTO graft.store VALUES (${maxK + 3}, 'NEW', 3000, NULL, NULL)")
-        val res = s.table("graft.store")
+        Local(s.table("graft.store")
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"),
                sum(col("fee_cents")).as("fee_sum"),
                sum(when(col("tier") === "std", 1L).otherwise(0L)).as("n_std"),
                sum(when(col("tier").isNull, 1L).otherwise(0L)).as("n_null"))
-          .orderBy(col("grp")).collect()
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("fee_sum", LongType), StructField("n_std", LongType),
-          StructField("n_null", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(java.util.Arrays.asList(res: _*), schema)
-          .orderBy(col("grp"))
+          .orderBy(col("grp")), 16).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -3231,26 +3017,22 @@ object Sources extends OpModule {
         .write.format("graft.sources.StoreSink").mode("overwrite")
         .option("path", path).option("partitionedBy", "identity:grp").save()
       withStorePath(s, path) {
-        val parts = s.sql(
-          "SELECT part, n_rows FROM graft.`store$partitions` ORDER BY part")
-          .collect()
+        val parts = Local(s.sql(
+          "SELECT part, n_rows FROM graft.`store$partitions` ORDER BY part"), 16)
         val files = s.sql(
           "SELECT COUNT(*) AS nf, SUM(rows) AS nr FROM graft.`store$files`")
           .collect()(0)
         val tableRows = s.table("graft.store").count()
-        val partRows = parts.map(_.getLong(1)).sum
+        val partRows = parts.rows.map(_.getLong(1)).sum
         val consistent =
           if (files.getLong(1) == tableRows && partRows == tableRows) 1L else 0L
         val nVersions = s.sql("SELECT COUNT(*) FROM graft.`store$history`")
           .collect()(0).getLong(0)
-        val rows = parts.toSeq ++ Seq(
+        (parts ++ Seq(
           org.apache.spark.sql.Row("z_consistent", consistent),
           org.apache.spark.sql.Row("z_files_cover", if (files.getLong(0) >= 3) 1L else 0L),
-          org.apache.spark.sql.Row("z_versions", nVersions))
-        val schema = StructType(Seq(
-          StructField("part", StringType), StructField("n_rows", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("part"))
+          org.apache.spark.sql.Row("z_versions", nVersions)))
+          .toDF(s).orderBy(col("part"))
       }
     }),
 
@@ -3279,17 +3061,12 @@ object Sources extends OpModule {
         s.sql(s"INSERT INTO graft.store VALUES (${maxK + 2}, 'NEW', 500)")
         s.sql("ALTER TABLE graft.store DROP CONSTRAINT amt_nonneg")
         s.sql(s"INSERT INTO graft.store VALUES (${maxK + 3}, 'NEG', -7)")
-        val agg = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = agg.toSeq ++ Seq(
+        val agg = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (agg ++ Seq(
           org.apache.spark.sql.Row("z_bad_add_loud", badAddLoud, 0L),
-          org.apache.spark.sql.Row("z_bad_insert_loud", badInsLoud, 0L))
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+          org.apache.spark.sql.Row("z_bad_insert_loud", badInsLoud, 0L)))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -3301,7 +3078,7 @@ object Sources extends OpModule {
       seedStore(s, d, path)
       withStorePath(s, path) {
         s.sql("UPDATE graft.store SET amt_cents = amt_cents + 7 WHERE grp = 'P'")
-        storeSummary(s, path)
+        storeSummary(s, path).toDF(s)
       }
     }),
 
@@ -3359,7 +3136,7 @@ object Sources extends OpModule {
         def topN(tag: String, k: org.apache.spark.sql.Column) = {
           val q = store.orderBy(k).limit(12)
             .select(lit(tag).as("tag"), col("k"), col("amt_cents"))
-          val rows = q.collect().toSeq
+          val rows = Local(q, 12)
           val m = ScanMetrics(q)
           (rows, m.described(" topN=12"), m.sum("partKeptFiles"), m.sum("limitKeptFiles"))
         }
@@ -3368,19 +3145,12 @@ object Sources extends OpModule {
         val nullDf = store.where(col("k").isNull).agg(count(lit(1)))
         val nNull = nullDf.collect()(0).getLong(0)
         val (tn, pn) = ScanMetrics(nullDf).plannedFiles
-        val rows = ascRows ++ descRows ++ Seq(
-          org.apache.spark.sql.Row("z_asc_pruned",
-            if (pushedA && pa < ta && pa >= 1) 1L else 0L, 0L),
-          org.apache.spark.sql.Row("z_desc_pruned",
-            if (pushedD && pd < td && pd >= 1) 1L else 0L, 0L),
+        (ascRows ++ descRows.rows ++ flagRows(
+          "z_asc_pruned" -> (pushedA && pa < ta && pa >= 1),
+          "z_desc_pruned" -> (pushedD && pd < td && pd >= 1)) ++ Seq(
           org.apache.spark.sql.Row("z_isnull_pruned",
-            if (pn == 1 && tn > 1) 1L else 0L, nNull))
-        val schema = StructType(Seq(
-          StructField("tag", StringType), StructField("k", LongType),
-          StructField("amt_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema)
-          .orderBy(col("tag"), col("k").asc_nulls_first, col("amt_cents"))
+            if (pn == 1 && tn > 1) 1L else 0L, nNull)))
+          .toDF(s).orderBy(col("tag"), col("k").asc_nulls_first, col("amt_cents"))
       }
     }),
 
@@ -3425,8 +3195,7 @@ object Sources extends OpModule {
         val schema = StructType(Seq(
           StructField("step", StringType), StructField("n", LongType),
           StructField("n_distinct", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+        Local(schema, rows).toDF(s).orderBy(col("step"))
       }
     }),
 
@@ -3500,8 +3269,7 @@ object Sources extends OpModule {
       val schema = StructType(Seq(
         StructField("step", StringType), StructField("n", LongType),
         StructField("amt_sum", LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+      Local(schema, rows).toDF(s).orderBy(col("step"))
     }),
 
     // CATALOG-PINNED READS FROM PLAIN SQL (round-12 verdict #3): the same
@@ -3566,8 +3334,7 @@ object Sources extends OpModule {
       val schema = StructType(Seq(
         StructField("step", StringType), StructField("n", LongType),
         StructField("amt_sum", LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+      Local(schema, rows).toDF(s).orderBy(col("step"))
     }),
 
     // MULTI-TABLE ATOMIC PUBLISH (verdict r9 #8): two stores stage WAP
@@ -3624,8 +3391,7 @@ object Sources extends OpModule {
       val schema = StructType(Seq(
         StructField("step", StringType), StructField("n", LongType),
         StructField("amt_sum", LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+      Local(schema, rows).toDF(s).orderBy(col("step"))
     }),
 
     // STRING ZONE STATS (verdict r9 #5): declared trailing STRING columns
@@ -3678,8 +3444,7 @@ object Sources extends OpModule {
         val schema = StructType(Seq(
           StructField("step", StringType), StructField("n", LongType),
           StructField("k_sum", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+        Local(schema, rows).toDF(s).orderBy(col("step"))
       }
     }),
 
@@ -3716,23 +3481,18 @@ object Sources extends OpModule {
         val ddlRefused =
           try { s.sql("ALTER TABLE graft.store DROP PARTITION (grp='O')"); false }
           catch { case _: Exception => true }
-        val agg = store.groupBy(col("grp"))
+        val agg = Local(store.groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("amt_sum"))
           .select(concat(lit("grp:"), col("grp")).as("step"), col("n"),
-                  col("amt_sum"))
-          .collect().toSeq
-        val rows = agg ++ Seq(
+                  col("amt_sum")), 16)
+        (agg ++ Seq(
           org.apache.spark.sql.Row("z_k6", k6, 0L),
           org.apache.spark.sql.Row("z_prunes_mixed",
             if (p0 < t0 && p0 >= 1) 1L else 0L, 0L),
           org.apache.spark.sql.Row("z_spec_audit",
             audit.getLong(0), audit.getLong(1)),
-          org.apache.spark.sql.Row("z_ddl_refused", if (ddlRefused) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("step", StringType), StructField("n", LongType),
-          StructField("amt_sum", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+          org.apache.spark.sql.Row("z_ddl_refused", if (ddlRefused) 1L else 0L, 0L)))
+          .toDF(s).orderBy(col("step"))
       }
     }),
 
@@ -3774,23 +3534,18 @@ object Sources extends OpModule {
         val travelInt = v1.schema.fields(3).dataType ==
           org.apache.spark.sql.types.IntegerType
         val travelSum = v1.agg(sum(col("fee").cast("long"))).collect()(0).getLong(0)
-        val agg = s.table("graft.store")
+        val agg = Local(s.table("graft.store")
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("fee")).as("fee_sum"),
                max(col("fee")).as("fee_max"))
           .select(concat(lit("grp:"), col("grp")).as("step"), col("n"),
-                  col("fee_sum"), col("fee_max"))
-          .collect().toSeq
-        val rows = agg ++ Seq(
+                  col("fee_sum"), col("fee_max")), 16)
+        (agg ++ Seq(
           org.apache.spark.sql.Row("z_no_rewrite", if (noRewrite) 1L else 0L, 0L, 0L),
           org.apache.spark.sql.Row("z_narrow_refused", if (narrowRefused) 1L else 0L, 0L, 0L),
           org.apache.spark.sql.Row("z_travel_int",
-            if (travelInt) 1L else 0L, travelSum, 0L))
-        val schema = StructType(Seq(
-          StructField("step", StringType), StructField("n", LongType),
-          StructField("fee_sum", LongType), StructField("fee_max", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("step"))
+            if (travelInt) 1L else 0L, travelSum, 0L)))
+          .toDF(s).orderBy(col("step"))
       }
     }),
 
@@ -3832,25 +3587,20 @@ object Sources extends OpModule {
         val (changed, parts) = (refreshed.getLong(0), refreshed.getLong(1))
         val queries = graft.ops.TrainingOps.nzEmbeddings(s, d)
           .where(col("vec_id") < 10)
-        val top = graft.sources.AnnIndex.probe(s, queries, idx)
+        // at most 10 queries x the probe's default top 5
+        val top = Local(graft.sources.AnnIndex.probe(s, queries, idx)
           .select(lit("t").as("tag"), col("q_id"), col("n_id"),
-                  col("score_e4"), col("rn")).collect().toSeq
+                  col("score_e4"), col("rn")), 10 * 5)
         val deadLeft = s.read.format("graft.sources.StoreSink")
           .option("path", graft.sources.AnnIndex.postingsPath(idx)).load()
           .where(col("k") < 25 && col("k") =!= 0).count() // 0 re-enters via %89
         def flag(tagName: String, v: Boolean) = org.apache.spark.sql.Row(
           tagName, -1L, -1L, if (v) 1 else 0, 0)
-        val rows = top ++ Seq(
+        (top ++ Seq(
           flag("z_codebook_frozen", cbRows == cbBefore),
           flag("z_delete_applied", deadLeft == 0L),
-          flag("z_incremental", changed > 0 && parts >= 1))
-        val schema = StructType(Seq(
-          StructField("tag", StringType), StructField("q_id", LongType),
-          StructField("n_id", LongType), StructField("score_e4", IntegerType),
-          StructField("rn", IntegerType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema)
-          .orderBy(col("tag"), col("q_id"), col("rn"))
+          flag("z_incremental", changed > 0 && parts >= 1)))
+          .toDF(s).orderBy(col("tag"), col("q_id"), col("rn"))
       }
     }),
   )

@@ -1,10 +1,9 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Local, Tables}
 import graft.ops.OpModule
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** COLUMNAR AT-REST ENCODING battery (SURVEY.md §2.9 store family — the
   * round-11 verdict's #1): the store's data files under
@@ -64,10 +63,6 @@ object StoreColumnar extends OpModule {
     }
   }
 
-  private val summarySchema = StructType(Seq(
-    StructField("grp", StringType), StructField("n", LongType),
-    StructField("sum_cents", LongType)))
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Baseline: a columnar-born table round-trips the standard content,
@@ -77,12 +72,9 @@ object StoreColumnar extends OpModule {
       val path = tmp(d, "storecol")
       seedColumnar(s, d, path)
       withStorePath(s, path) {
-        val agg = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = agg.toSeq ++ flagRows("z_columnar" -> allColumnar(s, path))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, summarySchema).orderBy(col("grp"))
+        val agg = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (agg ++ flagRows("z_columnar" -> allColumnar(s, path))).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -108,20 +100,15 @@ object StoreColumnar extends OpModule {
           .repartitionByRange(4, col("k"))
           .write.format(fmt).mode("append").option("path", path).save()
         val aggDf = s.table("graft.store")
-          .groupBy(col("grp")).agg(sum(col("fee")).as("fee_sum"))
-        val agg = aggDf.collect()
+          .groupBy(col("grp")).agg(sum(col("fee")).as("fee_sum"), lit(0L).as("pad"))
+        val agg = Local(aggDf, 16)
         val oneDf = s.table("graft.store").select(lit(1).as("one"))
         val nRows = oneDf.collect().length.toLong
-        val rows = agg.toSeq.map(r => Row(r.getString(0), r.getLong(1), 0L)) ++
-          Seq(Row("z_rows", nRows, 0L)) ++
+        (agg ++ Seq(Row("z_rows", nRows, 0L)) ++
           flagRows(
             "z_blocks_narrow" -> ScanMetrics(aggDf).readEach(2, 5), // (grp, fee) of 5
-            "z_blocks_zero"   -> ScanMetrics(oneDf).readEach(0, 5)) // header-only
-        val schema = StructType(Seq(
-          StructField("grp", StringType), StructField("fee_sum", LongType),
-          StructField("pad", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+            "z_blocks_zero"   -> ScanMetrics(oneDf).readEach(0, 5))) // header-only
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -132,44 +119,40 @@ object StoreColumnar extends OpModule {
     // replacement files still columnar (z_columnar).
     "q_store_col_delete" -> ((s, d) => {
       val path = tmp(d, "storecoldel")
-      val (base, _) = seedColumnar(s, d, path)
+      val (base, maxK) = seedColumnar(s, d, path)
       val root = new org.apache.hadoop.fs.Path(path)
       val fsys = fsOf(s)
       def dataFiles() = fsys.listStatus(root).map(_.getPath.getName)
         .filter(n => n.startsWith("part-") && !n.contains(".dv-") &&
                      !n.contains(".eq-")).toSet
       val filesBefore = dataFiles()
-      val dvKeys = base.where(pmod(col("k"), lit(101)) === 0)
-        .select(col("k")).collect().map(_.getLong(0))
-      val eqKeys = base.where(pmod(col("k"), lit(293)) === 0 &&
-                              pmod(col("k"), lit(101)) =!= 0)
-        .select(col("k")).collect().map(_.getLong(0))
+      // the DELETE's key list goes into its SQL text
+      val dvKeys = Local(base.where(pmod(col("k"), lit(101)) === 0).select(col("k")),
+        maxK / 101 + 1).rows.map(_.getLong(0))
+      val eqKeys = Local(base.where(pmod(col("k"), lit(293)) === 0 &&
+                                    pmod(col("k"), lit(101)) =!= 0).select(col("k")),
+        maxK / 293 + 1).rows.map(_.getLong(0))
       withStorePath(s, path) {
-        def aggOf(v: String) = s.table("graft.store")
+        def aggOf(v: String) = Local(s.table("graft.store")
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
-          .collect()
+          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents")), 16)
         s.sql(s"DELETE FROM graft.store WHERE k IN (${dvKeys.mkString(",")})")
         val hasDv = StoreSink.readEntries(root, fsys).exists(_.dv.isDefined)
         val noRewrite = dataFiles() == filesBefore
         StoreSink.equalityDelete(path,
-          Array(org.apache.spark.sql.sources.In("k", eqKeys.map(k => k: Any))))
+          Array(org.apache.spark.sql.sources.In("k", eqKeys.map(k => k: Any).toArray)))
         val hasEq = StoreSink.readEntries(root, fsys).exists(_.eq.isDefined)
         val morRows = aggOf("mor")
         s.sql("DELETE FROM graft.store WHERE grp = 'F'") // bulk: COW
         val absorbed = StoreSink.readEntries(root, fsys)
           .forall(e => e.dv.isEmpty && e.eq.isEmpty)
         val cowRows = aggOf("cow")
-        val rows = morRows.toSeq ++ cowRows ++ Seq(
+        (morRows ++ cowRows.rows ++ Seq(
           Row("z_absorbed", "-", if (absorbed) 1L else 0L, 0L),
           Row("z_columnar", "-", if (allColumnar(s, path)) 1L else 0L, 0L),
-          Row("z_masks", "-", if (hasDv && hasEq && noRewrite) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("v", StringType), StructField("grp", StringType),
-          StructField("n", LongType), StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("v"), col("grp"))
+          Row("z_masks", "-", if (hasDv && hasEq && noRewrite) 1L else 0L, 0L)))
+          .toDF(s).orderBy(col("v"), col("grp"))
       }
     }),
 
@@ -192,7 +175,7 @@ object StoreColumnar extends OpModule {
                  |WHEN MATCHED AND s.op = 'D' THEN DELETE
                  |WHEN MATCHED AND s.op = 'U' THEN UPDATE SET grp = s.grp, amt_cents = s.amt_cents
                  |WHEN NOT MATCHED AND s.op = 'I' THEN INSERT (k, grp, amt_cents) VALUES (s.k, s.grp, s.amt_cents)""".stripMargin)
-        storeSummary(s, path)
+        storeSummary(s, path).toDF(s)
       } finally s.catalog.dropTempView(v)
     }),
 
@@ -213,12 +196,11 @@ object StoreColumnar extends OpModule {
           .write.format(fmt).mode("append").option("path", path).save()
         s.sql("UPDATE graft.store SET amt_cents = amt_cents + 5 " +
               "WHERE note IS NOT NULL")
-        val res = s.table("graft.store")
+        Local(s.table("graft.store")
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"),
                count(col("note")).as("n_note"), max(col("note")).as("max_note"))
-          .orderBy(col("grp"))
-        s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
+          .orderBy(col("grp")), 16).toDF(s)
       }
     }),
 
@@ -237,10 +219,9 @@ object StoreColumnar extends OpModule {
                 (col("k") * 10).as("amt_cents"))
         .write.format(fmt).mode("append").option("path", path).save() // v2
       withStorePath(s, path) {
-        def aggOf(v: String, df: DataFrame) = df.groupBy(col("grp"))
+        def aggOf(v: String, df: DataFrame) = Local(df.groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
-          .collect()
+          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents")), 16)
         val head = aggOf("head", s.table("graft.store"))
         val v1 = aggOf("v1", s.sql("SELECT * FROM graft.store VERSION AS OF 1"))
         val mixed = !allColumnar(s, path) &&
@@ -252,13 +233,8 @@ object StoreColumnar extends OpModule {
               val n = try in.read(buf) finally in.close()
               n == 5 && new String(buf, "UTF-8") == "#GC1 "
             }
-        val rows = head.toSeq ++ v1 ++
-          Seq(Row("z", "mixed", if (mixed) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("v", StringType), StructField("grp", StringType),
-          StructField("n", LongType), StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("v"), col("grp"))
+        (head ++ v1.rows ++ Seq(Row("z", "mixed", if (mixed) 1L else 0L, 0L)))
+          .toDF(s).orderBy(col("v"), col("grp"))
       }
     }),
 
@@ -280,22 +256,15 @@ object StoreColumnar extends OpModule {
           .map(StoreSink.parseEntry(_).name)
         val replaced = names(1).diff(names(2)).size
         def aggOf(win: String, df: DataFrame) =
-          df.groupBy(col("op"), col("grp"))
+          Local(df.groupBy(col("op"), col("grp"))
             .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
             .select(lit(win).as("win"), col("op"), col("grp"), col("n"),
-                    col("sum_cents"))
-        val rows =
-          aggOf("1..3", StoreSink.changes(s, path, 1)).collect() ++
-          aggOf("2..3", StoreSink.changes(s, path, 2, Some(3))).collect() :+
-          Row("flag", "z_subset_rewrite", "-",
-            if (replaced > 0 && replaced < names(1).size) 1L else 0L, 0L)
-        val schema = StructType(Seq(
-          StructField("win", StringType), StructField("op", StringType),
-          StructField("grp", StringType), StructField("n", LongType),
-          StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.toSeq.asJava, schema)
-          .orderBy(col("win"), col("op"), col("grp"))
+                    col("sum_cents")), 16)
+        (aggOf("1..3", StoreSink.changes(s, path, 1)) ++
+          aggOf("2..3", StoreSink.changes(s, path, 2, Some(3))).rows ++
+          Seq(Row("flag", "z_subset_rewrite", "-",
+            if (replaced > 0 && replaced < names(1).size) 1L else 0L, 0L)))
+          .toDF(s).orderBy(col("win"), col("op"), col("grp"))
       }
     }),
 
@@ -312,24 +281,19 @@ object StoreColumnar extends OpModule {
         .repartitionByRange(8, col("k"))
         .write.format(fmt).mode("append").option("path", path).save() // v2
       withStorePath(s, path) {
-        def aggOf(v: String, df: DataFrame) = df.groupBy(col("grp"))
+        def aggOf(v: String, df: DataFrame) = Local(df.groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents"))
-          .collect()
+          .select(lit(v).as("v"), col("grp"), col("n"), col("sum_cents")), 16)
         val pre = aggOf("pre", s.table("graft.store"))
         StoreSink.compact(s, path, 30000L)
         val post = aggOf("post", s.table("graft.store"))
         val v2 = aggOf("v2", s.sql("SELECT * FROM graft.store VERSION AS OF 2"))
-        val same = pre.map(_.toSeq.drop(1)).toSet == post.map(_.toSeq.drop(1)).toSet &&
-          pre.map(_.toSeq.drop(1)).toSet == v2.map(_.toSeq.drop(1)).toSet
-        val rows = post.toSeq ++ Seq(
+        def content(l: Local) = l.rows.map(_.toSeq.drop(1)).toSet
+        val same = content(pre) == content(post) && content(pre) == content(v2)
+        (post ++ Seq(
           Row("z", "all_columnar", if (allColumnar(s, path)) 1L else 0L, 0L),
-          Row("z", "content_invariant", if (same) 1L else 0L, 0L))
-        val schema = StructType(Seq(
-          StructField("v", StringType), StructField("grp", StringType),
-          StructField("n", LongType), StructField("sum_cents", LongType)))
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema).orderBy(col("v"), col("grp"))
+          Row("z", "content_invariant", if (same) 1L else 0L, 0L)))
+          .toDF(s).orderBy(col("v"), col("grp"))
       }
     }),
 
@@ -344,12 +308,10 @@ object StoreColumnar extends OpModule {
           .where(col("k").between(100, 999))
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-        val agg = aggDf.collect()
+        val agg = Local(aggDf, 16)
         val (t, p) = ScanMetrics(aggDf).plannedFiles
         val pruned = p < t && p >= 1
-        val rows = agg.toSeq ++ flagRows("z_zone_pruned" -> pruned)
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, summarySchema).orderBy(col("grp"))
+        (agg ++ flagRows("z_zone_pruned" -> pruned)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -388,13 +350,10 @@ object StoreColumnar extends OpModule {
           n == 5 && new String(buf, "UTF-8") == "#GC2 "
         }
       withStorePath(s, path) {
-        val agg = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = agg.toSeq ++ flagRows(
-          "z_gc2" -> gc2, "z_smaller" -> smaller)
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, summarySchema).orderBy(col("grp"))
+        val agg = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (agg ++ flagRows(
+          "z_gc2" -> gc2, "z_smaller" -> smaller)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -443,18 +402,16 @@ object StoreColumnar extends OpModule {
         finally in.close()
       }
       withStorePath(s, path) {
-        val full = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
+        val full = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
         val one = s.table("graft.store").where(col("amt_cents") === 200)
           .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))
           .collect()(0)
-        val rows = full.toSeq ++
+        (full ++
           Seq(Row("amt200", one.getLong(0), one.getLong(1))) ++
           flagRows("z_k_plain" -> kPlain, "z_rle" -> tagged,
-                   "z_smaller" -> smaller)
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, summarySchema).orderBy(col("grp"))
+                   "z_smaller" -> smaller))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -508,15 +465,13 @@ object StoreColumnar extends OpModule {
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
         val rareAgg = rareDf.collect()(0)
         val skipped = ScanMetrics(rareDf).groupsSkipped
-        val full = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = full.toSeq ++
+        val full = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (full ++
           Seq(Row("rare", rareAgg.getLong(0), rareAgg.getLong(1))) ++
           flagRows("z_dict" -> tagged, "z_dict_skip" -> skipped,
-                   "z_smaller" -> smaller)
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, summarySchema).orderBy(col("grp"))
+                   "z_smaller" -> smaller))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -550,11 +505,9 @@ object StoreColumnar extends OpModule {
           .where(col("grp").like(s"st-$rare-%"))
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-        val agg = aggDf.collect()
+        val agg = Local(aggDf, 16)
         val skipped = ScanMetrics(aggDf).groupsSkipped
-        val rows = agg.toSeq ++ flagRows("z_dict_like_skip" -> skipped)
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, summarySchema).orderBy(col("grp"))
+        (agg ++ flagRows("z_dict_like_skip" -> skipped)).toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -609,15 +562,13 @@ object StoreColumnar extends OpModule {
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
         val rareAgg = rareDf.collect()(0)
         val skipped = ScanMetrics(rareDf).groupsSkipped
-        val full = s.table("graft.store").groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
-        val rows = full.toSeq ++
+        val full = Local(s.table("graft.store").groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+        (full ++
           Seq(Row("rare", rareAgg.getLong(0), rareAgg.getLong(1))) ++
           flagRows("z_dict_rle" -> tagged, "z_dict_skip" -> skipped,
-                   "z_smaller" -> smaller)
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, summarySchema).orderBy(col("grp"))
+                   "z_smaller" -> smaller))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -652,14 +603,13 @@ object StoreColumnar extends OpModule {
         val aggDf = s.table("graft.store").where(col("k").between(lo, hi))
           .groupBy(col("grp"))
           .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-        val agg = aggDf.collect()
+        val agg = Local(aggDf, 16)
         val skipped = ScanMetrics(aggDf).groupsSkipped
         val hasDv = StoreSink.readEntries(
           new org.apache.hadoop.fs.Path(path), fsOf(s)).exists(_.dv.isDefined)
-        val rows = agg.toSeq ++ flagRows(
-          "z_group_skip" -> skipped, "z_dv_masked" -> hasDv)
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, summarySchema).orderBy(col("grp"))
+        (agg ++ flagRows(
+          "z_group_skip" -> skipped, "z_dv_masked" -> hasDv))
+          .toDF(s).orderBy(col("grp"))
       }
     }),
 
@@ -679,10 +629,9 @@ object StoreColumnar extends OpModule {
           .select(col("o_orderkey").as("k"), col("o_orderstatus").as("grp"),
                   graft.ops.Det.cents(col("o_totalprice")).as("amt_cents"))
           .write.format(fmt).mode("append").option("path", path).save()
-        val agg = s.table("graft.store").where(col("grp") === "F")
+        val agg = Local(s.table("graft.store").where(col("grp") === "F")
           .groupBy(col("grp"))
-          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-          .collect()
+          .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
         // routing pin: every entry carries its partition value, one value
         // per live grp (partition PRUNING itself is StorePartSpec's pin —
         // the planning hook counts after bloom pruning, which already
@@ -690,11 +639,9 @@ object StoreColumnar extends OpModule {
         val entries = StoreSink.readEntries(root, fsOf(s))
         val routed = entries.nonEmpty && entries.forall(_.part.isDefined) &&
           entries.flatMap(_.part).distinct.size >= 3
-        val rows = agg.toSeq ++ flagRows(
+        (agg ++ flagRows(
           "z_columnar" -> allColumnar(s, path),
-          "z_part_routed" -> routed)
-        import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, summarySchema).orderBy(col("grp"))
+          "z_part_routed" -> routed)).toDF(s).orderBy(col("grp"))
       }
     }),
   )

@@ -3013,9 +3013,7 @@ object StoreSink {
     def readFiles(files: Seq[String],
                   at: Option[Int]): org.apache.spark.sql.DataFrame = {
       val projected =
-        if (files.isEmpty)
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            tableSchema(pathStr, at))
+        if (files.isEmpty) graft.Local(tableSchema(pathStr, at), Nil).toDF(spark)
         else {
           val r = spark.read.format("graft.sources.StoreSink")
             .option("path", pathStr).option("files", files.mkString(","))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Local
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -337,24 +338,14 @@ object TextIndex {
     // together; the broadcast side below is a local relation of the same
     // rows. The previous localCheckpoint + two collects were three
     // sequential jobs for the same |query terms| rows (r14 optimization).
-    val qrows = qterms
+    // The term list also becomes an IN filter, so it is capped.
+    val qrows = Local(qterms
       .select(col("t"), col("df").cast("long").as("df"),
-              shardCol(col("t"), conf.shards).as("b"))
-      .collect()
-    val shards = qrows.map(_.getString(2)).distinct.toSeq
+              shardCol(col("t"), conf.shards).as("b")), 1024)
+    val shards = qrows.rows.map(_.getString(2)).distinct
     lastScoreShards = Some((shards.size, conf.shards))
-    val termList = qrows.map(_.getString(0)).toSeq
-    val q = {
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(
-        qrows.map(r => org.apache.spark.sql.Row(r.getString(0), r.getLong(1)))
-          .toSeq.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("t",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("df",
-            org.apache.spark.sql.types.LongType))))
-    }
+    val termList = qrows.rows.map(_.getString(0))
+    val q = qrows.toDF(s).select(col("t"), col("df"))
     s.read.format(Fmt).option("path", pl(genRoot)).load()
       .where(col("grp").isin(shards: _*)) // partition pruning = list lookup
       .where(col("term").isin(termList: _*))

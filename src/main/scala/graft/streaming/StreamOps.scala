@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.UUID
 
-import graft.Tables
+import graft.{Local, Tables}
 import graft.GraftSession.withConf
 import graft.ops.OpModule
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -919,21 +919,14 @@ object StreamOps extends OpModule {
           .start()
         try q.processAllAvailable() finally q.stop()
       }
-      val hist = s.read.parquet(idx)
+      // one row per distinct chunk length; chunks average 8 tokens and
+      // never outgrow their document (43 lengths at sf0.01)
+      val hist = Local(s.read.parquet(idx)
         .groupBy(col("tok_len").as("v")).agg(count(lit(1)).as("n"))
-        .select(lit("len").as("kind"), col("v"), col("n")).collect()
-      val rows = novelPerBatch.zipWithIndex.map { case (n, i) =>
+        .select(lit("len").as("kind"), col("v"), col("n")), 4096)
+      (hist ++ novelPerBatch.toSeq.zipWithIndex.map { case (n, i) =>
         org.apache.spark.sql.Row("batch", i + 1L, n)
-      } ++ hist
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("kind",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, outSchema).orderBy(col("kind"), col("v"))
+      }).toDF(s).orderBy(col("kind"), col("v"))
     }),
 
     // STORE→STORE INCREMENTAL PIPELINE — the log-structured loop closed in
@@ -982,21 +975,12 @@ object StreamOps extends OpModule {
       }
       // the downstream ledger proves incrementality: >= 2 committed epochs
       val epochs = graft.sources.StoreSink.epochCount(dst)
-      val agg = s.read.format("graft.sources.StoreSink").option("path", dst).load()
+      val agg = Local(s.read.format("graft.sources.StoreSink").option("path", dst).load()
         .groupBy(col("grp"))
-        .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-        .collect()
-      val rows = agg.toSeq :+ org.apache.spark.sql.Row(
-        "z_incremental", if (epochs >= 2) 1L else 0L, 0L)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("grp",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sum_cents",
-          org.apache.spark.sql.types.LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+        .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+      (agg ++ Seq(org.apache.spark.sql.Row(
+        "z_incremental", if (epochs >= 2) 1L else 0L, 0L)))
+        .toDF(s).orderBy(col("grp"))
     }),
 
     // STREAMING INDEX MAINTENANCE — the persisted IVF index keeping up with
@@ -1048,29 +1032,17 @@ object StreamOps extends OpModule {
       val epochs = graft.sources.StoreSink.epochCount(src)
       val queries = graft.ops.TrainingOps.nzEmbeddings(s, d)
         .where(col("vec_id") < 10)
-      val top = graft.sources.AnnIndex.probe(s, queries, idx)
+      // 10 queries x the probe's default top 5
+      val top = Local(graft.sources.AnnIndex.probe(s, queries, idx)
         .select(lit("t").as("tag"), col("q_id"), col("n_id"),
-                col("score_e4"), col("rn")).collect().toSeq
+                col("score_e4"), col("rn")), 10 * 5)
       def flag(tagName: String, v: Boolean) = org.apache.spark.sql.Row(
         tagName, -1L, -1L, if (v) 1 else 0, 0)
-      val rows = top ++ Seq(
+      (top ++ Seq(
         flag("z_epochs", epochs >= 2),
         flag("z_codebook_frozen", frozen),
-        flag("z_refreshed", changed > 0 && parts >= 1))
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("tag",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("q_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("score_e4",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("rn",
-          org.apache.spark.sql.types.IntegerType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, outSchema)
-        .orderBy(col("tag"), col("q_id"), col("rn"))
+        flag("z_refreshed", changed > 0 && parts >= 1)))
+        .toDF(s).orderBy(col("tag"), col("q_id"), col("rn"))
     }),
 
     // STREAMING INDEX PROBE (round-11 verdict #8 — the serving side of the
@@ -1131,28 +1103,16 @@ object StreamOps extends OpModule {
             q.lastProgress.stateOperators.isEmpty
         } finally q.stop()
       }
-      val res = s.read.parquet(out)
+      // 10 queries x the probe's default top 5
+      val res = Local(s.read.parquet(out)
         .select(lit("t").as("tag"), col("q_id"), col("n_id"),
-                col("score_e4"), col("rn")).collect().toSeq
+                col("score_e4"), col("rn")), 10 * 5)
       def flag(tagName: String, v: Boolean) = org.apache.spark.sql.Row(
         tagName, -1L, -1L, if (v) 1 else 0, 0)
-      val rows = res ++ Seq(
+      (res ++ Seq(
         flag("z_batches", nBatches.get() >= 2),
-        flag("z_stateless", stateless))
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("tag",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("q_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("score_e4",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("rn",
-          org.apache.spark.sql.types.IntegerType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, outSchema)
-        .orderBy(col("tag"), col("q_id"), col("rn"))
+        flag("z_stateless", stateless)))
+        .toDF(s).orderBy(col("tag"), col("q_id"), col("rn"))
     }),
 
     // STREAMING LATE-INTERACTION SERVING — s_ann_probe's multi-vector
@@ -1216,28 +1176,16 @@ object StreamOps extends OpModule {
             q.lastProgress.stateOperators.isEmpty
         } finally q.stop()
       }
-      val res = s.read.parquet(out)
+      // 2 multi-vector queries x the probe's default top 5
+      val res = Local(s.read.parquet(out)
         .select(lit("t").as("tag"), col("q_id"), col("d_id"),
-                col("maxsim_e6"), col("rn")).collect().toSeq
+                col("maxsim_e6"), col("rn")), 2 * 5)
       def flag(tagName: String, v: Boolean) = org.apache.spark.sql.Row(
         tagName, -1L, -1L, if (v) 1L else 0L, 0)
-      val rows = res ++ Seq(
+      (res ++ Seq(
         flag("z_batches", nBatches.get() >= 2),
-        flag("z_stateless", stateless))
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("tag",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("q_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("d_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("maxsim_e6",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("rn",
-          org.apache.spark.sql.types.IntegerType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, outSchema)
-        .orderBy(col("tag"), col("q_id"), col("rn"))
+        flag("z_stateless", stateless)))
+        .toDF(s).orderBy(col("tag"), col("q_id"), col("rn"))
     }),
 
     // STREAMING WAND SERVING — s_bm25_probe's multi-term twin: each
@@ -1298,24 +1246,15 @@ object StreamOps extends OpModule {
             q.lastProgress.stateOperators.isEmpty
         } finally q.stop()
       }
-      val res = s.read.parquet(out)
-        .select(col("m"), col("doc_id"), col("bm25_e4"))
-        .collect().toSeq
-      val rows = res ++ Seq(
+      // 3 batches x top 10
+      val res = Local(s.read.parquet(out)
+        .select(col("m"), col("doc_id"), col("bm25_e4")), 3 * 10)
+      (res ++ Seq(
         org.apache.spark.sql.Row(-1L, -1L,
           if (nBatches.get() >= 3) 1L else 0L), // z_batches
         org.apache.spark.sql.Row(-2L, -1L,
-          if (stateless) 1L else 0L)) // z_stateless
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("m",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("bm25_e4",
-          org.apache.spark.sql.types.LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, outSchema)
-        .orderBy(col("m"), col("bm25_e4").desc, col("doc_id"))
+          if (stateless) 1L else 0L))) // z_stateless
+        .toDF(s).orderBy(col("m"), col("bm25_e4").desc, col("doc_id"))
     }),
 
     // STREAMING SPARSE PROBE (round-12 verdict #7 — s_ann_probe's BM25
@@ -1377,26 +1316,15 @@ object StreamOps extends OpModule {
             q.lastProgress.stateOperators.isEmpty
         } finally q.stop()
       }
-      val res = s.read.parquet(out)
-        .select(col("m"), col("doc_id"), col("n_terms"), col("bm25_e4"))
-        .collect().toSeq
-      val rows = res ++ Seq(
+      // 3 batches x top 10
+      val res = Local(s.read.parquet(out)
+        .select(col("m"), col("doc_id"), col("n_terms"), col("bm25_e4")), 3 * 10)
+      (res ++ Seq(
         org.apache.spark.sql.Row(-1L, -1L,
           if (nBatches.get() >= 3) 1L else 0L, 0L), // z_batches
         org.apache.spark.sql.Row(-2L, -1L,
-          if (stateless) 1L else 0L, 0L)) // z_stateless
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("m",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_terms",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("bm25_e4",
-          org.apache.spark.sql.types.LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, outSchema)
-        .orderBy(col("m"), col("bm25_e4").desc, col("doc_id"))
+          if (stateless) 1L else 0L, 0L))) // z_stateless
+        .toDF(s).orderBy(col("m"), col("bm25_e4").desc, col("doc_id"))
     }),
 
     // Exactly-once file sink: run the same checkpointed query twice (second
@@ -1858,22 +1786,13 @@ object StreamOps extends OpModule {
       val c2 = relayCount()
       val incremental = c1 == base.where(col("k") % 2 === 0).count() &&
         c2 - c1 == base.where(col("k") % 2 === 1).count()
-      val agg = s.read.format("graft.sources.StoreSink").option("path", relay)
+      val agg = Local(s.read.format("graft.sources.StoreSink").option("path", relay)
         .load()
         .groupBy(col("grp"))
-        .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-        .collect()
-      val rows = agg.toSeq :+ org.apache.spark.sql.Row(
-        "z_incremental_resume", if (incremental) 1L else 0L, 0L)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("grp",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sum_cents",
-          org.apache.spark.sql.types.LongType)))
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+        .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+      (agg ++ Seq(org.apache.spark.sql.Row(
+        "z_incremental_resume", if (incremental) 1L else 0L, 0L)))
+        .toDF(s).orderBy(col("grp"))
     }),
 
     // PACED BACKFILL (admission control on the store tail — the
@@ -1915,21 +1834,13 @@ object StreamOps extends OpModule {
       val wins = graft.sources.StoreSink.tailPlans.asScala.toSeq
         .drop(mark).filter(w => w._1 != w._2).distinct
       val paced = wins == Seq((0, 3), (3, 6), (6, 8))
-      val agg = s.read.format("graft.sources.StoreSink").option("path", relay)
+      val agg = Local(s.read.format("graft.sources.StoreSink").option("path", relay)
         .load()
         .groupBy(col("grp"))
-        .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents"))
-        .collect()
-      val rows = agg.toSeq :+ org.apache.spark.sql.Row(
-        "z_paced_windows", if (paced) 1L else 0L, 0L)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("grp",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sum_cents",
-          org.apache.spark.sql.types.LongType)))
-      s.createDataFrame(rows.asJava, schema).orderBy(col("grp"))
+        .agg(count(lit(1)).as("n"), sum(col("amt_cents")).as("sum_cents")), 16)
+      (agg ++ Seq(org.apache.spark.sql.Row(
+        "z_paced_windows", if (paced) 1L else 0L, 0L)))
+        .toDF(s).orderBy(col("grp"))
     }),
 
     "s_topk" -> ((s, d) => {

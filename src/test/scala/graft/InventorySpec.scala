@@ -90,4 +90,32 @@ class InventorySpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"process-global observation slots: ${offenders.mkString("; ")}")
   }
+
+  test("frames are built from Java lists only in Local") {
+    // a collected frame handed back as a local relation goes through
+    // graft.Local, which bounds the collect and keeps the frame's schema;
+    // the argument list is scanned to its closing paren, across lines
+    val javaList = Seq("asJava", "Arrays.asList", "java.util.ArrayList")
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      for {
+        p <- walk.iterator().asScala.toSeq
+        if p.toString.endsWith(".scala") && p.getFileName.toString != "Local.scala"
+        text = java.nio.file.Files.readString(p)
+        at <- "createDataFrame\\(".r.findAllMatchIn(text).map(_.end).toSeq
+        args = {
+          var depth = 1; var i = at
+          while (i < text.length && depth > 0) {
+            if (text(i) == '(') depth += 1 else if (text(i) == ')') depth -= 1
+            i += 1
+          }
+          text.substring(at, i)
+        }
+        if javaList.exists(args.contains)
+      } yield s"$p:${text.substring(0, at).count(_ == '\n') + 1}"
+    } finally walk.close()
+    assert(offenders.isEmpty,
+      s"createDataFrame over a Java list outside Local: ${offenders.mkString("; ")}")
+  }
 }

@@ -23,6 +23,9 @@ trait SparkSpec extends AnyFunSuite {
         plans.add(qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    // a query that finished just before the capture may still have its
+    // end event queued; drain first so only `body`'s queries are captured
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
     spark.listenerManager.register(listener)
     val out = try {
       val r = body

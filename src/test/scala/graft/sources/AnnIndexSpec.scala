@@ -96,6 +96,22 @@ class AnnIndexSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       "probe must not rescan the corpus store")
   }
 
+  test("a probe takes as many queries as its broadcast join does: 5000 " +
+       "queries x nprobe 2 collect 10000 (query, cell) pairs") {
+    val corpus = freshDir("many_q_corpus")
+    val idx = freshDir("many_q_idx")
+    seedCorpusStore(corpus, clusteredCorpus)
+    AnnIndex.buildFromStore(spark, corpus, idx)
+    val q = spark.range(5000).select(col("id").as("vec_id"),
+        array(lit(1.0f), (col("id") / 5000.0).cast("float"), lit(0.0f),
+          lit(0.0f)).as("embedding"))
+      .withColumn("nrm", sqrt(expr("graft_float_dot(embedding, embedding)")))
+    val got = AnnIndex.probe(spark, q, idx, nprobe = 2, topk = 3)
+      .groupBy(col("q_id")).count().collect()
+    assert(got.length == 5000 && got.forall(_.getLong(1) == 3),
+      s"every query ranks topk = 3: ${got.take(3).toSeq}")
+  }
+
   test("refresh == reassignment against the frozen codebook, and only " +
        "touched posting lists rewrite") {
     val corpus = freshDir("refresh_corpus")
